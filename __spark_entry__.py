@@ -5718,7 +5718,9 @@ r{_t} AS (
     # HITS hubs/authorities: identical max-normalized half-steps as
     # chained CTEs — exact DECIMAL(38,12) sums of 9-dp addends, exact
     # decimal max, one IEEE divide + round(9) per normalize (the
-    # emb_top_pc lockstep applied to the cc_pagerank CTE pattern)
+    # emb_top_pc lockstep applied to the cc_pagerank CTE pattern).  Each
+    # a{t}/h{t} is read twice, so the iteration CTEs are MATERIALIZED:
+    # DuckDB 1.0 inlines CTEs, and the inlined plan doubles per step.
     _hits_parts = [_lg_ctes + f""",
 edges AS (
   SELECT src_domain, dst_domain, CAST(count(*) AS DOUBLE) AS w
@@ -5728,30 +5730,30 @@ nodes AS (
   SELECT DISTINCT lower(regexp_extract(url, '^https://([^/:?#]+)', 1)) AS domain
   FROM read_parquet('{corpus}')
 ),
-h0 AS (SELECT domain, CAST(1.0 AS DOUBLE) AS h FROM nodes)"""]
+h0 AS MATERIALIZED (SELECT domain, CAST(1.0 AS DOUBLE) AS h FROM nodes)"""]
     for _t in range(1, HITS_ITERS + 1):
-        _hits_parts.append(f"""ap{_t} AS (
+        _hits_parts.append(f"""ap{_t} AS MATERIALIZED (
   SELECT e.dst_domain AS domain,
          sum(CAST(round(e.w * h.h, 9) AS DECIMAL(38,12))) AS ap
   FROM edges e JOIN h{_t - 1} h ON h.domain = e.src_domain
   GROUP BY 1
 ),
-am{_t} AS (SELECT max(ap) AS am FROM ap{_t}),
-a{_t} AS (
+am{_t} AS MATERIALIZED (SELECT max(ap) AS am FROM ap{_t}),
+a{_t} AS MATERIALIZED (
   SELECT n.domain,
          round(CAST(coalesce(ap.ap, CAST(0 AS DECIMAL(38,12)))
                     AS DOUBLE) / CAST(am{_t}.am AS DOUBLE), 9) AS a
   FROM nodes n CROSS JOIN am{_t}
        LEFT JOIN ap{_t} ap ON n.domain = ap.domain
 ),
-hp{_t} AS (
+hp{_t} AS MATERIALIZED (
   SELECT e.src_domain AS domain,
          sum(CAST(round(e.w * a.a, 9) AS DECIMAL(38,12))) AS hp
   FROM edges e JOIN a{_t} a ON a.domain = e.dst_domain
   GROUP BY 1
 ),
-hm{_t} AS (SELECT max(hp) AS hm FROM hp{_t}),
-h{_t} AS (
+hm{_t} AS MATERIALIZED (SELECT max(hp) AS hm FROM hp{_t}),
+h{_t} AS MATERIALIZED (
   SELECT n.domain,
          round(CAST(coalesce(hp.hp, CAST(0 AS DECIMAL(38,12)))
                     AS DOUBLE) / CAST(hm{_t}.hm AS DOUBLE), 9) AS h

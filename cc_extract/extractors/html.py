@@ -6,12 +6,14 @@ text [R: functions/simple/main.py ⚠] — upgraded per the north rule with
 boilerplate-strip heuristics (tag-blacklist pruning, link-density and
 text-density block filtering) [D: BASELINE.json north_star].
 
-Implementation: a streaming two-pass walker over stdlib ``html.parser``
-events (no third-party DOM libs exist in this environment, SURVEY.md §0.3):
+Implementation: two passes, no DOM library (none exists in this
+environment, SURVEY.md §0.3):
 
-pass 1 — event stream → list of *blocks*, where a block is the visible text
-between block-level tag boundaries, annotated with
-``(text, anchor_chars, n_tags)``;
+pass 1 — ``_scan_blocks``, one hand-written streaming scanner, turns the
+decoded document into a list of *blocks*, where a block is the visible
+text between block-level tag boundaries, annotated with
+``(text, anchor_chars, n_tags)`` and, on request, its ``[start, end)``
+span in the document;
 pass 2 — drop a block iff::
 
     link_density = anchor_chars / total_chars          > 0.5
@@ -25,7 +27,6 @@ UDF process multi-MB pages without quadratic blowup.
 from __future__ import annotations
 
 import re
-from html.parser import HTMLParser
 
 from .charset import decode_bytes
 from .normalize import normalize_text
@@ -52,105 +53,20 @@ _META_CHARSET = re.compile(
 )
 
 
-class _BlockState:
-    """Shared pass-1 state machine: tag/data events ->
-    [(block_text, anchor_chars, n_tags)].  Fed either by the fast scanner
-    below (production) or by stdlib html.parser (the differential-test
-    reference, _BlockWalkerStdlib)."""
-
-    def __init__(self) -> None:
-        self.blocks: list[tuple[str, int, int]] = []
-        self._parts: list[str] = []
-        self._anchor_chars = 0
-        self._n_tags = 0
-        self._skip_depth = 0
-        self._anchor_depth = 0
-
-    def _flush(self) -> None:
-        text = _WS.sub(" ", "".join(self._parts)).strip()
-        if text:
-            self.blocks.append((text, self._anchor_chars, self._n_tags))
-        self._parts = []
-        self._anchor_chars = 0
-        self._n_tags = 0
-
-    def start(self, tag: str) -> None:
-        if tag in BLACKLIST_TAGS:
-            self._skip_depth += 1
-            return
-        if self._skip_depth:
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-        else:
-            self._n_tags += 1
-        if tag == "a":
-            self._anchor_depth += 1
-
-    def end(self, tag: str) -> None:
-        if tag in BLACKLIST_TAGS:
-            if self._skip_depth:
-                self._skip_depth -= 1
-            return
-        if self._skip_depth:
-            return
-        if tag == "a" and self._anchor_depth:
-            self._anchor_depth -= 1
-        if tag in BLOCK_TAGS:
-            self._flush()
-
-    def data(self, data: str) -> None:
-        if self._skip_depth or not data:
-            return
-        self._parts.append(data)
-        if self._anchor_depth:
-            self._anchor_chars += len(_WS.sub(" ", data).strip())
-
-    def data_at(self, data: str, start: int, end: int) -> None:
-        """Position-aware data event from the fast scanner: *start*/*end*
-        are the segment's [start, end) char offsets in the decoded
-        document (pre-``unescape`` — charrefs live wholly inside one
-        segment, so slicing at segment boundaries never bisects one).
-        The base walker discards positions; _BlockStateSpans records
-        them per block."""
-        self.data(data)
-
-    def finish(self) -> None:
-        self._flush()
-
-
-class _BlockWalkerStdlib(HTMLParser):
-    """Reference walker on stdlib html.parser events — kept as the
-    differential-test twin of the fast scanner (test_html_fast_scanner_*)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.state = _BlockState()
-
-    def handle_starttag(self, tag, attrs):
-        self.state.start(tag)
-
-    def handle_endtag(self, tag):
-        self.state.end(tag)
-
-    def handle_data(self, data):
-        self.state.data(data)
-
-
-# Fast scanner: emits the SAME (lowercased start/end tag, charref-decoded
-# data) events the stdlib parser produces for the walker above, without
-# html.parser's per-char position bookkeeping (which was ~47% of total
-# extraction CPU).  Attributes are skipped quote-aware (a '>' inside a
-# quoted attribute value does not end the tag); <script>/<style> bodies
-# are raw text until the matching close tag, exactly like html.parser's
-# CDATA_CONTENT_ELEMENTS.  Verified block-identical to the stdlib walker
-# on every corpus HTML doc + structured random markup (tests/test_
-# extractors.py, tests/test_properties.py).  One documented divergence on
-# GARBAGE markup only: a tag that never terminates or has a non-alpha
-# name falls back to text here (the WHATWG-shaped choice), where stdlib's
-# tolerant tagfind invents names like `b'<`; real extraction output is
-# unaffected (both routes strip such fragments as low-density noise) and
-# the never-raises fuzz invariants cover the tag-soup space.
+# The scanner reads the same (lowercased start/end tag, charref-decoded
+# data) events stdlib html.parser would report, without html.parser's
+# per-char position bookkeeping (which was ~47% of total extraction CPU).
+# Attributes are skipped quote-aware (a '>' inside a quoted attribute
+# value does not end the tag); <script>/<style> bodies are raw text until
+# the matching close tag, exactly like html.parser's
+# CDATA_CONTENT_ELEMENTS.  tests/html_reference.py rebuilds blocks and
+# spans from html.parser events; the differential tests hold the two
+# equal.  One documented divergence on GARBAGE markup only: a tag that
+# never terminates or has a non-alpha name falls back to text here (the
+# WHATWG-shaped choice), where stdlib's tolerant tagfind invents names
+# like `b'<`; real extraction output is unaffected (both routes strip
+# such fragments as low-density noise) and the never-raises fuzz
+# invariants cover the tag-soup space.
 
 _TAGNAME_RX = re.compile(r"[a-zA-Z][a-zA-Z0-9.:_\-]*")
 _ATTR_CHUNK_RX = re.compile(r"""[^>"']*""")
@@ -175,6 +91,8 @@ def _skip_attrs(doc: str, pos: int, n: int) -> int:
             return -1
         pos = end + 1
     return -1
+
+
 _RAWTEXT_CLOSE = {
     "script": re.compile(r"</script", re.IGNORECASE),
     "style": re.compile(r"</style", re.IGNORECASE),
@@ -185,97 +103,27 @@ _RAWTEXT_CLOSE = {
 _SELFCLOSE_VETO = re.compile(r"""=\s*[^\s"'>]*/$""")
 
 
-def _scan_html(doc: str, st: _BlockState) -> None:
-    from html import unescape
-
-    n = len(doc)
-    pos = 0
-
-    def _eof_flush(start: int) -> int:
-        # html.parser's close() flushes unterminated markup as
-        # (charref-decoded) data; mirror that exactly
-        seg = doc[start:]
-        st.data_at(unescape(seg) if "&" in seg else seg, start, n)
-        return n
-
-    while pos < n:
-        lt = doc.find("<", pos)
-        if lt == -1:
-            seg = doc[pos:]
-            st.data_at(unescape(seg) if "&" in seg else seg, pos, n)
-            break
-        if lt > pos:
-            seg = doc[pos:lt]
-            st.data_at(unescape(seg) if "&" in seg else seg, pos, lt)
-        nxt = doc[lt + 1 : lt + 2]
-        if nxt == "!":
-            if doc.startswith("<!--", lt):
-                end = doc.find("-->", lt + 4)
-                pos = _eof_flush(lt) if end == -1 else end + 3
-            else:
-                end = doc.find(">", lt + 2)
-                pos = _eof_flush(lt) if end == -1 else end + 1
-            continue
-        if nxt == "?":
-            end = doc.find(">", lt + 2)
-            pos = _eof_flush(lt) if end == -1 else end + 1
-            continue
-        if nxt == "/":
-            m = _ENDTAG_RX.match(doc, lt)
-            if m:
-                st.end(m.group(1).lower())
-                pos = m.end()
-            else:  # malformed </...: skip to '>' like html.parser's bailout
-                end = doc.find(">", lt + 2)
-                pos = _eof_flush(lt) if end == -1 else end + 1
-            continue
-        m = _TAGNAME_RX.match(doc, lt + 1)
-        if not m:
-            # literal '<' in text
-            st.data_at("<", lt, lt + 1)
-            pos = lt + 1
-            continue
-        tag = m.group(0).lower()
-        tag_end = _skip_attrs(doc, m.end(), n)
-        if tag_end == -1:
-            pos = _eof_flush(lt)  # unterminated tag at EOF
-            continue
-        pos = tag_end
-        self_closing = doc[tag_end - 2 : tag_end - 1] == "/" and not (
-            _SELFCLOSE_VETO.search(doc, m.end(), tag_end - 1)
-        )
-        st.start(tag)
-        if self_closing:
-            st.end(tag)
-        elif tag in ("script", "style"):
-            # raw-text element: no tags/charrefs inside; content is
-            # blacklisted anyway, so only the cursor moves
-            mclose = _RAWTEXT_CLOSE[tag].search(doc, pos)
-            if mclose is None:
-                pos = n
-            else:
-                gt = doc.find(">", mclose.start())
-                pos = n if gt == -1 else gt + 1
-                st.end(tag)
-    st.finish()
-
-
 def _scan_blocks(
     doc: str, want_spans: bool = False
 ) -> tuple[list[tuple[str, int, int]], list[tuple[int, int]]]:
-    """Inlined production twin of ``_scan_html(doc, _BlockState[Spans]())``.
+    """Scan *doc* into blocks ``[(text, anchor_chars, n_tags)]``.
 
-    Same event order, same block tuples, same span pairs — pinned
-    differentially against the event-driven walker over the corpus and
-    structured random markup (tests/test_properties.py::
-    test_scan_blocks_differential, tests/test_extractors.py::
-    test_scan_blocks_matches_event_scanner).  The event walker spent
-    ~40% of its time on per-event method dispatch (253k data + 372k
-    tag calls per 4k-doc batch); here the state machine lives in local
-    variables and the common no-quote attribute tail is two C-level
-    ``str.find`` probes instead of the chunk-regex loop.  ``_scan_html``
-    stays as the generic event scanner (the stdlib differential twin
-    and any external _BlockState feeders use it unchanged).
+    With *want_spans*, also record per block the ``[start, end)`` char
+    span (pre-``unescape`` offsets — a charref lives wholly inside one
+    data segment) covering every visible (non-whitespace) data segment
+    that contributed to it.  Spans are strictly increasing and
+    non-overlapping, and each is self-contained: a block tag always
+    flushes, so none occurs inside a span (the rescan test in
+    tests/test_html_spans.py).
+
+    Blocks and spans are pinned against the stdlib html.parser reference
+    in tests/html_reference.py over the corpus, hand-written and
+    per-tag edge cases and random markup (test_extractors.py::
+    test_html_fast_scanner_*, test_properties.py::
+    test_scan_blocks_differential).  The state machine lives in local
+    variables (per-event method dispatch cost ~40% of an event-driven
+    walker), and the common no-quote attribute tail is two C-level
+    ``str.find`` probes instead of the chunk-regex loop.
 
     Returns ``(blocks, spans)``; ``spans`` is ``[]`` unless *want_spans*.
     """
@@ -488,44 +336,6 @@ def extract_html(payload: bytes) -> str:
 
 # ------------------------------------------------- span provenance (X1+)
 
-class _BlockStateSpans(_BlockState):
-    """Fast-scanner state that additionally records, per emitted block,
-    the [start, end) char span in the DECODED document covering every
-    visible (non-whitespace) data segment that contributed to the block.
-
-    Spans are strictly increasing and non-overlapping: data events
-    arrive in document order, and a block-tag event always flushes
-    before the next block accumulates — which is also why a span is
-    self-contained (no block boundary can occur inside one; pinned by
-    the rescan test in tests/test_html_spans.py).  Only the fast
-    scanner feeds this class; the stdlib differential twin has no
-    positions and keeps using the base ``data`` path."""
-
-    def __init__(self) -> None:
-        super().__init__()
-        self.spans: list[tuple[int, int]] = []
-        self._lo: int | None = None
-        self._hi: int | None = None
-
-    def data_at(self, data: str, start: int, end: int) -> None:
-        if self._skip_depth or not data:
-            return
-        super().data(data)
-        if data.strip():
-            if self._lo is None:
-                self._lo = start
-            self._hi = end
-
-    def _flush(self) -> None:
-        n_before = len(self.blocks)
-        super()._flush()
-        if len(self.blocks) > n_before:
-            # non-empty block text implies >=1 non-ws segment, so _lo is set
-            self.spans.append((self._lo, self._hi))
-        self._lo = None
-        self._hi = None
-
-
 def extract_html_blocks(payload: bytes) -> list[dict]:
     """X1 with span provenance — the "spans" half of the north rule's
     per-document match [D: BASELINE.json north_rule]: the same decode ->
@@ -737,10 +547,6 @@ def html_links(payload: bytes, url: str | None = None) -> list[str] | None:
     return out
 
 
-ROBOTS_COLS = ("noindex", "nofollow", "n_robots_metas", "n_anchors",
-               "n_nofollow_anchors")
-
-
 def html_robots(payload: bytes, url: str | None = None) -> dict | None:
     """Page-level robots directives — the in-page half of the Robots
     Exclusion Protocol that ``cc_robots_filter`` (RFC 9309 robots.txt)
@@ -818,8 +624,6 @@ def html_robots(payload: bytes, url: str | None = None) -> dict | None:
 _SCRIPT_RX = re.compile(r"<script\b([^>]*)>(.*?)</script\s*>",
                         re.IGNORECASE | re.DOTALL)
 
-JSONLD_COLS = ("ld_blocks", "ld_valid", "ld_types", "ld_headline",
-               "ld_breadcrumbs")
 
 
 def html_jsonld(payload: bytes, url: str | None = None) -> dict | None:
@@ -912,8 +716,6 @@ _CAPTION_RX = re.compile(r"<caption\b[^>]*>(.*?)</caption\s*>",
                          re.IGNORECASE | re.DOTALL)
 _ANYTAG_RX = re.compile(r"<[^>]*>")
 
-TABLE_COLS = ("table_idx", "caption", "row_idx", "col_idx", "is_header",
-              "cell")
 
 
 def html_tables(payload: bytes, url: str | None = None) -> list[dict] | None:

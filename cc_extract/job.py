@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from . import manifest as mf
-from .tableio import write_partitioned
+from .tableio import local_files_bytes, write_partitioned
 
 DEFAULT_BUCKETS = 64
 DEFAULT_SALT = 8
@@ -131,16 +131,12 @@ def pack_scan(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     try:
-        from urllib.parse import urlparse
-
         files = df.inputFiles()
         if not files or len(files) <= cores:
             return df
-        total = 0
-        for f in files:
-            if not f.startswith("file:"):
-                return df
-            total += os.path.getsize(urlparse(f).path)
+        total = local_files_bytes(files)
+        if total is None:
+            return df
         target = max(cores, -(-total // PACK_SCAN_BYTES))
         if target >= len(files):
             return df
@@ -149,314 +145,146 @@ def pack_scan(df: DataFrame) -> DataFrame:
         return df
 
 
-SPAN_COLS = ("n_blocks", "n_kept", "kept_chars", "span_chars",
-             "doc_chars", "first_kept_start", "last_kept_end")
+def _html_rows_df(docs: DataFrame, row_fn, ddl: str, rank,
+                  order_by: tuple[str, ...]) -> DataFrame:
+    """The one body of the ``html_*_df`` operators over a corpus frame
+    (url, warc_ts, html): per html-routed document, the rows of
+    ``row_fn(payload, url)`` for the newest crawl of each url.
+
+    Scale shape: ONE payload-bearing mapInPandas pass (after pack_scan)
+    REDUCES every page to its output rows — ints, offsets, short
+    strings — before the only shuffle, the url-hash keep-newest window;
+    payloads never travel.
+
+    - *row_fn* returns None (no rows: not html), one dict, or a list of
+      dicts keyed by the *ddl* columns; the oracle side
+      (cc_extract.oracle_data) builds its table from the same function.
+    - *ddl* declares the row columns, after the implicit
+      ``url string, warc_ts timestamp``.
+    - *rank* keeps the newest crawl: ``F.row_number`` for one row per
+      document, ``F.dense_rank`` for many (all rows of the newest crawl
+      share its ts).
+    - *order_by* is the global sort; ``()`` skips it.
+    """
+    schema = "url string, warc_ts timestamp, " + ddl
+    cols = [c.split()[0] for c in schema.split(",")]
+    fields = cols[2:]
+
+    def batches(it):
+        for pdf in it:
+            rows: dict[str, list] = {c: [] for c in cols}
+            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"],
+                                        pdf["html"]):
+                r = row_fn(payload, url)
+                if r is None:
+                    continue
+                for d in ([r] if isinstance(r, dict) else r):
+                    rows["url"].append(url)
+                    rows["warc_ts"].append(ts)
+                    for k in fields:
+                        rows[k].append(d[k])
+            yield pd.DataFrame(rows, columns=cols)
+
+    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
+    out = (
+        pack_scan(docs).select("url", "warc_ts", "html")
+        .mapInPandas(batches, schema=schema)
+        .withColumn("_rk", rank().over(w))
+        .filter(F.col("_rk") == 1)
+        .select("url", *fields)
+    )
+    return out.orderBy(*order_by) if order_by else out
 
 
 def html_spans_df(docs: DataFrame) -> DataFrame:
-    """X1 span provenance over a corpus frame (url, warc_ts, html) — the
-    "spans" half of the north rule's per-document match: per html-routed
-    document (newest crawl per url), where in the decoded page the kept
-    main-content blocks live.  Row semantics are the shared
-    cc_extract.extractors.html.html_span_stats (sniff + depth-1 gzip
-    unwrap + position-aware scan; invariants pinned in
-    tests/test_html_spans.py).  Scale shape: ONE payload-bearing
-    mapInPandas pass REDUCES every page to a 7-int row before the only
-    shuffle (url-hash window dedup) — offsets travel, payloads never
-    do."""
+    """X1 span provenance — the "spans" half of the north rule's
+    per-document match: where in the decoded page the kept main-content
+    blocks live (extractors.html.html_span_stats; invariants pinned in
+    tests/test_html_spans.py)."""
     from .extractors.html import html_span_stats
 
-    schema = ("url string, warc_ts timestamp, n_blocks int, n_kept int, "
-              "kept_chars long, span_chars long, doc_chars long, "
-              "first_kept_start long, last_kept_end long")
-    cols = ("url", "warc_ts", *SPAN_COLS)
-
-    def batches(it):
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"],
-                                        pdf["html"]):
-                s = html_span_stats(payload, url)
-                if s is None:
-                    continue
-                rows["url"].append(url)
-                rows["warc_ts"].append(ts)
-                for k in SPAN_COLS:
-                    rows[k].append(s[k])
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    spans = pack_scan(docs).select("url", "warc_ts", "html").mapInPandas(
-        batches, schema=schema
-    )
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (
-        spans.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("url", *SPAN_COLS)
-        .orderBy("url")
-    )
+    return _html_rows_df(
+        docs, html_span_stats,
+        "n_blocks int, n_kept int, kept_chars long, span_chars long, "
+        "doc_chars long, first_kept_start long, last_kept_end long",
+        F.row_number, ("url",))
 
 
 def html_meta_df(docs: DataFrame) -> DataFrame:
-    """Head-metadata extraction over a corpus frame — per html-routed
-    document (newest crawl per url): title, meta description, og:title,
-    canonical link, html lang.  Row semantics are the shared
-    cc_extract.extractors.html.html_meta (first-occurrence-wins spec;
-    see its docstring); same scale shape as html_spans_df — the ONE
-    payload-bearing mapInPandas pass reduces each page to five short
-    strings before the only shuffle (url-hash keep-newest window)."""
-    from .extractors.html import META_COLS, html_meta
+    """Head metadata: title, meta description, og:title, canonical
+    link, html lang (extractors.html.html_meta, first occurrence
+    wins)."""
+    from .extractors.html import html_meta
 
-    schema = ("url string, warc_ts timestamp, title string, "
-              "meta_description string, og_title string, "
-              "canonical string, lang string")
-    cols = ("url", "warc_ts", *META_COLS)
-
-    def batches(it):
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"],
-                                        pdf["html"]):
-                m = html_meta(payload, url)
-                if m is None:
-                    continue
-                rows["url"].append(url)
-                rows["warc_ts"].append(ts)
-                for k in META_COLS:
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    meta = pack_scan(docs).select("url", "warc_ts", "html").mapInPandas(
-        batches, schema=schema
-    )
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (
-        meta.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("url", *META_COLS)
-        .orderBy("url")
-    )
+    return _html_rows_df(
+        docs, html_meta,
+        "title string, meta_description string, og_title string, "
+        "canonical string, lang string",
+        F.row_number, ("url",))
 
 
 def html_robots_df(docs: DataFrame) -> DataFrame:
-    """Page-level robots directives over a corpus frame — per
-    html-routed document (newest crawl per url): meta-robots
-    noindex/nofollow flags, robots-meta count, anchor count and
-    rel=nofollow anchor count.  Row semantics are the shared
-    cc_extract.extractors.html.html_robots (restrictive-union spec;
-    see its docstring); same scale shape as html_meta_df — the ONE
-    payload-bearing mapInPandas pass reduces each page to five scalars
-    before the only shuffle (url-hash keep-newest window)."""
-    from .extractors.html import ROBOTS_COLS, html_robots
+    """Page-level robots directives: meta-robots noindex/nofollow flags,
+    robots-meta count, anchor count and rel=nofollow anchor count
+    (extractors.html.html_robots, restrictive union)."""
+    from .extractors.html import html_robots
 
-    schema = ("url string, warc_ts timestamp, noindex boolean, "
-              "nofollow boolean, n_robots_metas int, n_anchors int, "
-              "n_nofollow_anchors int")
-    cols = ("url", "warc_ts", *ROBOTS_COLS)
-
-    def batches(it):
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"],
-                                        pdf["html"]):
-                m = html_robots(payload, url)
-                if m is None:
-                    continue
-                rows["url"].append(url)
-                rows["warc_ts"].append(ts)
-                for k in ROBOTS_COLS:
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    rb = pack_scan(docs).select("url", "warc_ts", "html").mapInPandas(
-        batches, schema=schema
-    )
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (
-        rb.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("url", *ROBOTS_COLS)
-        .orderBy("url")
-    )
+    return _html_rows_df(
+        docs, html_robots,
+        "noindex boolean, nofollow boolean, n_robots_metas int, "
+        "n_anchors int, n_nofollow_anchors int",
+        F.row_number, ("url",))
 
 
 def html_jsonld_df(docs: DataFrame) -> DataFrame:
-    """Schema.org JSON-LD extraction over a corpus frame — per
-    html-routed document (newest crawl per url): block/valid counts,
-    document-order entity types, first Article headline, breadcrumb
-    size.  Row semantics are the shared
-    cc_extract.extractors.html.html_jsonld (see its docstring); same
-    scale shape as html_meta_df — the ONE payload-bearing mapInPandas
-    pass reduces each page to five small values before the only shuffle
-    (url-hash keep-newest window)."""
-    from .extractors.html import JSONLD_COLS, html_jsonld
+    """Schema.org JSON-LD: block/valid counts, document-order entity
+    types, first Article headline, breadcrumb size
+    (extractors.html.html_jsonld)."""
+    from .extractors.html import html_jsonld
 
-    schema = ("url string, warc_ts timestamp, ld_blocks int, "
-              "ld_valid int, ld_types string, ld_headline string, "
-              "ld_breadcrumbs int")
-    cols = ("url", "warc_ts", *JSONLD_COLS)
-
-    def batches(it):
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"],
-                                        pdf["html"]):
-                m = html_jsonld(payload, url)
-                if m is None:
-                    continue
-                rows["url"].append(url)
-                rows["warc_ts"].append(ts)
-                for k in JSONLD_COLS:
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    ld = pack_scan(docs).select("url", "warc_ts", "html").mapInPandas(
-        batches, schema=schema
-    )
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (
-        ld.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("url", *JSONLD_COLS)
-        .orderBy("url")
-    )
+    return _html_rows_df(
+        docs, html_jsonld,
+        "ld_blocks int, ld_valid int, ld_types string, "
+        "ld_headline string, ld_breadcrumbs int",
+        F.row_number, ("url",))
 
 
 def html_blocks_df(docs: DataFrame, ordered: bool = True) -> DataFrame:
-    """Per-BLOCK span rows over a corpus frame — the literal per-block
-    "spans match" surface for the newest crawl of every html-routed url:
-    (url, block_idx, span_start, span_end, kept, n_chars, text_md5).
-    Same scale shape as html_spans_df: the one payload-bearing
-    mapInPandas pass reduces each page to O(blocks) fixed-size rows
-    (offsets + a 32-hex pin), so the url-hash dedup window shuffles
-    block rows, never payloads.  Row semantics shared with
-    oracle_data.html_blocks_table via extractors.html.html_block_rows."""
+    """Per-BLOCK span rows — the literal per-block "spans match"
+    surface: (url, block_idx, span_start, span_end, kept, n_chars,
+    text_md5) (extractors.html.html_block_rows).  Aggregate consumers
+    (cc_site_templates) pass ``ordered=False``: a range shuffle below a
+    groupBy is pure cost."""
     from .extractors.html import html_block_rows
 
-    schema = ("url string, warc_ts timestamp, block_idx int, "
-              "span_start long, span_end long, kept int, n_chars long, "
-              "text_md5 string")
-    bcols = ("block_idx", "span_start", "span_end", "kept", "n_chars",
-             "text_md5")
-    cols = ("url", "warc_ts", *bcols)
-
-    def batches(it):
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"],
-                                        pdf["html"]):
-                brs = html_block_rows(payload, url)
-                if brs is None:
-                    continue
-                for b in brs:
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    for k in bcols:
-                        rows[k].append(b[k])
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    blocks = pack_scan(docs).select("url", "warc_ts", "html").mapInPandas(
-        batches, schema=schema
-    )
-    # keep-newest per url: rank crawls by ts (dense — all blocks of the
-    # newest crawl share its ts), then keep rank 1
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    out = (
-        blocks.withColumn("_rk", F.dense_rank().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("url", *bcols)
-    )
-    # aggregate consumers (cc_site_templates) skip the global sort — a
-    # range shuffle below a groupBy is pure cost
-    return out.orderBy("url", "block_idx") if ordered else out
+    return _html_rows_df(
+        docs, html_block_rows,
+        "block_idx int, span_start long, span_end long, kept int, "
+        "n_chars long, text_md5 string",
+        F.dense_rank, ("url", "block_idx") if ordered else ())
 
 
 def html_tables_df(docs: DataFrame) -> DataFrame:
-    """Structured table extraction over a corpus frame — per CELL of the
-    newest crawl of every html-routed url: (url, table_idx, caption,
-    row_idx, col_idx, is_header, cell).  Row semantics are the shared
-    cc_extract.extractors.html.html_tables (see its docstring); same
-    scale shape as html_blocks_df — the one payload-bearing mapInPandas
-    pass reduces each page to O(cells) short rows, so the url-hash
-    dedup window shuffles cell rows, never payloads."""
-    from .extractors.html import TABLE_COLS, html_tables
+    """Structured tables, one row per CELL: (url, table_idx, caption,
+    row_idx, col_idx, is_header, cell) (extractors.html.html_tables)."""
+    from .extractors.html import html_tables
 
-    schema = ("url string, warc_ts timestamp, table_idx int, "
-              "caption string, row_idx int, col_idx int, is_header int, "
-              "cell string")
-    cols = ("url", "warc_ts", *TABLE_COLS)
-
-    def batches(it):
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"],
-                                        pdf["html"]):
-                trs = html_tables(payload, url)
-                if not trs:
-                    continue
-                for t in trs:
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    for k in TABLE_COLS:
-                        rows[k].append(t[k])
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    cells = pack_scan(docs).select("url", "warc_ts", "html").mapInPandas(
-        batches, schema=schema
-    )
-    # keep-newest per url: dense rank — all cells of the newest crawl
-    # share its ts
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (
-        cells.withColumn("_rk", F.dense_rank().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("url", *TABLE_COLS)
-        .orderBy("url", "table_idx", "row_idx", "col_idx")
-    )
+    return _html_rows_df(
+        docs, html_tables,
+        "table_idx int, caption string, row_idx int, col_idx int, "
+        "is_header int, cell string",
+        F.dense_rank, ("url", "table_idx", "row_idx", "col_idx"))
 
 
 def html_headings_df(docs: DataFrame) -> DataFrame:
-    """Document-outline extraction over a corpus frame — per closed
-    h1-h6 heading of the newest crawl of every html-routed url:
-    (url, heading_idx, level, heading).  Row semantics are the shared
-    cc_extract.extractors.html.html_headings (see its docstring); same
-    scale shape as html_tables_df — the one payload-bearing mapInPandas
-    pass reduces each page to O(headings) short rows, so the url-hash
-    dedup window shuffles heading rows, never payloads."""
+    """Document outline, one row per closed h1-h6 heading:
+    (url, heading_idx, level, heading) (extractors.html.html_headings)."""
     from .extractors.html import html_headings
 
-    schema = ("url string, warc_ts timestamp, heading_idx int, "
-              "level int, heading string")
-    hcols = ("heading_idx", "level", "heading")
-    cols = ("url", "warc_ts", *hcols)
-
-    def batches(it):
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"],
-                                        pdf["html"]):
-                hs = html_headings(payload, url)
-                if not hs:
-                    continue
-                for h in hs:
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    for k in hcols:
-                        rows[k].append(h[k])
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    heads = pack_scan(docs).select("url", "warc_ts", "html").mapInPandas(
-        batches, schema=schema
-    )
-    # keep-newest per url: dense rank — all headings of the newest
-    # crawl share its ts
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (
-        heads.withColumn("_rk", F.dense_rank().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("url", *hcols)
-        .orderBy("url", "heading_idx")
-    )
+    return _html_rows_df(
+        docs, html_headings,
+        "heading_idx int, level int, heading string",
+        F.dense_rank, ("url", "heading_idx"))
 
 
 def snapshot_diff_df(docs: DataFrame, pivot_ts: str) -> DataFrame:

@@ -469,201 +469,125 @@ def robots_rules_table(seed: int | None = None) -> str:
     return path
 
 
-def html_spans_table(n_docs: int = 1200) -> str:
-    """Per-INPUT-ROW span-provenance stats for html-routed documents
+def _html_rows_table(name: str, n_docs: int, row_fn, fields) -> str:
+    """Per-INPUT-ROW rows of *row_fn* for html-routed documents
     (pre-dedup; the SQL side performs the keep-newest window itself).
 
-    The row semantics live in ONE shared function —
-    ``cc_extract.extractors.html.html_span_stats`` — called here per row
-    single-process and by the Spark ``mapInPandas`` batch fn in
-    ``_cc_html_spans``; only the relational layer (dedup + projection) is
+    The row semantics live in ONE shared function of
+    ``cc_extract.extractors.html``, called here per row single-process
+    and per element of the Spark batch by ``job._html_rows_df``; only
+    the relational layer (keep-newest dedup + projection) is
     independently expressed on each side, exactly the extraction_table
-    pattern."""
-    key = f"html_spans:{n_docs}"
+    pattern.  *row_fn* returns None (no rows), one dict or a list of
+    dicts; *fields* are the ``(name, pyarrow type)`` row columns written
+    after ``url`` and ``warc_ts``."""
+    key = f"{name}:{n_docs}"
     if key in _memo:
         return _memo[key]
     import pyarrow as pa
 
     from .corpusgen import gen_corpus
-    from .extractors.html import html_span_stats
 
-    names = ("url", "warc_ts", "n_blocks", "n_kept", "kept_chars",
-             "span_chars", "doc_chars", "first_kept_start", "last_kept_end")
-    cols: dict[str, list] = {c: [] for c in names}
+    schema = pa.schema([("url", pa.string()),
+                        ("warc_ts", pa.timestamp("us")), *fields])
+    cols: dict[str, list] = {c: [] for c in schema.names}
     for r in gen_corpus(n_docs):
-        s = html_span_stats(r["html"], r["url"])
-        if s is None:
+        out = row_fn(r["html"], r["url"])
+        if out is None:
             continue
-        cols["url"].append(r["url"])
-        cols["warc_ts"].append(r["warc_ts"])
-        for k, v in s.items():
-            cols[k].append(v)
-    table = pa.table({
-        "url": pa.array(cols["url"], pa.string()),
-        "warc_ts": pa.array(cols["warc_ts"], pa.timestamp("us")),
-        "n_blocks": pa.array(cols["n_blocks"], pa.int32()),
-        "n_kept": pa.array(cols["n_kept"], pa.int32()),
-        "kept_chars": pa.array(cols["kept_chars"], pa.int64()),
-        "span_chars": pa.array(cols["span_chars"], pa.int64()),
-        "doc_chars": pa.array(cols["doc_chars"], pa.int64()),
-        "first_kept_start": pa.array(cols["first_kept_start"], pa.int64()),
-        "last_kept_end": pa.array(cols["last_kept_end"], pa.int64()),
-    })
-    path = os.path.join(_ORACLE_DIR, f"html_spans_{n_docs}.parquet")
-    _atomic_write_table(table, path)
+        for d in ([out] if isinstance(out, dict) else out):
+            cols["url"].append(r["url"])
+            cols["warc_ts"].append(r["warc_ts"])
+            for k in schema.names[2:]:
+                cols[k].append(d[k])
+    path = os.path.join(_ORACLE_DIR, f"{name}_{n_docs}.parquet")
+    _atomic_write_table(pa.Table.from_pydict(cols, schema=schema), path)
     _memo[key] = path
     return path
+
+
+def html_spans_table(n_docs: int = 1200) -> str:
+    """Span-provenance stats (extractors.html.html_span_stats)."""
+    import pyarrow as pa
+
+    from .extractors.html import html_span_stats
+
+    i32, i64 = pa.int32(), pa.int64()
+    return _html_rows_table("html_spans", n_docs, html_span_stats, [
+        ("n_blocks", i32), ("n_kept", i32), ("kept_chars", i64),
+        ("span_chars", i64), ("doc_chars", i64),
+        ("first_kept_start", i64), ("last_kept_end", i64)])
 
 
 def html_meta_table(n_docs: int = 1200) -> str:
-    """Per-INPUT-ROW head metadata for html-routed documents
-    (cc_extract.extractors.html.html_meta — the shared row semantics;
-    the SQL side re-expresses the keep-newest dedup + projection)."""
-    key = f"html_meta:{n_docs}"
-    if key in _memo:
-        return _memo[key]
+    """Head metadata (extractors.html.html_meta)."""
     import pyarrow as pa
 
-    from .corpusgen import gen_corpus
     from .extractors.html import META_COLS, html_meta
 
-    cols: dict[str, list] = {c: [] for c in ("url", "warc_ts", *META_COLS)}
-    for r in gen_corpus(n_docs):
-        m = html_meta(r["html"], r["url"])
-        if m is None:
-            continue
-        cols["url"].append(r["url"])
-        cols["warc_ts"].append(r["warc_ts"])
-        for k in META_COLS:
-            cols[k].append(m[k])
-    table = pa.table({
-        "url": pa.array(cols["url"], pa.string()),
-        "warc_ts": pa.array(cols["warc_ts"], pa.timestamp("us")),
-        **{k: pa.array(cols[k], pa.string()) for k in META_COLS},
-    })
-    path = os.path.join(_ORACLE_DIR, f"html_meta_{n_docs}.parquet")
-    _atomic_write_table(table, path)
-    _memo[key] = path
-    return path
+    return _html_rows_table("html_meta", n_docs, html_meta,
+                            [(k, pa.string()) for k in META_COLS])
 
 
 def robots_meta_table(n_docs: int = 1200) -> str:
-    """Per-INPUT-ROW page-level robots directives for html-routed
-    documents (cc_extract.extractors.html.html_robots — the shared row
-    semantics; the SQL side re-expresses the keep-newest dedup +
-    projection)."""
-    key = f"robots_meta:{n_docs}"
-    if key in _memo:
-        return _memo[key]
+    """Page-level robots directives (extractors.html.html_robots)."""
     import pyarrow as pa
 
-    from .corpusgen import gen_corpus
-    from .extractors.html import ROBOTS_COLS, html_robots
+    from .extractors.html import html_robots
 
-    cols: dict[str, list] = {c: [] for c in ("url", "warc_ts", *ROBOTS_COLS)}
-    for r in gen_corpus(n_docs):
-        m = html_robots(r["html"], r["url"])
-        if m is None:
-            continue
-        cols["url"].append(r["url"])
-        cols["warc_ts"].append(r["warc_ts"])
-        for k in ROBOTS_COLS:
-            cols[k].append(m[k])
-    table = pa.table({
-        "url": pa.array(cols["url"], pa.string()),
-        "warc_ts": pa.array(cols["warc_ts"], pa.timestamp("us")),
-        "noindex": pa.array(cols["noindex"], pa.bool_()),
-        "nofollow": pa.array(cols["nofollow"], pa.bool_()),
-        "n_robots_metas": pa.array(cols["n_robots_metas"], pa.int32()),
-        "n_anchors": pa.array(cols["n_anchors"], pa.int32()),
-        "n_nofollow_anchors": pa.array(cols["n_nofollow_anchors"],
-                                       pa.int32()),
-    })
-    path = os.path.join(_ORACLE_DIR, f"robots_meta_{n_docs}.parquet")
-    _atomic_write_table(table, path)
-    _memo[key] = path
-    return path
+    b, i32 = pa.bool_(), pa.int32()
+    return _html_rows_table("robots_meta", n_docs, html_robots, [
+        ("noindex", b), ("nofollow", b), ("n_robots_metas", i32),
+        ("n_anchors", i32), ("n_nofollow_anchors", i32)])
 
 
 def jsonld_table(n_docs: int = 1200) -> str:
-    """Per-INPUT-ROW JSON-LD extraction for html-routed documents
-    (cc_extract.extractors.html.html_jsonld — the shared row semantics;
-    the SQL side re-expresses the keep-newest dedup + projection)."""
-    key = f"jsonld:{n_docs}"
-    if key in _memo:
-        return _memo[key]
+    """JSON-LD structured data (extractors.html.html_jsonld)."""
     import pyarrow as pa
 
-    from .corpusgen import gen_corpus
-    from .extractors.html import JSONLD_COLS, html_jsonld
+    from .extractors.html import html_jsonld
 
-    cols: dict[str, list] = {c: [] for c in ("url", "warc_ts", *JSONLD_COLS)}
-    for r in gen_corpus(n_docs):
-        m = html_jsonld(r["html"], r["url"])
-        if m is None:
-            continue
-        cols["url"].append(r["url"])
-        cols["warc_ts"].append(r["warc_ts"])
-        for k in JSONLD_COLS:
-            cols[k].append(m[k])
-    table = pa.table({
-        "url": pa.array(cols["url"], pa.string()),
-        "warc_ts": pa.array(cols["warc_ts"], pa.timestamp("us")),
-        "ld_blocks": pa.array(cols["ld_blocks"], pa.int32()),
-        "ld_valid": pa.array(cols["ld_valid"], pa.int32()),
-        "ld_types": pa.array(cols["ld_types"], pa.string()),
-        "ld_headline": pa.array(cols["ld_headline"], pa.string()),
-        "ld_breadcrumbs": pa.array(cols["ld_breadcrumbs"], pa.int32()),
-    })
-    path = os.path.join(_ORACLE_DIR, f"jsonld_{n_docs}.parquet")
-    _atomic_write_table(table, path)
-    _memo[key] = path
-    return path
+    i32, s = pa.int32(), pa.string()
+    return _html_rows_table("jsonld", n_docs, html_jsonld, [
+        ("ld_blocks", i32), ("ld_valid", i32), ("ld_types", s),
+        ("ld_headline", s), ("ld_breadcrumbs", i32)])
 
 
 def html_blocks_table(n_docs: int = 1200) -> str:
-    """Per-INPUT-ROW per-BLOCK span rows for html-routed documents
-    (cc_extract.extractors.html.html_block_rows — the shared row
-    semantics; the SQL side re-expresses the keep-newest dedup +
-    projection).  One row per (url, warc_ts, block_idx) with the block's
-    [start, end) span, keep decision, char count and text md5 pin."""
-    key = f"html_blocks:{n_docs}"
-    if key in _memo:
-        return _memo[key]
+    """Per-BLOCK span rows: one row per (url, warc_ts, block_idx) with
+    the block's [start, end) span, keep decision, char count and text
+    md5 pin (extractors.html.html_block_rows)."""
     import pyarrow as pa
 
-    from .corpusgen import gen_corpus
     from .extractors.html import html_block_rows
 
-    urls, tss, idxs, starts, ends, kepts, nchars, md5s = \
-        [], [], [], [], [], [], [], []
-    for r in gen_corpus(n_docs):
-        rows = html_block_rows(r["html"], r["url"])
-        if rows is None:
-            continue
-        for b in rows:
-            urls.append(r["url"])
-            tss.append(r["warc_ts"])
-            idxs.append(b["block_idx"])
-            starts.append(b["span_start"])
-            ends.append(b["span_end"])
-            kepts.append(b["kept"])
-            nchars.append(b["n_chars"])
-            md5s.append(b["text_md5"])
-    table = pa.table({
-        "url": pa.array(urls, pa.string()),
-        "warc_ts": pa.array(tss, pa.timestamp("us")),
-        "block_idx": pa.array(idxs, pa.int32()),
-        "span_start": pa.array(starts, pa.int64()),
-        "span_end": pa.array(ends, pa.int64()),
-        "kept": pa.array(kepts, pa.int32()),
-        "n_chars": pa.array(nchars, pa.int64()),
-        "text_md5": pa.array(md5s, pa.string()),
-    })
-    path = os.path.join(_ORACLE_DIR, f"html_blocks_{n_docs}.parquet")
-    _atomic_write_table(table, path)
-    _memo[key] = path
-    return path
+    i32, i64 = pa.int32(), pa.int64()
+    return _html_rows_table("html_blocks", n_docs, html_block_rows, [
+        ("block_idx", i32), ("span_start", i64), ("span_end", i64),
+        ("kept", i32), ("n_chars", i64), ("text_md5", pa.string())])
+
+
+def tables_table(n_docs: int = 1200) -> str:
+    """Table cells (extractors.html.html_tables)."""
+    import pyarrow as pa
+
+    from .extractors.html import html_tables
+
+    i32, s = pa.int32(), pa.string()
+    return _html_rows_table("tables", n_docs, html_tables, [
+        ("table_idx", i32), ("caption", s), ("row_idx", i32),
+        ("col_idx", i32), ("is_header", i32), ("cell", s)])
+
+
+def headings_table(n_docs: int = 1200) -> str:
+    """h1-h6 outline rows (extractors.html.html_headings)."""
+    import pyarrow as pa
+
+    from .extractors.html import html_headings
+
+    i32 = pa.int32()
+    return _html_rows_table("headings", n_docs, html_headings, [
+        ("heading_idx", i32), ("level", i32), ("heading", pa.string())])
 
 
 def wat_table(n_docs: int = 1200) -> str:
@@ -750,81 +674,6 @@ def sitemaps_table() -> str:
         "sitemap": pa.array([t for _, t in rows], pa.string()),
     })
     path = os.path.join(_ORACLE_DIR, "sitemaps_raw.parquet")
-    _atomic_write_table(table, path)
-    _memo[key] = path
-    return path
-
-
-def tables_table(n_docs: int = 1200) -> str:
-    """Per-INPUT-ROW table cells for html-routed documents
-    (cc_extract.extractors.html.html_tables — the shared row semantics;
-    the SQL side re-expresses the keep-newest dedup + projection)."""
-    key = f"tables:{n_docs}"
-    if key in _memo:
-        return _memo[key]
-    import pyarrow as pa
-
-    from .corpusgen import gen_corpus
-    from .extractors.html import TABLE_COLS, html_tables
-
-    cols: dict[str, list] = {c: [] for c in ("url", "warc_ts", *TABLE_COLS)}
-    for r in gen_corpus(n_docs):
-        trs = html_tables(r["html"], r["url"])
-        if not trs:
-            continue
-        for t in trs:
-            cols["url"].append(r["url"])
-            cols["warc_ts"].append(r["warc_ts"])
-            for k in TABLE_COLS:
-                cols[k].append(t[k])
-    table = pa.table({
-        "url": pa.array(cols["url"], pa.string()),
-        "warc_ts": pa.array(cols["warc_ts"], pa.timestamp("us")),
-        "table_idx": pa.array(cols["table_idx"], pa.int32()),
-        "caption": pa.array(cols["caption"], pa.string()),
-        "row_idx": pa.array(cols["row_idx"], pa.int32()),
-        "col_idx": pa.array(cols["col_idx"], pa.int32()),
-        "is_header": pa.array(cols["is_header"], pa.int32()),
-        "cell": pa.array(cols["cell"], pa.string()),
-    })
-    path = os.path.join(_ORACLE_DIR, f"tables_{n_docs}.parquet")
-    _atomic_write_table(table, path)
-    _memo[key] = path
-    return path
-
-
-def headings_table(n_docs: int = 1200) -> str:
-    """Per-INPUT-ROW h1-h6 outline rows for html-routed documents
-    (cc_extract.extractors.html.html_headings — the shared row
-    semantics; the SQL side re-expresses the keep-newest dedup +
-    projection)."""
-    key = f"headings:{n_docs}"
-    if key in _memo:
-        return _memo[key]
-    import pyarrow as pa
-
-    from .corpusgen import gen_corpus
-    from .extractors.html import html_headings
-
-    hcols = ("heading_idx", "level", "heading")
-    cols: dict[str, list] = {c: [] for c in ("url", "warc_ts", *hcols)}
-    for r in gen_corpus(n_docs):
-        hs = html_headings(r["html"], r["url"])
-        if not hs:
-            continue
-        for h in hs:
-            cols["url"].append(r["url"])
-            cols["warc_ts"].append(r["warc_ts"])
-            for k in hcols:
-                cols[k].append(h[k])
-    table = pa.table({
-        "url": pa.array(cols["url"], pa.string()),
-        "warc_ts": pa.array(cols["warc_ts"], pa.timestamp("us")),
-        "heading_idx": pa.array(cols["heading_idx"], pa.int32()),
-        "level": pa.array(cols["level"], pa.int32()),
-        "heading": pa.array(cols["heading"], pa.string()),
-    })
-    path = os.path.join(_ORACLE_DIR, f"headings_{n_docs}.parquet")
     _atomic_write_table(table, path)
     _memo[key] = path
     return path

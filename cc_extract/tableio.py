@@ -22,6 +22,22 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from urllib.parse import unquote, urlparse
+
+
+def local_files_bytes(files: list[str]) -> int | None:
+    """Total size in bytes of a scan's input files (``df.inputFiles()``
+    URIs), or None when there are none or any is not a local ``file:``
+    URI.  URIs are percent-encoded (a space is ``%20``), so each path is
+    decoded before it is sized."""
+    if not files:
+        return None
+    total = 0
+    for f in files:
+        if not f.startswith("file:"):
+            return None
+        total += os.path.getsize(unquote(urlparse(f).path))
+    return total
 
 
 def atomic_write_json(path: str, obj: dict) -> None:

@@ -25,10 +25,10 @@ signatures (bytes/doc) not text; the band join is an equi-join on
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from .tableio import local_files_bytes
 
 TOKEN_RX = "[a-z0-9]+"
 
@@ -110,16 +110,9 @@ def _train_set_partitions(df: DataFrame) -> int | None:
     keeps the natural partitioning) when the input is not a local-file
     scan we can size."""
     try:
-        from urllib.parse import urlparse
-
-        files = df.inputFiles()
-        if not files:
+        total = local_files_bytes(df.inputFiles())
+        if total is None:
             return None
-        total = 0
-        for f in files:
-            if not f.startswith("file:"):
-                return None
-            total += os.path.getsize(urlparse(f).path)
         return max(1, -(-total // TRAIN_SET_PART_BYTES))
     except Exception:
         return None
@@ -2349,7 +2342,7 @@ def bm25_rank(spark, sf_dir: str, query_terms=("join", "hash", "filter"),
     term_score = idf * F.col("tf") * F.lit(k1 + 1.0) / tnorm
     return (
         qp.join(dfreq, "token")
-        .join(stats)
+        .crossJoin(stats)
         .groupBy("doc_id")
         .agg(
             F.round(F.sum(term_score), 4).alias("bm25"),

@@ -983,25 +983,16 @@ def test_scanned_pdf_with_dctdecode_jpeg_ocr():
 
 # ------------------------------------------------- fast HTML scanner (X1)
 
-def _html_blocks_stdlib(doc: str):
-    from cc_extract.extractors.html import _BlockWalkerStdlib
-    w = _BlockWalkerStdlib()
-    w.feed(doc)
-    w.close()
-    w.state.finish()
-    return w.state.blocks
+def _assert_scanner_matches_reference(doc: str) -> None:
+    from cc_extract.extractors.html import _scan_blocks
+    from tests.html_reference import reference_scan
 
-
-def _html_blocks_fast(doc: str):
-    from cc_extract.extractors.html import _BlockState, _scan_html
-    st = _BlockState()
-    _scan_html(doc, st)
-    return st.blocks
+    assert _scan_blocks(doc, want_spans=True) == reference_scan(doc), doc
 
 
 def test_html_fast_scanner_matches_stdlib_on_corpus():
-    """The production scanner must emit block-for-block identical output
-    to the stdlib html.parser reference on every corpus HTML doc."""
+    """The production scanner must be block- AND span-identical to the
+    stdlib html.parser reference on every corpus HTML doc."""
     from cc_extract.extractors.charset import decode_bytes
 
     n = 0
@@ -1010,88 +1001,18 @@ def test_html_fast_scanner_matches_stdlib_on_corpus():
         if not head.startswith((b"<!doctype", b"<html")):
             continue
         n += 1
-        doc = decode_bytes(r["html"], None)
-        assert _html_blocks_fast(doc) == _html_blocks_stdlib(doc)
+        _assert_scanner_matches_reference(decode_bytes(r["html"], None))
     assert n > 200
 
 
 def test_html_fast_scanner_edge_cases():
-    cases = [
-        # comment containing tags
-        "<p>keep</p><!-- <div>not a tag</div> --><p>also</p>",
-        # script with markup inside a string (raw-text element)
-        '<p>a</p><script>var s = "</p><div>";</script><p>b</p>',
-        "<p>a</p><style>p > a { color: red }</style><p>b</p>",
-        # quoted '>' inside an attribute value
-        '<p><a href="x>y">link text here</a> plus trailing words</p>',
-        # self-closing, uppercase, literal '<' in text, entities
-        "<P>One<BR/>Two &amp; 3 < 4</P>",
-        # malformed end tag, unterminated tag at EOF
-        "<p>ok</p></ huh><div>tail",
-        "<p>ok</p><a href=",
-        # doctype + processing instruction
-        "<!DOCTYPE html><?xml version='1'?><p>body text</p>",
-    ]
-    for doc in cases:
-        assert _html_blocks_fast(doc) == _html_blocks_stdlib(doc), doc
+    """Hand-written adversarial constructs, plus generated cases for every
+    tag in BLOCK_TAGS and BLACKLIST_TAGS (open/close, self-closing,
+    upper-case, nested inside each blacklisted subtree)."""
+    from tests.html_reference import EDGE_CASES, tag_edge_cases
 
-
-def _scan_blocks_event_twin(doc: str):
-    from cc_extract.extractors.html import _BlockStateSpans, _scan_html
-    st = _BlockStateSpans()
-    _scan_html(doc, st)
-    return st.blocks, st.spans
-
-
-def test_scan_blocks_matches_event_scanner():
-    """The inlined production scanner (_scan_blocks) must be block- AND
-    span-identical to the event-driven walker feeding _BlockStateSpans,
-    over corpus HTML plus the adversarial edge cases."""
-    from cc_extract.extractors.charset import decode_bytes
-    from cc_extract.extractors.html import _scan_blocks
-
-    n = 0
-    for r in gen_corpus(600):
-        head = r["html"][:200].lstrip()[:9].lower()
-        if not head.startswith((b"<!doctype", b"<html")):
-            continue
-        n += 1
-        doc = decode_bytes(r["html"], None)
-        assert _scan_blocks(doc, want_spans=True) == \
-            _scan_blocks_event_twin(doc)
-    assert n > 200
-    cases = [
-        "<p>keep</p><!-- <div>not a tag</div> --><p>also</p>",
-        '<p>a</p><script>var s = "</p><div>";</script><p>b</p>',
-        "<p>a</p><style>p > a { color: red }</style><p>b</p>",
-        '<p><a href="x>y">link text here</a> plus trailing words</p>',
-        "<P>One<BR/>Two &amp; 3 < 4</P>",
-        "<p>ok</p></ huh><div>tail",
-        "<p>ok</p><a href=",
-        "<!DOCTYPE html><?xml version='1'?><p>body text</p>",
-        # self-closing blacklisted tag (net-zero skip depth)
-        "<p>a</p><nav/><p>b still visible</p>",
-        # nav subtree skipped, anchors inside and out
-        '<nav><a href="/">home</a></nav><p><a href="x">in</a> out</p>',
-        # script without a close tag: skipped to EOF
-        "<p>seen</p><script>var x = 1; // no close",
-        "<p>seen</p><script>var x = 1;</script",
-        # unterminated comment / PI / start tag: rest flushed as data
-        "<p>a</p><!-- never closed <p>gone",
-        "<p>a</p><?php echo; no close",
-        '<p>a</p><div class="x',
-        # unquoted-attr trailing slash is NOT self-closing (veto)
-        "<p>x<div data-r=1/>y</p>",
-        # charrefs split across segments by inline tags
-        "<p>&lt;tag&gt; one<b>&amp;</b> two&#33;</p>",
-        # block tag storm (empty-state flush guard)
-        "<table><tr><td></td></tr><tr></tr></table><p>t</p>",
-        # whitespace-only segments must not open a span
-        "<p>  \n\t  <b>word</b>  </p>",
-    ]
-    for doc in cases:
-        assert _scan_blocks(doc, want_spans=True) == \
-            _scan_blocks_event_twin(doc), doc
+    for doc in EDGE_CASES + tag_edge_cases():
+        _assert_scanner_matches_reference(doc)
 
 
 # ----------------------------------------------------- baseline TIFF (X14)

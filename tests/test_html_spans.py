@@ -11,7 +11,9 @@ Invariants pinned here:
    block's visible text (no block-tag event can occur inside a span —
    it would have flushed — so a span is a closed visible-text region);
 4. the stats row both engines share (html_span_stats) never raises and
-   is gzip-transfer-encoding transparent.
+   is gzip-transfer-encoding transparent;
+5. the output schemas of the seven html operators (cc_extract.job) and of
+   their oracle tables (cc_extract.oracle_data) are pinned literally.
 """
 
 from __future__ import annotations
@@ -24,14 +26,14 @@ from cc_extract.corpusgen import gen_corpus
 from cc_extract.extractors.charset import decode_bytes
 from cc_extract.extractors.html import (
     _META_CHARSET,
-    _BlockStateSpans,
-    _scan_html,
+    _scan_blocks,
     extract_html,
     extract_html_blocks,
     html_span_stats,
 )
 from cc_extract.extractors.normalize import normalize_text
 from cc_extract.sniff import sniff_format
+from tests.html_reference import as_document, unicode_fragment
 
 
 def _html_corpus(n_docs: int = 400) -> list[bytes]:
@@ -83,42 +85,17 @@ def test_span_rescan_reproduces_block_text():
         doc = _decoded(p)
         for b in extract_html_blocks(p):
             sub = doc[b["span_start"]:b["span_end"]]
-            st_ = _BlockStateSpans()
-            _scan_html(sub, st_)
-            texts = [t for (t, _a, _n) in st_.blocks]
+            texts = [t for (t, _a, _n) in _scan_blocks(sub)[0]]
             assert texts == [b["text"]], (b, sub[:200])
 
 
-# Structured random markup (the differential-test shape from
-# test_properties): the block/span invariants must hold on arbitrary
-# nesting, charrefs, self-closing forms and case-mixed tags.
-_TAGS = ["p", "div", "span", "b", "a", "li", "td", "em", "h2", "script"]
-_texts = st.text(
-    alphabet=st.characters(blacklist_characters="<>&", max_codepoint=0x2FF),
-    max_size=24,
-)
-
-
-@st.composite
-def _frag(draw, depth=0):
-    kind = draw(st.integers(0, 5 if depth < 3 else 1))
-    if kind <= 1:
-        return draw(_texts)
-    if kind == 2:
-        return "&amp;" + draw(_texts)
-    tag = draw(st.sampled_from(_TAGS))
-    attr = draw(st.sampled_from(["", ' href="x>y"', " id='a'", " data-x=1"]))
-    if kind == 3:
-        return f"<{tag}{attr}/>"
-    inner = "".join(draw(st.lists(_frag(depth + 1), max_size=3)))
-    close = tag if tag != "script" else "script"
-    return f"<{tag}{attr}>{inner}</{close}>"
-
-
+# Structured random markup (tests/html_reference.py): the block/span
+# invariants must hold on arbitrary nesting, charrefs, self-closing forms
+# and non-ASCII text.
 @settings(max_examples=120, deadline=None)
-@given(st.lists(_frag(), max_size=6))
+@given(st.lists(unicode_fragment(), max_size=6))
 def test_block_span_invariants_on_random_markup(frags):
-    doc = "<html><body>" + "".join(frags) + "</body></html>"
+    doc = as_document(frags)
     payload = doc.encode("utf-8")
     blocks = extract_html_blocks(payload)
     joined = normalize_text(
@@ -132,9 +109,7 @@ def test_block_span_invariants_on_random_markup(frags):
         assert b["span_start"] >= prev_end
         prev_end = b["span_end"]
         sub = decoded[b["span_start"]:b["span_end"]]
-        st_ = _BlockStateSpans()
-        _scan_html(sub, st_)
-        assert [t for (t, _a, _n) in st_.blocks] == [b["text"]]
+        assert [t for (t, _a, _n) in _scan_blocks(sub)[0]] == [b["text"]]
 
 
 @settings(max_examples=200, deadline=None)
@@ -498,3 +473,78 @@ def test_html_headings_populated_on_corpus():
             charref += 1
         assert [r["heading_idx"] for r in rows] == list(range(len(rows)))
     assert docs_with > 50 and h1s > 50 and charref > 40
+
+
+# Output schemas of the seven html operators and of their oracle tables,
+# pinned as literals.  The Spark-vs-DuckDB contract check sorts columns
+# and compares values as strings, so a reordered column or an int -> bigint
+# drift would show only here.
+OPERATOR_SCHEMAS = {
+    "html_spans_df": "struct<url:string,n_blocks:int,n_kept:int,"
+    "kept_chars:bigint,span_chars:bigint,doc_chars:bigint,"
+    "first_kept_start:bigint,last_kept_end:bigint>",
+    "html_meta_df": "struct<url:string,title:string,"
+    "meta_description:string,og_title:string,canonical:string,lang:string>",
+    "html_robots_df": "struct<url:string,noindex:boolean,nofollow:boolean,"
+    "n_robots_metas:int,n_anchors:int,n_nofollow_anchors:int>",
+    "html_jsonld_df": "struct<url:string,ld_blocks:int,ld_valid:int,"
+    "ld_types:string,ld_headline:string,ld_breadcrumbs:int>",
+    "html_blocks_df": "struct<url:string,block_idx:int,span_start:bigint,"
+    "span_end:bigint,kept:int,n_chars:bigint,text_md5:string>",
+    "html_tables_df": "struct<url:string,table_idx:int,caption:string,"
+    "row_idx:int,col_idx:int,is_header:int,cell:string>",
+    "html_headings_df": "struct<url:string,heading_idx:int,level:int,"
+    "heading:string>",
+}
+
+_KEYS = [("url", "string"), ("warc_ts", "timestamp[us]")]
+ORACLE_TABLE_SCHEMAS = {
+    "html_spans_table": _KEYS + [
+        ("n_blocks", "int32"), ("n_kept", "int32"), ("kept_chars", "int64"),
+        ("span_chars", "int64"), ("doc_chars", "int64"),
+        ("first_kept_start", "int64"), ("last_kept_end", "int64")],
+    "html_meta_table": _KEYS + [
+        ("title", "string"), ("meta_description", "string"),
+        ("og_title", "string"), ("canonical", "string"), ("lang", "string")],
+    "robots_meta_table": _KEYS + [
+        ("noindex", "bool"), ("nofollow", "bool"),
+        ("n_robots_metas", "int32"), ("n_anchors", "int32"),
+        ("n_nofollow_anchors", "int32")],
+    "jsonld_table": _KEYS + [
+        ("ld_blocks", "int32"), ("ld_valid", "int32"),
+        ("ld_types", "string"), ("ld_headline", "string"),
+        ("ld_breadcrumbs", "int32")],
+    "html_blocks_table": _KEYS + [
+        ("block_idx", "int32"), ("span_start", "int64"),
+        ("span_end", "int64"), ("kept", "int32"), ("n_chars", "int64"),
+        ("text_md5", "string")],
+    "tables_table": _KEYS + [
+        ("table_idx", "int32"), ("caption", "string"), ("row_idx", "int32"),
+        ("col_idx", "int32"), ("is_header", "int32"), ("cell", "string")],
+    "headings_table": _KEYS + [
+        ("heading_idx", "int32"), ("level", "int32"), ("heading", "string")],
+}
+
+
+def test_html_operator_schemas_are_pinned(spark):
+    from cc_extract import job
+
+    docs = spark.createDataFrame(
+        [], "url string, warc_ts timestamp, html binary")
+    for name, want in OPERATOR_SCHEMAS.items():
+        got = getattr(job, name)(docs).schema.simpleString()
+        assert got == want, name
+    assert job.html_blocks_df(docs, ordered=False).schema.simpleString() \
+        == OPERATOR_SCHEMAS["html_blocks_df"]
+
+
+def test_html_oracle_table_schemas_are_pinned(tmp_path, monkeypatch):
+    import pyarrow.parquet as pq
+
+    from cc_extract import oracle_data
+
+    monkeypatch.setattr(oracle_data, "_ORACLE_DIR", str(tmp_path))
+    monkeypatch.setattr(oracle_data, "_memo", {})
+    for name, want in ORACLE_TABLE_SCHEMAS.items():
+        schema = pq.read_schema(getattr(oracle_data, name)(40))
+        assert [(f.name, str(f.type)) for f in schema] == want, name

@@ -14,6 +14,9 @@ from hypothesis import given, settings, strategies as st
 
 from cc_extract.extractors import extract_document
 from cc_extract.extractors.normalize import normalize_text
+from tests.html_reference import (
+    as_document, markup_fragment, reference_scan, unicode_fragment,
+)
 
 MAGICS = [
     b"%PDF-1.4\n", b"PK\x03\x04", b"{\\rtf1", b"<html>", b"%!PS",
@@ -69,63 +72,15 @@ def test_extraction_deterministic(payload):
 
 # ----------------------- fast HTML scanner vs stdlib (differential fuzz)
 
-# Text alphabet deliberately excludes '<': raw '<' in text creates
-# unterminated tag soup, where the two parsers legitimately diverge
-# (stdlib invents tolerant tag names like "b'<"; the fast scanner falls
-# back to text, the WHATWG-closer behavior — documented in html.py).
-# Tag-soup robustness is covered by the never-raises fuzz tests instead.
-_TAGS = ["p", "div", "span", "a", "li", "nav", "script", "style", "br", "b"]
-_texts = st.text(
-    alphabet="ab &;x#3-'\"", min_size=0, max_size=20
-)
-
-
-@st.composite
-def _html_fragment(draw, depth=0):
-    kind = draw(st.integers(0, 5 if depth < 3 else 1))
-    if kind <= 1:
-        return draw(_texts)
-    if kind == 2:
-        return f"<!-- {draw(_texts)} -->"
-    tag = draw(st.sampled_from(_TAGS))
-    attr = draw(st.sampled_from(["", ' href="x>y"', " id='a'", " data-x=1"]))
-    if kind == 3:
-        return f"<{tag}{attr}/>"
-    if tag in ("script", "style"):
-        return f"<{tag}{attr}>var x = '</div>';</{tag}>"
-    inner = "".join(draw(st.lists(_html_fragment(depth + 1), max_size=3)))
-    return f"<{tag.upper() if draw(st.booleans()) else tag}{attr}>{inner}</{tag}>"
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.lists(_html_fragment(), max_size=6))
-def test_html_fast_scanner_differential(frags):
-    """Structured random HTML: the fast scanner's block output must equal
-    the stdlib html.parser reference's."""
-    from cc_extract.extractors.html import (
-        _BlockState, _BlockWalkerStdlib, _scan_html,
-    )
-
-    doc = "<html><body>" + "".join(frags) + "</body></html>"
-    w = _BlockWalkerStdlib()
-    w.feed(doc)
-    w.close()
-    w.state.finish()
-    fast = _BlockState()
-    _scan_html(doc, fast)
-    assert fast.blocks == w.state.blocks
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.lists(_html_fragment(), max_size=6))
+@settings(max_examples=300, deadline=None)
+@given(st.one_of(
+    st.lists(markup_fragment(), max_size=6),
+    st.lists(unicode_fragment(), max_size=6),
+))
 def test_scan_blocks_differential(frags):
-    """Structured random HTML: the inlined production scanner must be
-    block- and span-identical to the event-driven walker."""
-    from cc_extract.extractors.html import (
-        _BlockStateSpans, _scan_blocks, _scan_html,
-    )
+    """Structured random HTML: the production scanner must be block- and
+    span-identical to the stdlib html.parser reference."""
+    from cc_extract.extractors.html import _scan_blocks
 
-    doc = "<html><body>" + "".join(frags) + "</body></html>"
-    ref = _BlockStateSpans()
-    _scan_html(doc, ref)
-    assert _scan_blocks(doc, want_spans=True) == (ref.blocks, ref.spans)
+    doc = as_document(frags)
+    assert _scan_blocks(doc, want_spans=True) == reference_scan(doc)

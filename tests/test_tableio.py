@@ -131,3 +131,25 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.sql("DROP TABLE IF EXISTS bkt_a")
         spark.sql("DROP TABLE IF EXISTS bkt_b")
+
+
+def test_local_files_bytes_decodes_percent_encoded_paths(spark, tmp_path):
+    """Spark lists input files as percent-encoded URIs; sizing must
+    decode them, or a directory name with a space is not found."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cc_extract.tableio import local_files_bytes
+    from cc_extract.textops import _train_set_partitions
+
+    d = tmp_path / "dir with space"
+    d.mkdir()
+    path = d / "part.parquet"
+    pq.write_table(pa.table({"x": list(range(100))}), str(path))
+    df = spark.read.parquet(str(d))
+    files = df.inputFiles()
+    assert len(files) == 1 and "%20" in files[0], files
+    assert local_files_bytes(files) == os.path.getsize(path)
+    assert _train_set_partitions(df) == 1
+    assert local_files_bytes(["hdfs://nn/x.parquet"]) is None
+    assert local_files_bytes([]) is None
