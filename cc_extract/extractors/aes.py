@@ -10,8 +10,9 @@ decryption schedule is the equivalent-inverse-cipher construction
 (InvMixColumns folded into the round keys).  Test vectors from FIPS-197
 Appendix C and NIST SP 800-38A pin correctness in tests/test_aes.py.
 
-No external crypto libraries: the sandbox has none, and a few KB of PDF
-stream per document is well within pure-Python throughput (~1 MB/s).
+This implementation needs no crypto library: it is the reference
+oracle, and the fallback when the OpenSSL-backed fast path below is not
+importable.
 """
 from __future__ import annotations
 

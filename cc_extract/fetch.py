@@ -103,8 +103,8 @@ def fetch_df(
     (politeness without coordination); within a partition urls fetch in
     sorted order with ``per_domain_delay`` seconds enforced between
     same-domain hits.  Payload bytes are born IN the fetch partition —
-    they never shuffle; downstream extraction (pipeline_df giants-only
-    policy) decides what moves."""
+    they never shuffle; downstream extraction (job.extract_df) moves
+    only the giants."""
     n = partitions or spark.sparkContext.defaultParallelism
     with_dom = urls.select("url").withColumn("domain", domain_col())
     placed = with_dom.repartition(n, "domain").sortWithinPartitions(

@@ -32,10 +32,11 @@ the naive port:
    key.  The logical *bucket* (resume/output unit) is untouched — salt
    exists only in the execution partitioning.
 
-3. **Only giants move** (``shuffle_policy="giants-only"``): small docs
-   are uniform enough in hash-unordered CC inputs that extracting them in
-   scan partitions is both shuffle-free and skew-free; the salted
-   repartition applies to the >threshold tail only.  See pipeline_df.
+3. **Only giants move** in batch: small docs are uniform enough in
+   hash-unordered CC inputs that extracting them in scan partitions is
+   both shuffle-free and skew-free; the salted repartition applies to the
+   >1 MiB tail only.  A stream (cc_extract.streaming) runs the same chain
+   with the salt spread over each whole micro-batch.  See extract_df.
 
 On real Iceberg, the input would be bucket-transform partitioned by url,
 making the resume filter partition pruning; emulation notes in tableio.py.
@@ -55,8 +56,7 @@ from . import manifest as mf
 from .tableio import local_files_bytes, write_partitioned
 
 DEFAULT_BUCKETS = 64
-DEFAULT_SALT = 8
-DEFAULT_SALT_THRESHOLD = 1 << 20  # 1 MiB (SURVEY.md §4.3)
+DEFAULT_SALT_THRESHOLD = 1 << 20  # 1 MiB giant cut (SURVEY.md §4.3)
 
 EXTRACT_RESULT_SCHEMA = (
     "fmt string, text_out string, status string, error string, extract_ms double"
@@ -338,39 +338,32 @@ def snapshot_diff_df(docs: DataFrame, pivot_ts: str) -> DataFrame:
     )
 
 
-def pipeline_df(
+def extract_df(
     docs: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-    salt: int = DEFAULT_SALT,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
-    dedup: bool = True,
+    n_buckets: int,
     skip_buckets: list[int] | None = None,
-    exec_partitions: int | None = None,
-    shuffle_policy: str = "giants-only",
     pdf_passwords: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    """documents -> extracted (url, warc_ts, bucket, n_bytes_in, fmt,
-    text_out, text_sha256, status, error, attempt).  Pure transformation —
-    no writes; reused by job, tests, bench, and the driver contract.
+    """The extraction chain shared by batch and stream: documents
+    (url, warc_ts, html) -> (url, warc_ts, bucket, n_bytes_in, fmt,
+    text_out, status, error, extract_ms, text_sha256), one row per
+    document with a url.
 
-    shuffle_policy:
+    Giants (payloads > DEFAULT_SALT_THRESHOLD) are spread over
+    ``spark.sql.shuffle.partitions`` tasks by a url-hash salt, so the
+    giants of one bucket or scan split do not pile into one task.  Which
+    rows take the spread follows from ``docs.isStreaming``:
 
-    - ``"giants-only"`` (default): payloads <= threshold extract IN the
-      scan partitions — a narrow transform, ZERO payload movement for
-      ~99.8% of rows/60% of bytes; only giants (> threshold) are
-      repartitioned with the size-aware salt, at fine granularity
-      (4x exec partitions) so one Arrow batch never holds more than a
-      couple of giants.  At 100 TB this is the difference between
-      shuffling ~100 TB and shuffling only the giant tail — the scan is
-      sequential and cheap, the shuffle is 3x I/O plus network.
-    - ``"full"``: everything through one salted repartition — the layout
-      to use when the input's own partitioning is pathological (e.g. a
-      crawl dump sorted by host, where scan partitions would be
-      format/size-skewed).
+    - batch: payloads <= threshold extract IN the scan partitions — a
+      narrow transform, ZERO payload movement for ~99.8% of rows/60% of
+      bytes; only the giant tail is repartitioned.  At 100 TB this is
+      the difference between shuffling ~100 TB and shuffling only the
+      giants — the scan is sequential and cheap, the shuffle is 3x I/O
+      plus network.
+    - stream: the whole micro-batch takes the spread.  The batch split
+      would be a union of two branches over one source, which doubles
+      the upstream dedup state and reads every micro-batch twice.
     """
-    spark = docs.sparkSession
-    n_exec = exec_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
     # R1 projection: stale upstream text/lang never read (column pruning
     # reaches the parquet scan — verify via explain: ReadSchema excludes them)
     df = docs.select("url", "warc_ts", "html").filter(F.col("url").isNotNull())
@@ -379,12 +372,26 @@ def pipeline_df(
         # R6 resume: driver-side static predicate, never a join (§4.2)
         df = df.filter(~F.col("bucket").isin([int(b) for b in skip_buckets]))
 
-    # NULL payloads coalesce to size 0 so they land in the small branch of
-    # EITHER shuffle policy and surface as status='error' rows — a NULL
-    # n_bytes_in would fail both the <= and > giant filters and the row
-    # would silently vanish, violating the "poison doc -> error row, never
-    # disappears" contract.
+    # NULL payloads coalesce to size 0 so they stay out of the giant
+    # filter and surface as status='error' rows — a NULL n_bytes_in would
+    # fail both the <= and > filters and the row would silently vanish,
+    # violating the "poison doc -> error row, never disappears" contract.
     df = df.withColumn("n_bytes_in", F.coalesce(F.length("html"), F.lit(0)))
+
+    # R5 salt.  The salt KEYSPACE is fine (16x exec partitions — guide
+    # §2.5 wants many more distinct keys than partitions so the hash
+    # spreads evenly) but the PARTITION count is n_exec: the giant tail
+    # is a small fraction of rows, and more partitions meant a stage of
+    # mostly-empty tasks (512 tasks for 34 giants on the bench corpus —
+    # ~2 s of pure scheduling).  Per-batch memory is bounded by
+    # arrow.maxRecordsPerBatch, not the partition count; production
+    # widens the spread through spark.sql.shuffle.partitions.
+    n_exec = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+    def spread(part: DataFrame) -> DataFrame:
+        salt = F.pmod(F.xxhash64("url", F.lit(1)), F.lit(n_exec * 16))
+        return (part.withColumn("salt", salt.cast("int"))
+                .repartition(n_exec, F.col("salt")).drop("salt"))
 
     extract_udf = make_extract_udf(pdf_passwords)
 
@@ -393,41 +400,31 @@ def pipeline_df(
             "url", "warc_ts", "bucket", "n_bytes_in", "r.*"
         )
 
-    if shuffle_policy == "giants-only":
-        small = df.filter(F.col("n_bytes_in") <= F.lit(salt_threshold))
-        big = df.filter(F.col("n_bytes_in") > F.lit(salt_threshold))
-        # R5 salt at fine granularity.  Round 6 split: the salt KEYSPACE
-        # stays fine (16x exec partitions — guide §2.5 wants many more
-        # distinct keys than partitions so the hash spreads evenly) but
-        # the PARTITION count is n_exec, not 4x: the giant tail is a
-        # small fraction of rows, and 4x partitions meant a giant-branch
-        # stage of mostly-empty tasks (512 tasks for 34 giants on the
-        # bench corpus — ~2 s of pure scheduling).  Per-batch memory is
-        # bounded by arrow.maxRecordsPerBatch, not the partition count;
-        # production can still widen via the exec_partitions argument.
-        n_salt_keys = max(n_exec * 16, salt)
-        big = big.withColumn(
-            "salt",
-            F.pmod(F.xxhash64("url", F.lit(1)), F.lit(n_salt_keys)).cast("int"),
-        ).repartition(n_exec, F.col("salt"))
-        res = run_extract(small).unionByName(run_extract(big.drop("salt")))
+    if docs.isStreaming:
+        res = run_extract(spread(df))
     else:
-        df = df.withColumn(
-            "salt",
-            F.when(
-                F.col("n_bytes_in") > F.lit(salt_threshold),
-                F.pmod(F.xxhash64("url", F.lit(1)), F.lit(salt)),
-            ).otherwise(F.lit(0)).cast("int"),
-        )
-        # THE payload shuffle (the only one)
-        df = df.repartition(n_exec, F.col("bucket"), F.col("salt"))
-        res = run_extract(df)
+        size = F.col("n_bytes_in")
+        small = df.filter(size <= F.lit(DEFAULT_SALT_THRESHOLD))
+        giants = df.filter(size > F.lit(DEFAULT_SALT_THRESHOLD))
+        res = run_extract(small).unionByName(run_extract(spread(giants)))
     # JVM-side sha256 of the extracted text (codegen'd; the pytest oracle
     # diffs per-url text hashes [D: BASELINE.json north_star])
-    res = res.withColumn(
+    return res.withColumn(
         "text_sha256", F.sha2(F.encode(F.col("text_out"), "UTF-8"), 256)
     )
 
+
+def pipeline_df(
+    docs: DataFrame,
+    n_buckets: int = DEFAULT_BUCKETS,
+    dedup: bool = True,
+    skip_buckets: list[int] | None = None,
+    pdf_passwords: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """documents -> extracted (url, warc_ts, bucket, n_bytes_in, fmt,
+    text_out, text_sha256, status, error, attempt).  Pure transformation —
+    no writes; reused by job, tests, bench and `__spark_entry__`."""
+    res = extract_df(docs, n_buckets, skip_buckets, pdf_passwords)
     if dedup:
         # R3 keep-newest-crawl per url; deterministic tie-break on the
         # extracted-text hash (§4.3 determinism) — already computed, so no
@@ -449,8 +446,6 @@ def run(
     docs: DataFrame,
     out_dir: str,
     n_buckets: int = DEFAULT_BUCKETS,
-    salt: int = DEFAULT_SALT,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     dedup: bool = True,
     resume: bool = True,
     input_token: str | None = None,
@@ -478,10 +473,8 @@ def run(
     long-completed buckets.
     """
     t0 = time.time()
-    config = {
-        "n_buckets": n_buckets, "salt": salt,
-        "salt_threshold": salt_threshold, "dedup": dedup,
-    }
+    # only settings that change rows; the execution layout is not identity
+    config = {"n_buckets": n_buckets, "dedup": dedup}
     if pdf_passwords is not None:
         # part of the job identity: a different candidate list changes
         # which encrypted PDFs extract, so completed buckets don't carry
@@ -517,8 +510,8 @@ def run(
                 "buckets_done": len(skip), "wall_ms": 0, "n_docs": 0}
 
     res = pipeline_df(
-        docs, n_buckets=n_buckets, salt=salt, salt_threshold=salt_threshold,
-        dedup=dedup, skip_buckets=skip, pdf_passwords=pdf_passwords,
+        docs, n_buckets=n_buckets, dedup=dedup, skip_buckets=skip,
+        pdf_passwords=pdf_passwords,
     )
     # final layout shuffle: cheap text rows, clusters files 1:1 with buckets
     final = res.repartition(n_buckets, "bucket")
@@ -593,8 +586,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--buckets", type=int, default=DEFAULT_BUCKETS)
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--salt", type=int, default=DEFAULT_SALT)
-    ap.add_argument("--salt-threshold", type=int, default=DEFAULT_SALT_THRESHOLD)
     ap.add_argument("--no-dedup", action="store_true")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--seed", type=int, default=42)
@@ -623,10 +614,9 @@ def main() -> None:
         pdf_pw = (tuple(args.pdf_passwords.split(","))
                   if args.pdf_passwords is not None else None)
         stats = run(
-            spark, docs, args.out, n_buckets=args.buckets, salt=args.salt,
-            salt_threshold=args.salt_threshold, dedup=not args.no_dedup,
-            resume=not args.no_resume, input_token=token,
-            pdf_passwords=pdf_pw,
+            spark, docs, args.out, n_buckets=args.buckets,
+            dedup=not args.no_dedup, resume=not args.no_resume,
+            input_token=token, pdf_passwords=pdf_pw,
         )
         print(f"job stats: {stats}")
         if not stats["skipped"]:

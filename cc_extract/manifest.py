@@ -23,7 +23,7 @@ import os
 import time
 
 from . import __version__
-from .tableio import atomic_write_json, read_json_dir
+from .tableio import atomic_write_json, local_path, read_json_dir
 
 MANIFEST_DIR = "manifest"
 
@@ -56,11 +56,9 @@ def input_snapshot_id(docs, inline_token: str | None = None) -> str:
     h = hashlib.sha256()
     for f in files:
         h.update(f.encode())
-        local = f[len("file:"):] if f.startswith("file:") else f
-        try:
+        local = local_path(f)
+        if local is not None:
             h.update(str(os.path.getsize(local)).encode())
-        except OSError:
-            pass
     return h.hexdigest()[:16]
 
 

@@ -10,22 +10,22 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+# arrow.maxRecordsPerBatch: measured sweet spot.  256-row batches cost ~8x
+# in JVM->Python transport (per-batch flush overhead dominates); the
+# 10k-row default risks multi-GiB batches when a salted partition holds
+# giants (SURVEY.md §4.2 "Arrow batch sizing") — 1024 x ~1 MiB worst-case
+# giants ~= 1 GiB/batch, safe under useLargeVarTypes with headroom.
+ARROW_BATCH = 1024
+
 
 def build_session(
     cpus: int | None = None,
     app_name: str = "cc_extract",
     shuffle_partitions: int | None = None,
-    arrow_batch: int = 1024,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Local session for tests/bench; on a cluster only master() changes.
 
-    - ``arrow.maxRecordsPerBatch`` 1024: measured sweet spot.  256-row
-      batches cost ~8x in JVM->Python transport (per-batch flush overhead
-      dominates); 10k-row default risks multi-GiB batches when a salted
-      partition holds giants (SURVEY.md §4.2 "Arrow batch sizing") —
-      1024 x ~1 MiB worst-case giants ~= 1 GiB/batch, safe under
-      useLargeVarTypes with headroom.
     - ``useLargeVarTypes``: 64-bit offsets for binary/string arrays so a
       single batch of fat payloads can't overflow 32-bit offsets.
     - AQE on: runtime coalescing + skew-join backstop; our explicit
@@ -67,18 +67,17 @@ def build_session(
         # more than the rows it would skip.
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # 32 MB scan splits: the giants-only pipeline extracts small docs
-        # IN scan partitions, so scan granularity = extraction task
+        # 32 MB scan splits: the batch pipeline extracts small docs IN
+        # scan partitions, so scan granularity = extraction task
         # granularity; at sf-small the corpus files are ~17 MB and the
         # default 128 MB would pack them into too few tasks for 32 cores.
         # Production at 100 TB raises this back to 128-256 MB.
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         # never pack multiple files into one scan split: extraction
-        # parallelism rides the scan in the giants-only plan, and packed
+        # parallelism rides the scan in the batch plan, and packed
         # 3 MB fixture files would starve 32 cores
         .config("spark.sql.files.openCostInBytes", "33554432")
         .config("spark.driver.memory", "24g")

@@ -2,12 +2,12 @@
 
 The reference is request/response, not a stream, and the CC snapshot input
 is a static table — so batch is the primary mode.  This module is the
-documented drop-in for a WARC-firehose scenario: the SAME extraction UDF
-and bucket/salt expressions run under ``readStream``, with
+documented drop-in for a WARC-firehose scenario: the batch extraction
+chain (cc_extract.job.extract_df) runs under ``readStream``, with
 watermark-bounded keep-one-per-url dedup and checkpointed exactly-once
-file sink.  Nothing here forks the extraction semantics — it reuses
-cc_extract.job's UDF verbatim, so stream output hashes equal batch output
-hashes (tested in tests/test_streaming.py).
+file sink.  Nothing here forks the extraction semantics, so stream
+output hashes equal batch output hashes (tested in
+tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -15,13 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .corpusgen import CORPUS_SCHEMA
-from .job import (
-    DEFAULT_BUCKETS,
-    DEFAULT_SALT,
-    DEFAULT_SALT_THRESHOLD,
-    make_extract_udf,
-    with_bucket,
-)
+from .job import DEFAULT_BUCKETS, extract_df
 
 
 def stream_documents(
@@ -44,14 +38,11 @@ def extract_stream(
     n_buckets: int = DEFAULT_BUCKETS,
     watermark: str = "1 day",
     max_files: int = 8,
-    salt: int = DEFAULT_SALT,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
-    debug_partition_col: bool = False,
     dedup_key: str = "url",
 ):
-    """streaming scan -> dedup-within-watermark -> size-aware salted
-    repartition -> vectorized extraction -> checkpointed parquet sink.
-    Returns the StreamingQuery.
+    """streaming scan -> dedup-within-watermark -> job.extract_df (the
+    batch extraction chain) -> checkpointed parquet sink.  Returns the
+    StreamingQuery.
 
     Dedup semantics vs batch: the batch job keeps the NEWEST crawl per
     url globally; a stream can only keep the FIRST within the watermark
@@ -60,11 +51,8 @@ def extract_stream(
 
     Skew parity with batch (R5): a giant payload inside a micro-batch
     skews that batch exactly the way the batch job's salting exists to
-    prevent, so the stream path carries the same size-aware salt —
-    giants (> salt_threshold) get a secondary url-hash salt at fine
-    granularity before the per-micro-batch repartition on (bucket,
-    salt); small docs keep salt 0.  ``debug_partition_col`` appends the
-    executing partition id for tests that assert the spread.
+    prevent; extract_df sees a streaming frame and spreads the whole
+    micro-batch by the same url-hash salt.
     """
     docs = stream_documents(spark, input_dir, max_files=max_files)
     docs = docs.withWatermark("warc_ts", watermark)
@@ -83,33 +71,8 @@ def extract_stream(
         )
     else:
         docs = docs.dropDuplicatesWithinWatermark(["url"])
-    df = with_bucket(docs.select("url", "warc_ts", "html"), n_buckets)
-    df = df.withColumn("n_bytes_in", F.coalesce(F.length("html"), F.lit(0)))
-    # the conf may be non-numeric (e.g. "auto" under some AQE setups) —
-    # fall back to the cluster's default parallelism rather than crashing
-    try:
-        n_exec = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (ValueError, TypeError):
-        n_exec = spark.sparkContext.defaultParallelism
-    n_salt = max(n_exec * 4, salt)
-    df = df.withColumn(
-        "salt",
-        F.when(
-            F.col("n_bytes_in") > F.lit(salt_threshold),
-            F.pmod(F.xxhash64("url", F.lit(1)), F.lit(n_salt)),
-        ).otherwise(F.lit(0)).cast("int"),
-    ).repartition(n_exec, F.col("bucket"), F.col("salt"))
-    extract_udf = make_extract_udf()
-    res = df.withColumn("r", extract_udf("html", "url")).select(
-        "url", "warc_ts", "bucket", "n_bytes_in", "r.*"
-    )
-    if debug_partition_col:
-        res = res.withColumn("exec_part", F.spark_partition_id())
-    res = res.withColumn(
-        "text_sha256", F.sha2(F.encode(F.col("text_out"), "UTF-8"), 256)
-    )
     return (
-        res.writeStream.format("parquet")
+        extract_df(docs, n_buckets).writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

@@ -25,19 +25,23 @@ import uuid
 from urllib.parse import unquote, urlparse
 
 
+def local_path(uri: str) -> str | None:
+    """Filesystem path of a local ``file:`` URI (as ``df.inputFiles()``
+    returns them), or None for any other scheme.  URIs are
+    percent-encoded (a space is ``%20``), so the path is decoded."""
+    if not uri.startswith("file:"):
+        return None
+    return unquote(urlparse(uri).path)
+
+
 def local_files_bytes(files: list[str]) -> int | None:
     """Total size in bytes of a scan's input files (``df.inputFiles()``
     URIs), or None when there are none or any is not a local ``file:``
-    URI.  URIs are percent-encoded (a space is ``%20``), so each path is
-    decoded before it is sized."""
-    if not files:
+    URI."""
+    paths = [local_path(f) for f in files]
+    if not paths or None in paths:
         return None
-    total = 0
-    for f in files:
-        if not f.startswith("file:"):
-            return None
-        total += os.path.getsize(unquote(urlparse(f).path))
-    return total
+    return sum(os.path.getsize(p) for p in paths)
 
 
 def atomic_write_json(path: str, obj: dict) -> None:
@@ -68,8 +72,8 @@ def write_partitioned(df, path: str, partition_col: str = "bucket") -> None:
     ``partitionOverwriteMode`` is pinned HERE, per write, not inherited
     from the session: with Spark's default *static* mode an overwrite
     deletes ALL partition directories — including completed buckets — so
-    a resumed run driven from a session not built by ``build_session``
-    would silently destroy finished work."""
+    a resumed run driven from any session that leaves the default would
+    silently destroy finished work."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -2197,7 +2197,14 @@ def quality_classifier(spark, sf_dir: str, iters: int = GD_ITERS,
     the iteration loop so the tiny per-round aggregates skip per-stage
     re-optimization (restored in a finally:).  Measured 1.28 -> 0.75 s
     at sf0.1; the float sums keep the same partial-merge nondeterminism
-    envelope the 9-dp per-round rounding already absorbs."""
+    envelope the 9-dp per-round rounding already absorbs.
+
+    The AQE toggle is session-global: the session must be
+    single-threaded while this runs, or a query another thread runs on
+    it during the loop executes with AQE off.  The toggle stays because
+    it pays on 4 cores too: at sf0.1, 10 interleaved runs each way took
+    a median 1.49 s with it and 1.69 s without, slower without in 9 of
+    10 pairs."""
     docs = fan_out_scan(load_documents(spark, sf_dir))
     df = with_tokens(docs)
     n = F.size("tokens")

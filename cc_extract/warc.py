@@ -398,38 +398,19 @@ def read_warc_dir(spark, path: str):
     """Load a directory/glob of ``.warc.gz`` segment files as a documents
     DataFrame ``(url, warc_ts, html)`` — the pipeline's input contract —
     via Spark's binaryFile source (one row per segment file, which is the
-    correct indivisible unit; see records_df).  Filters to response
-    records: warcinfo/request/metadata are structural, and corrupt rows
-    are dropped here because the pipeline quarantines per-document, not
-    per-container (a corrupt segment tail has no url to key on — its
-    count is observable via records_df directly)."""
-    from pyspark.sql import functions as F
-
-    seg = (
-        spark.read.format("binaryFile").load(path)
-        .select(
-            F.xxhash64("path").alias("seg_id"),
-            F.col("content").alias("warc"),
-        )
-    )
-    rec = records_df(seg)
-    return (
-        rec.filter(F.col("rec_type") == "response")
-        .select("url", "warc_ts", F.col("payload").alias("html"))
-    )
+    correct indivisible unit; see records_df)."""
+    return _segment_documents(spark.read.format("binaryFile").load(path))
 
 
 def read_warc_stream(spark, path: str):
     """Streaming twin of read_warc_dir: a crawl-drop directory watched as
     a Structured Streaming file source (``readStream.format("binaryFile")``)
     — new ``.warc.gz`` segments appearing in *path* flow through the SAME
-    mapInPandas record reader into the pipeline's (url, warc_ts, html)
+    _segment_documents reader into the pipeline's (url, warc_ts, html)
     contract.  Per-segment grain is unchanged: each micro-batch holds
     whole segments, so exactly-once at the file level comes from the file
     source's own checkpointed file index."""
-    from pyspark.sql import functions as F
-
-    seg = (
+    return _segment_documents(
         spark.readStream.format("binaryFile")
         # streaming file sources require an explicit schema; binaryFile's
         # is fixed by the format
@@ -437,14 +418,24 @@ def read_warc_stream(spark, path: str):
                 "length long, content binary")
         .option("pathGlobFilter", "*.warc.gz")
         .load(path)
-        .select(
-            F.xxhash64("path").alias("seg_id"),
-            F.col("content").alias("warc"),
-        )
     )
-    rec = records_df(seg)
+
+
+def _segment_documents(files):
+    """binaryFile rows ``(path, content)``, one per segment, -> documents
+    ``(url, warc_ts, html)``.  Filters to response records:
+    warcinfo/request/metadata are structural, and corrupt rows are
+    dropped here because the pipeline quarantines per-document, not
+    per-container (a corrupt segment tail has no url to key on — its
+    count is observable via records_df directly)."""
+    from pyspark.sql import functions as F
+
+    seg = files.select(
+        F.xxhash64("path").alias("seg_id"),
+        F.col("content").alias("warc"),
+    )
     return (
-        rec.filter(F.col("rec_type") == "response")
+        records_df(seg).filter(F.col("rec_type") == "response")
         .select("url", "warc_ts", F.col("payload").alias("html"))
     )
 

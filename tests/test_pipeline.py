@@ -142,9 +142,27 @@ def test_manifest_carries_input_snapshot_lineage(spark, tmp_path):
         J.run(spark, docs_v2, out1, n_buckets=4, resume=True)
 
 
-def test_null_payload_rows_become_error_rows_in_both_policies(spark):
-    """The poison-doc contract: a NULL payload may never disappear — both
-    shuffle policies must emit the same status='error' row for it."""
+def test_input_snapshot_id_sizes_percent_encoded_paths(spark, tmp_path):
+    """M4 over a directory whose URI is percent-encoded (a space is
+    ``%20``): replacing a file with a same-named one of another size must
+    change the snapshot id, so the file sizes really enter the hash."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "dir with space"
+    d.mkdir()
+    f = str(d / "part-0.parquet")
+    pq.write_table(pa.table({"url": ["https://s.example/a"]}), f)
+    before = mf.input_snapshot_id(spark.read.parquet(str(d)))
+    pq.write_table(pa.table({"url": [f"https://s.example/{i}"
+                                     for i in range(500)]}), f)
+    after = mf.input_snapshot_id(spark.read.parquet(str(d)))
+    assert before != after
+
+
+def test_null_payload_rows_become_error_rows(spark):
+    """The poison-doc contract: a NULL payload may never disappear — it
+    must surface as a status='error' row."""
     import datetime as dt
 
     rows = [
@@ -152,21 +170,20 @@ def test_null_payload_rows_become_error_rows_in_both_policies(spark):
         ("https://n.example/ok", dt.datetime(2025, 1, 1), bytearray(b"plain text doc")),
     ]
     docs = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
-    for policy in ("giants-only", "full"):
-        got = {
-            r["url"]: (r["status"], r["error"])
-            for r in J.pipeline_df(docs, n_buckets=4, shuffle_policy=policy)
-            .select("url", "status", "error").collect()
-        }
-        assert got["https://n.example/null"] == ("error", "empty payload"), policy
-        assert got["https://n.example/ok"][0] == "ok", policy
+    got = {
+        r["url"]: (r["status"], r["error"])
+        for r in J.pipeline_df(docs, n_buckets=4)
+        .select("url", "status", "error").collect()
+    }
+    assert got["https://n.example/null"] == ("error", "empty payload")
+    assert got["https://n.example/ok"][0] == "ok"
 
 
-def test_full_policy_salting_spreads_giants(spark):
-    """§5.4 for shuffle_policy='full': with every row in ONE logical bucket,
+def test_salting_spreads_giants(spark):
+    """§5.4 for the shipped plan: with every row in ONE logical bucket,
     the giants must still land on multiple execution partitions via the
-    size-aware salt (without it, bucket-keyed repartition puts 100% of the
-    giant bytes on one partition)."""
+    url-hash salt (without it, they extract in the one scan partition
+    that holds them)."""
     big = b"%PDF" + b"\x00" * (2 << 20)
     rows = [(f"https://fs.example/big{i}", bytearray(big)) for i in range(16)]
     rows += [(f"https://fs.example/s{i}", bytearray(b"tiny doc " * 10)) for i in range(200)]
@@ -176,15 +193,13 @@ def test_full_policy_salting_spreads_giants(spark):
         docs.withColumn("warc_ts", F.lit(None).cast("timestamp")),
         n_buckets=1,  # worst case: one logical bucket holds all giants
         dedup=False,  # keep the post-UDF rows on their execution partitions
-        exec_partitions=32,
-        shuffle_policy="full",
     )
     giant_pids = (
         res.withColumn("pid", F.spark_partition_id())
         .filter(F.col("n_bytes_in") > 1 << 20)
         .select("pid").distinct().count()
     )
-    assert giant_pids >= 4, f"full-policy salt did not spread giants: {giant_pids} partitions"
+    assert giant_pids >= 4, f"salt did not spread giants: {giant_pids} partitions"
 
 
 # ------------------------------------------------------------- skew (R5)
@@ -256,31 +271,46 @@ def test_dedup_keeps_newest_crawl(spark, tmp_path):
 
 # -------------------------------------------------- plan guard (scale)
 
-def test_only_one_payload_shuffle(spark):
-    """Scale guard (SURVEY.md §4): exactly one Exchange may carry the
-    ``html`` payload column.  A second payload shuffle is a 100 TB
-    regression even if correctness stays green."""
-    docs = corpus_df(spark, 100, partitions=2)
-    res = J.pipeline_df(docs, n_buckets=8)
+def _formatted_plan(res) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         res.explain("formatted")
-    plan = buf.getvalue()
+    return buf.getvalue()
 
-    # formatted explain: each Exchange node lists its Input columns
-    exchanges = re.findall(r"\(\d+\) Exchange\n(?:.*\n)*?Arguments.*", plan)
-    payload_exchanges = [
-        m for m in re.finditer(
+
+def _payload_exchanges(plan: str) -> int:
+    """Exchanges whose input carries the ``html`` payload column (each
+    formatted Exchange node lists its Input columns)."""
+    return sum(
+        "html" in m.group(1) for m in re.finditer(
             r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
-        if "html" in m.group(1)
-    ]
-    assert len(payload_exchanges) == 1, (
-        f"expected exactly 1 payload shuffle, plan:\n{plan}"
     )
+
+
+def test_only_one_payload_shuffle(spark, tmp_path):
+    """Scale guard (SURVEY.md §4): exactly one Exchange may carry the
+    ``html`` payload column, for a table input and for a WARC segment
+    input.  A second payload shuffle is a 100 TB regression even if
+    correctness stays green."""
+    from cc_extract import warc as W
+    from cc_extract.corpusgen import gen_corpus
+
+    docs = corpus_df(spark, 100, partitions=2)
+    plan = _formatted_plan(J.pipeline_df(docs, n_buckets=8))
+    assert _payload_exchanges(plan) == 1, (
+        f"expected exactly 1 payload shuffle, plan:\n{plan}")
     # stale upstream columns must be pruned at the scan (R1)
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     if m:  # corpus_df path has no parquet scan; guard applies to parquet inputs
         assert "text" not in m.group(1)
+
+    recs = [(r["url"], r["warc_ts"], r["html"]) for r in gen_corpus(40)]
+    with open(tmp_path / "seg0.warc.gz", "wb") as f:
+        f.write(W.write_warc_gz(recs, segment="seg0"))
+    warc_docs = W.read_warc_dir(spark, str(tmp_path))
+    plan = _formatted_plan(J.pipeline_df(warc_docs, n_buckets=8))
+    assert _payload_exchanges(plan) == 1, (
+        f"expected exactly 1 payload shuffle, plan:\n{plan}")
 
 
 def test_pruned_scan_on_parquet_input(spark, tmp_path):
@@ -289,34 +319,11 @@ def test_pruned_scan_on_parquet_input(spark, tmp_path):
     p = str(tmp_path / "docs.parquet")
     corpus_df(spark, 200, partitions=2).write.parquet(p)
     docs = spark.read.parquet(p)
-    res = J.pipeline_df(docs, n_buckets=8)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        res.explain("formatted")
-    plan = buf.getvalue()
+    plan = _formatted_plan(J.pipeline_df(docs, n_buckets=8))
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m, plan
     assert "html" in m.group(1)
     assert "lang" not in m.group(1), m.group(1)
-
-
-def test_shuffle_policies_byte_identical(spark):
-    """giants-only and full-shuffle are execution layouts, not semantics:
-    identical (url, sha, status) sets required."""
-    docs = corpus_df(spark, 600, partitions=4)
-    a = {
-        (r["url"], r["text_sha256"], r["status"])
-        for r in J.pipeline_df(docs, n_buckets=8, shuffle_policy="giants-only")
-        .select("url", "text_sha256", "status").collect()
-    }
-    b = {
-        (r["url"], r["text_sha256"], r["status"])
-        for r in J.pipeline_df(docs, n_buckets=8, shuffle_policy="full")
-        .select("url", "text_sha256", "status").collect()
-    }
-    # post-dedup rows = distinct raw urls (decorated dup urls survive)
-    n_urls = docs.select("url").distinct().count()
-    assert a == b and len(a) == n_urls > 600
 
 
 def test_script_id_ladder_matches_python_reference(spark):

@@ -104,9 +104,9 @@ def test_stream_dedup_keeps_first_within_watermark(spark, tmp_path):
 def test_stream_salts_giants_within_micro_batch(spark, tmp_path):
     """R5 parity on the stream path: giant payloads inside ONE micro-batch
     must spread across execution partitions even when they share a bucket.
-    n_buckets=1 forces every row into bucket 0, so without the size-aware
-    salt the whole batch (giants included) would extract in a single
-    task."""
+    n_buckets=1 forces every row into bucket 0 and the input is one file,
+    so without the url-hash salt the whole batch (giants included) would
+    extract in a single task."""
     import datetime as dt
 
     input_dir = str(tmp_path / "in")
@@ -129,20 +129,19 @@ def test_stream_salts_giants_within_micro_batch(spark, tmp_path):
 
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = streaming.extract_stream(
-        spark, input_dir, out_dir, ckpt, n_buckets=1,
-        debug_partition_col=True,
-    )
+    q = streaming.extract_stream(spark, input_dir, out_dir, ckpt, n_buckets=1)
     q.awaitTermination(240)
     assert not q.isActive
 
-    out = spark.read.parquet(out_dir)
+    # the sink writes one part file per task, so the distinct files that
+    # hold giants count the tasks that extracted them
+    out = spark.read.parquet(out_dir).withColumn("file", F.input_file_name())
     giants = out.filter(F.col("n_bytes_in") > (1 << 20)).collect()
     assert len(giants) == 6
     # all share the single bucket, yet the salt spread them across tasks
     assert {r["bucket"] for r in giants} == {0}
-    parts = {r["exec_part"] for r in giants}
-    assert len(parts) > 1, f"giants all extracted in one partition: {parts}"
+    files = {r["file"] for r in giants}
+    assert len(files) > 1, f"giants all extracted in one task: {files}"
 
 
 def test_stateful_domain_stats_across_micro_batches(spark, tmp_path):
