@@ -36,7 +36,7 @@ the naive port:
    hash-unordered CC inputs that extracting them in scan partitions is
    both shuffle-free and skew-free; the salted repartition applies to the
    >1 MiB tail only.  A stream (cc_extract.streaming) runs the same chain
-   with the salt spread over each whole micro-batch.  See extract_df.
+   in the partitions of its url-hash dedup exchange.  See extract_df.
 
 On real Iceberg, the input would be bucket-transform partitioned by url,
 making the resume filter partition pruning; emulation notes in tableio.py.
@@ -63,6 +63,10 @@ EXTRACT_RESULT_SCHEMA = (
 )
 
 OK_STATUSES = ("ok", "ok_ocr")  # ok_ocr = executed OCR-lite route (X14)
+
+METRICS_SCHEMA = (
+    "bucket int, fmt string, status string, n long, bytes_in long"
+)
 
 
 def make_extract_udf(pdf_passwords: tuple[str, ...] | None = None):
@@ -349,20 +353,25 @@ def extract_df(
     text_out, status, error, extract_ms, text_sha256), one row per
     document with a url.
 
-    Giants (payloads > DEFAULT_SALT_THRESHOLD) are spread over
-    ``spark.sql.shuffle.partitions`` tasks by a url-hash salt, so the
-    giants of one bucket or scan split do not pile into one task.  Which
-    rows take the spread follows from ``docs.isStreaming``:
+    Giants (payloads > DEFAULT_SALT_THRESHOLD) must not pile into one
+    task just because they share a bucket or a scan split.  How they
+    spread follows from ``docs.isStreaming``:
 
     - batch: payloads <= threshold extract IN the scan partitions — a
       narrow transform, ZERO payload movement for ~99.8% of rows/60% of
-      bytes; only the giant tail is repartitioned.  At 100 TB this is
+      bytes; only the giant tail is repartitioned, by a url-hash salt
+      over ``spark.sql.shuffle.partitions`` tasks.  At 100 TB this is
       the difference between shuffling ~100 TB and shuffling only the
       giants — the scan is sequential and cheap, the shuffle is 3x I/O
       plus network.
-    - stream: the whole micro-batch takes the spread.  The batch split
-      would be a union of two branches over one source, which doubles
-      the upstream dedup state and reads every micro-batch twice.
+    - stream: every row extracts in the partitions *docs* arrives in.
+      Precondition: a stream frame is already hash-partitioned by url
+      or by its canonical form, as cc_extract.streaming's watermark
+      dedup leaves it — that exchange spreads the giants, so a salt
+      repartition here would move the payload a second time and spread
+      nothing new.  The batch split would be a union of two branches
+      over one source, which doubles the upstream dedup state and reads
+      every micro-batch twice.
     """
     # R1 projection: stale upstream text/lang never read (column pruning
     # reaches the parquet scan — verify via explain: ReadSchema excludes them)
@@ -378,21 +387,6 @@ def extract_df(
     # violating the "poison doc -> error row, never disappears" contract.
     df = df.withColumn("n_bytes_in", F.coalesce(F.length("html"), F.lit(0)))
 
-    # R5 salt.  The salt KEYSPACE is fine (16x exec partitions — guide
-    # §2.5 wants many more distinct keys than partitions so the hash
-    # spreads evenly) but the PARTITION count is n_exec: the giant tail
-    # is a small fraction of rows, and more partitions meant a stage of
-    # mostly-empty tasks (512 tasks for 34 giants on the bench corpus —
-    # ~2 s of pure scheduling).  Per-batch memory is bounded by
-    # arrow.maxRecordsPerBatch, not the partition count; production
-    # widens the spread through spark.sql.shuffle.partitions.
-    n_exec = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-    def spread(part: DataFrame) -> DataFrame:
-        salt = F.pmod(F.xxhash64("url", F.lit(1)), F.lit(n_exec * 16))
-        return (part.withColumn("salt", salt.cast("int"))
-                .repartition(n_exec, F.col("salt")).drop("salt"))
-
     extract_udf = make_extract_udf(pdf_passwords)
 
     def run_extract(part: DataFrame) -> DataFrame:
@@ -401,12 +395,28 @@ def extract_df(
         )
 
     if docs.isStreaming:
-        res = run_extract(spread(df))
+        res = run_extract(df)
     else:
+        # R5 salt.  The salt KEYSPACE is fine (16x exec partitions —
+        # guide §2.5 wants many more distinct keys than partitions so the
+        # hash spreads evenly) but the PARTITION count is n_exec: the
+        # giant tail is a small fraction of rows, and more partitions
+        # meant a stage of mostly-empty tasks (512 tasks for 34 giants on
+        # the bench corpus — ~2 s of pure scheduling).  Per-batch memory
+        # is bounded by arrow.maxRecordsPerBatch, not the partition
+        # count; production widens the spread through
+        # spark.sql.shuffle.partitions.
+        n_exec = int(
+            docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        salt = F.pmod(F.xxhash64("url", F.lit(1)), F.lit(n_exec * 16))
         size = F.col("n_bytes_in")
         small = df.filter(size <= F.lit(DEFAULT_SALT_THRESHOLD))
-        giants = df.filter(size > F.lit(DEFAULT_SALT_THRESHOLD))
-        res = run_extract(small).unionByName(run_extract(spread(giants)))
+        giants = (
+            df.filter(size > F.lit(DEFAULT_SALT_THRESHOLD))
+            .withColumn("salt", salt.cast("int"))
+            .repartition(n_exec, F.col("salt")).drop("salt")
+        )
+        res = run_extract(small).unionByName(run_extract(giants))
     # JVM-side sha256 of the extracted text (codegen'd; the pytest oracle
     # diffs per-url text hashes [D: BASELINE.json north_star])
     return res.withColumn(
@@ -517,59 +527,59 @@ def run(
     final = res.repartition(n_buckets, "bucket")
     write_partitioned(final, os.path.join(out_dir, "extracted"), "bucket")
 
-    # M1/M3: per-bucket stats over ONLY the buckets this run wrote — the
-    # static ~isin predicate prunes completed bucket= directories at the
-    # scan, and the projection never touches text
+    # M1/M3: ONE read-back of the table just written, over ONLY the
+    # buckets this run wrote — the static ~isin predicate prunes
+    # completed bucket= directories at the scan, and the projection
+    # never touches text.  The per-(bucket, fmt, status) cells are
+    # O(buckets x formats) rows; manifests and metrics both derive from
+    # them on the driver.
     out = spark.read.parquet(os.path.join(out_dir, "extracted"))
     fresh = out.filter(~F.col("bucket").isin(skip)) if skip else out
-    ok_cond = F.col("status").isin(*OK_STATUSES)
-    stats = (
-        fresh.groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(ok_cond.cast("int")).alias("n_ok"),
-            F.sum((F.col("status") == "error").cast("int")).alias("n_fail"),
-            F.sum("n_bytes_in").alias("bytes_in"),
-            F.sum("extract_ms").alias("extract_ms"),
-        )
-        .collect()
+    cells = sorted(
+        ((int(r["bucket"]), r["fmt"], r["status"], int(r["n"]),
+          int(r["bytes_in"] or 0), float(r["extract_ms"] or 0.0))
+         for r in fresh.groupBy("bucket", "fmt", "status").agg(
+             F.count("*").alias("n"),
+             F.sum("n_bytes_in").alias("bytes_in"),
+             F.sum("extract_ms").alias("extract_ms"),
+         ).collect()),
+        key=lambda c: c[0],
     )
+    # every bucket this run was responsible for completes, also one
+    # with zero documents (else every rerun re-pays its scan)
+    stats = {b: {"n_docs": 0, "n_ok": 0, "n_fail": 0, "bytes_in": 0,
+                 "extract_ms": 0.0}
+             for b in range(n_buckets) if b not in done}
+    for bucket, _fmt, status, n, bytes_in, ms in cells:
+        s = stats[bucket]
+        s["n_docs"] += n
+        s["n_ok"] += n if status in OK_STATUSES else 0
+        s["n_fail"] += n if status == "error" else 0
+        s["bytes_in"] += bytes_in
+        s["extract_ms"] += ms
     wall_ms = int((time.time() - t0) * 1000)
-    seen = set()
-    for row in stats:
-        seen.add(int(row["bucket"]))
+    for b, s in stats.items():
         mf.write_bucket_manifest(out_dir, {
-            "bucket": int(row["bucket"]), "n_docs": row["n_docs"],
-            "n_ok": row["n_ok"], "n_fail": row["n_fail"],
-            "bytes_in": int(row["bytes_in"] or 0),
+            "bucket": b, **s,
             # per-bucket cost is the summed in-UDF extraction time (real,
             # measured per row); wall_ms stays job-level and says so
-            "extract_ms": round(float(row["extract_ms"] or 0.0), 3),
+            "extract_ms": round(s["extract_ms"], 3),
             "wall_ms": wall_ms, "job_id": jid, "snapshot_id": snap,
         })
-    # buckets this run was responsible for but that hold zero documents
-    # still complete (else every rerun re-pays their scan)
-    for b in range(n_buckets):
-        if b not in seen and b not in done:
-            mf.write_bucket_manifest(out_dir, {
-                "bucket": b, "n_docs": 0, "n_ok": 0, "n_fail": 0,
-                "bytes_in": 0, "extract_ms": 0.0, "wall_ms": wall_ms,
-                "job_id": jid, "snapshot_id": snap,
-            })
     new_buckets = n_buckets - len(skip)
 
-    # M3 failure metrics: per-(bucket, fmt, status) counters for the new
-    # buckets only; dynamic partition overwrite leaves completed buckets'
-    # metric files byte-untouched
-    metrics = fresh.groupBy("bucket", "fmt", "status").agg(
-        F.count("*").alias("n"), F.sum("n_bytes_in").alias("bytes_in")
-    )
+    # M3 failure metrics: the per-(bucket, fmt, status) counters of the
+    # new buckets; dynamic partition overwrite leaves completed buckets'
+    # metric files byte-untouched.  Sorted cells split into contiguous
+    # bucket ranges, one per local scan task.
+    metrics = spark.createDataFrame(
+        [c[:5] for c in cells], METRICS_SCHEMA)
     write_partitioned(metrics, os.path.join(out_dir, "metrics"), "bucket")
 
-    total = sum(r["n_docs"] for r in stats)
+    total = sum(s["n_docs"] for s in stats.values())
     return {
         "job_id": jid, "snapshot_id": snap, "skipped": False,
-        "wall_ms": wall_ms, "n_docs": int(total), "buckets_new": new_buckets,
+        "wall_ms": wall_ms, "n_docs": total, "buckets_new": new_buckets,
         "buckets_done": len(skip) + new_buckets,
     }
 

@@ -51,8 +51,9 @@ def extract_stream(
 
     Skew parity with batch (R5): a giant payload inside a micro-batch
     skews that batch exactly the way the batch job's salting exists to
-    prevent; extract_df sees a streaming frame and spreads the whole
-    micro-batch by the same url-hash salt.
+    prevent.  The dedup's exchange hash-partitions every micro-batch by
+    its key over ``spark.sql.shuffle.partitions`` tasks, and extract_df
+    extracts in those partitions: the one payload shuffle of a stream.
     """
     docs = stream_documents(spark, input_dir, max_files=max_files)
     docs = docs.withWatermark("warc_ts", watermark)

@@ -4,11 +4,9 @@ byte-identity vs the checked-in golden, idempotent resume, skew salting
 
 from __future__ import annotations
 
-import contextlib
 import csv
 import glob
 import gzip
-import io
 import os
 import re
 
@@ -18,6 +16,7 @@ from pyspark.sql import functions as F
 from cc_extract import job as J
 from cc_extract import manifest as mf
 from cc_extract.corpusgen import corpus_df
+from tests.plan_check import formatted_plan, payload_exchanges
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "golden_20000.csv.gz")
 
@@ -116,6 +115,40 @@ def test_resume_refuses_mismatched_config(spark, tmp_path):
     J.run(spark, docs, out_dir, n_buckets=8, resume=False)
     with pytest.raises(ValueError, match="different job"):
         J.run(spark, docs, out_dir, n_buckets=4, resume=True)
+
+
+def test_metrics_and_manifests_match_extracted(spark, tmp_path):
+    """M1/M3: the metrics table holds exactly a per-(bucket, fmt, status)
+    groupBy over the extracted table, and each bucket's manifest holds
+    that bucket's counts and sums — both derived from one read-back."""
+    docs = corpus_df(spark, 400, partitions=4)
+    out_dir = str(tmp_path / "run")
+    J.run(spark, docs, out_dir, n_buckets=8, resume=False)
+    ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
+
+    want = ext.groupBy("bucket", "fmt", "status").agg(
+        F.count("*").alias("n"), F.sum("n_bytes_in").alias("bytes_in"))
+    got = spark.read.parquet(os.path.join(out_dir, "metrics")).select(
+        *want.columns)
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())
+
+    ok = F.col("status").isin(*J.OK_STATUSES).cast("int")
+    per_bucket = ext.groupBy("bucket").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(ok).alias("n_ok"),
+        F.sum((F.col("status") == "error").cast("int")).alias("n_fail"),
+        F.sum("n_bytes_in").alias("bytes_in"),
+        F.sum("extract_ms").alias("extract_ms"),
+    ).collect()
+    manifests = mf.completed_buckets(out_dir)
+    assert sorted(manifests) == list(range(8))
+    assert sum(m["n_docs"] for m in manifests.values()) == ext.count()
+    for r in per_bucket:
+        m = manifests[r["bucket"]]
+        for k in ("n_docs", "n_ok", "n_fail", "bytes_in"):
+            assert m[k] == r[k], (r["bucket"], k)
+        assert m["extract_ms"] == pytest.approx(r["extract_ms"], abs=1e-2)
 
 
 def test_manifest_carries_input_snapshot_lineage(spark, tmp_path):
@@ -271,22 +304,6 @@ def test_dedup_keeps_newest_crawl(spark, tmp_path):
 
 # -------------------------------------------------- plan guard (scale)
 
-def _formatted_plan(res) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        res.explain("formatted")
-    return buf.getvalue()
-
-
-def _payload_exchanges(plan: str) -> int:
-    """Exchanges whose input carries the ``html`` payload column (each
-    formatted Exchange node lists its Input columns)."""
-    return sum(
-        "html" in m.group(1) for m in re.finditer(
-            r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
-    )
-
-
 def test_only_one_payload_shuffle(spark, tmp_path):
     """Scale guard (SURVEY.md §4): exactly one Exchange may carry the
     ``html`` payload column, for a table input and for a WARC segment
@@ -296,8 +313,8 @@ def test_only_one_payload_shuffle(spark, tmp_path):
     from cc_extract.corpusgen import gen_corpus
 
     docs = corpus_df(spark, 100, partitions=2)
-    plan = _formatted_plan(J.pipeline_df(docs, n_buckets=8))
-    assert _payload_exchanges(plan) == 1, (
+    plan = formatted_plan(J.pipeline_df(docs, n_buckets=8))
+    assert payload_exchanges(plan) == 1, (
         f"expected exactly 1 payload shuffle, plan:\n{plan}")
     # stale upstream columns must be pruned at the scan (R1)
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
@@ -308,8 +325,8 @@ def test_only_one_payload_shuffle(spark, tmp_path):
     with open(tmp_path / "seg0.warc.gz", "wb") as f:
         f.write(W.write_warc_gz(recs, segment="seg0"))
     warc_docs = W.read_warc_dir(spark, str(tmp_path))
-    plan = _formatted_plan(J.pipeline_df(warc_docs, n_buckets=8))
-    assert _payload_exchanges(plan) == 1, (
+    plan = formatted_plan(J.pipeline_df(warc_docs, n_buckets=8))
+    assert payload_exchanges(plan) == 1, (
         f"expected exactly 1 payload shuffle, plan:\n{plan}")
 
 
@@ -319,7 +336,7 @@ def test_pruned_scan_on_parquet_input(spark, tmp_path):
     p = str(tmp_path / "docs.parquet")
     corpus_df(spark, 200, partitions=2).write.parquet(p)
     docs = spark.read.parquet(p)
-    plan = _formatted_plan(J.pipeline_df(docs, n_buckets=8))
+    plan = formatted_plan(J.pipeline_df(docs, n_buckets=8))
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m, plan
     assert "html" in m.group(1)

@@ -1,0 +1,97 @@
+"""cc_extract.pydaemon: a Python worker re-reads a zip archive's
+directory only when the archive changed."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+import zipfile
+import zipimport
+
+from cc_extract import pydaemon
+
+
+def _write_zip(path: str, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def _import(importer: zipimport.zipimporter, name: str):
+    spec = importer.find_spec(name)
+    if spec is None:
+        return None
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_unchanged_zip_keeps_its_directory(tmp_path):
+    path = str(tmp_path / "lib.zip")
+    _write_zip(path, {"mod_a": "X = 1\n"})
+    importer = zipimport.zipimporter(path)
+    pydaemon.invalidate_caches(importer)  # first call reads and stamps
+    files = importer._files
+    for _ in range(3):
+        pydaemon.invalidate_caches(importer)
+        assert importer._files is files
+    # a second importer of the archive shares the cached directory
+    other = zipimport.zipimporter(path)
+    pydaemon.invalidate_caches(other)
+    assert other._files is files
+
+
+def test_rewritten_zip_is_reread(tmp_path):
+    path = str(tmp_path / "lib.zip")
+    _write_zip(path, {"mod_a": "X = 1\n"})
+    importer = zipimport.zipimporter(path)
+    pydaemon.invalidate_caches(importer)
+    files = importer._files
+    assert _import(importer, "mod_b") is None
+
+    # new size: a module added to the archive becomes importable
+    _write_zip(path, {"mod_a": "X = 1\n", "mod_b": "Y = 2\n"})
+    pydaemon.invalidate_caches(importer)
+    assert importer._files is not files
+    assert _import(importer, "mod_b").Y == 2
+
+    # same size, new mtime: re-read as well
+    files = importer._files
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    pydaemon.invalidate_caches(importer)
+    assert importer._files is not files
+    assert importer._files == files
+
+    # a removed archive empties the directory, as zipimport does
+    os.remove(path)
+    pydaemon.invalidate_caches(importer)
+    assert importer._files == {}
+
+
+def test_session_workers_keep_pyspark_zip_directory(spark):
+    """In a build_session session every task on one Python worker sees
+    the same directory object for pyspark.zip: the per-task
+    ``importlib.invalidate_caches()`` no longer re-reads it."""
+
+    def probe(_):
+        import os
+        import sys
+        import zipimport
+
+        files = [f._files for f in list(sys.path_importer_cache.values())
+                 if isinstance(f, zipimport.zipimporter) and not f.prefix
+                 and os.path.basename(f.archive) == "pyspark.zip"]
+        # held for the worker's life, so no id is reused by a new dict
+        sys.__dict__.setdefault("_pydaemon_test_held", []).extend(files)
+        yield os.getpid(), tuple(id(f) for f in files)
+
+    rows = (spark.sparkContext.parallelize(range(16), 16)
+            .mapPartitions(probe).collect())
+    by_pid: dict[int, set] = {}
+    for pid, ids in rows:
+        assert ids, "no pyspark.zip importer on the worker path"
+        by_pid.setdefault(pid, set()).add(ids)
+    assert any(n > 1 for n in
+               (sum(p == pid for p, _ in rows) for pid in by_pid)), rows
+    assert all(len(ids) == 1 for ids in by_pid.values()), by_pid

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from cc_extract import streaming
 from cc_extract.corpusgen import corpus_df
 from cc_extract.job import pipeline_df
+from tests.plan_check import payload_exchanges, query_plan
 
 
 def test_stream_matches_batch_hashes(spark, tmp_path):
@@ -105,8 +106,8 @@ def test_stream_salts_giants_within_micro_batch(spark, tmp_path):
     """R5 parity on the stream path: giant payloads inside ONE micro-batch
     must spread across execution partitions even when they share a bucket.
     n_buckets=1 forces every row into bucket 0 and the input is one file,
-    so without the url-hash salt the whole batch (giants included) would
-    extract in a single task."""
+    so without the dedup exchange's url-hash partitioning the whole batch
+    (giants included) would extract in a single task."""
     import datetime as dt
 
     input_dir = str(tmp_path / "in")
@@ -142,6 +143,23 @@ def test_stream_salts_giants_within_micro_batch(spark, tmp_path):
     assert {r["bucket"] for r in giants} == {0}
     files = {r["file"] for r in giants}
     assert len(files) > 1, f"giants all extracted in one task: {files}"
+
+
+def test_stream_has_one_payload_shuffle(spark, tmp_path):
+    """Scale guard on the stream path, the check of
+    test_pipeline.test_only_one_payload_shuffle: the watermark dedup's
+    url-hash exchange is the only Exchange that carries ``html``;
+    extraction runs in its partitions."""
+    input_dir = str(tmp_path / "in")
+    corpus_df(spark, 60, partitions=2).write.parquet(input_dir)
+    q = streaming.extract_stream(spark, input_dir, str(tmp_path / "out"),
+                                 str(tmp_path / "ckpt"), n_buckets=4)
+    q.awaitTermination(240)
+    assert not q.isActive
+    plan = query_plan(spark, q)
+    assert "StreamingDeduplicateWithinWatermark" in plan, plan
+    assert payload_exchanges(plan) == 1, (
+        f"expected exactly 1 payload shuffle, plan:\n{plan}")
 
 
 def test_stateful_domain_stats_across_micro_batches(spark, tmp_path):
