@@ -21,9 +21,9 @@ Each width's PAR is the best time ever recorded at that width
     python -m bench.weather --width 32       # can the host deliver 32?
     python -m bench.weather --width 32 --wait 30 --max-slowdown 1.15
 
-The scaling harness probes at each leg's width before running it and
-records the slowdowns per pair, so a judge can see the weather every
-number was measured under without re-running anything.
+bench.py probes at its width before the timed run and records the
+slowdown, so a reader can see the weather a number was measured under
+without re-running anything.
 """
 
 from __future__ import annotations

@@ -16,6 +16,7 @@ total line, so interleaved runs stay parseable.
 from __future__ import annotations
 
 import argparse
+import importlib.util
 import json
 import os
 import sys
@@ -23,18 +24,17 @@ import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
-STEAL_GATE = 0.02
-N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "20000"))
-CORPUS_PARTS = 128
-CORPUS_DIR = f"/dev/shm/cc_bench_corpus_{N_DOCS}_p{CORPUS_PARTS}"
-
-
-def cpu_jiffies():
-    with open("/proc/stat") as f:
-        vals = list(map(int, f.readline().split()[1:]))
-    return sum(vals), vals[7]
+# The frozen bench.py owns the steal gate, the /proc/stat sampler and the
+# bench corpus; load it by path, since the bench/ package shadows its name.
+_spec = importlib.util.spec_from_file_location(
+    "bench_main", os.path.join(HERE, "bench.py"))
+bench_main = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(bench_main)
+cpu_jiffies, STEAL_GATE = bench_main.cpu_jiffies, bench_main.STEAL_GATE
+CORPUS_DIR = bench_main.CORPUS_DIR
 
 
 def gated_best(run, max_attempts: int, min_clean: int = 2):
@@ -81,14 +81,6 @@ def main() -> None:
     spark = build_session(cpus=args.cpus, app_name="cc_extract-bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     SF_DIR = args.sf_dir
-
-    # corpus-frame queries need the bench corpus
-    def ensure_corpus():
-        if os.path.exists(os.path.join(CORPUS_DIR, "_SUCCESS")):
-            return
-        from cc_extract.corpusgen import corpus_df
-        corpus_df(spark, N_DOCS, partitions=CORPUS_PARTS).write.mode(
-            "overwrite").parquet(CORPUS_DIR)
 
     sf_fns = {
         "q1_pricing_summary": relops.q1_pricing_summary,
@@ -146,7 +138,7 @@ def main() -> None:
     for name in names:
         spark.sparkContext.setJobDescription(name)
         if name in corpus_names:
-            ensure_corpus()
+            bench_main.ensure_corpus(spark)
             docs = spark.read.parquet(CORPUS_DIR)
             if name == "cc_extract_e2e":
                 from cc_extract.job import pipeline_df

@@ -95,13 +95,6 @@ def _lit_vec(v: list[float]):
     return F.array(*[F.lit(float(x)) for x in v])
 
 
-def _cosine(emb_col, qvec: list[float]):
-    qnorm = math.sqrt(sum(x * x for x in qvec))
-    e = emb_col.cast("array<double>")
-    q = _lit_vec(qvec)
-    return _dot(e, q) / (F.sqrt(_dot(e, e)) * F.lit(qnorm))
-
-
 # --- SQL-string twins of the serving expressions (round 6) -------------
 # The serving queries build their scoring expressions as ONE SQL string
 # parsed JVM-side (the _cell_expr_sql precedent): assembling a 64-d

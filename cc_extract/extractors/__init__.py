@@ -15,7 +15,7 @@ the Lambda result JSON [R: functions/simple/main.py ⚠].
 
 from __future__ import annotations
 
-from ..sniff import sniff_format
+from ..sniff import sniff_payload
 from .archive import extract_tar, extract_zip
 from .doc import extract_doc
 from .epub import extract_epub
@@ -95,10 +95,15 @@ def extract_document(payload: bytes | None, url: str | None = None,
     overrides via --pdf-passwords).
 
     Routing (SURVEY.md §2.2 D2–D4, §2.4.3 D3):
-    - images        -> OCR-lite (ocr.py): decodable PNG rasters are
-                       recognized to real text (status=ok_ocr); containers
-                       OCR-lite can't read (JPEG/TIFF, corrupt PNG) land in
-                       the needs_ocr quarantine with the reason in `error`
+    - gzip/bz2/xz   -> unwrapped once and routed on the content
+                       (sniff.sniff_payload); a corrupt or nested wrapper
+                       -> error
+    - images        -> OCR-lite (ocr.py, decoders from the image-container
+                       table in image.py): decodable rasters are
+                       recognized to real text (status=ok_ocr); payloads
+                       OCR-lite can't decode (arithmetic JPEG, corrupt
+                       containers) land in the needs_ocr quarantine with
+                       the reason in `error`
                        (reference's ocr Lambda [R: functions/ocr/main.py ⚠])
     - pdf w/ empty text layer -> OCR-lite over its page-image XObjects
                        (scanned-PDF shape); no recognizable raster ->
@@ -116,31 +121,10 @@ def extract_document(payload: bytes | None, url: str | None = None,
         return {"fmt": "unknown", "status": STATUS_ERROR,
                 "text": "", "error": "empty payload"}
     payload = bytes(payload)
-    fmt = sniff_format(payload, url)
-    if fmt in ("gzip", "bz2", "xz"):
-        # CC stores often hold transfer-encoded bodies (gzip the common
-        # case, bz2/xz the long tail); unwrap and re-dispatch on the
-        # inner content (depth 1 — a wrapper inside a wrapper is treated
-        # as a corrupt payload, not decompressed again)
-        outer = fmt
-        try:
-            if fmt == "gzip":
-                import gzip as _gzip
-                inner = _gzip.decompress(payload)
-            elif fmt == "bz2":
-                import bz2 as _bz2
-                inner = _bz2.decompress(payload)
-            else:
-                import lzma as _lzma
-                inner = _lzma.decompress(payload, format=_lzma.FORMAT_XZ)
-        except Exception as e:  # noqa: BLE001 — corrupt stream -> error row
-            return {"fmt": outer, "status": STATUS_ERROR, "text": "",
-                    "error": repr(e)[:200]}
-        fmt = sniff_format(inner, url)
-        if fmt in ("gzip", "bz2", "xz"):
-            return {"fmt": outer, "status": STATUS_ERROR, "text": "",
-                    "error": f"nested {fmt} in {outer}"}
-        payload = inner
+    fmt, payload, unwrap_error = sniff_payload(payload, url)
+    if unwrap_error:
+        return {"fmt": fmt, "status": STATUS_ERROR, "text": "",
+                "error": unwrap_error}
     if _depth > 0 and fmt in ("zip", "tar"):
         # archive member that is itself an archive: bundles are depth-1
         # by contract; refuse BEFORE recursing (a zip-in-gzip-in-zip

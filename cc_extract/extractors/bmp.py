@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import struct
 
+BMP_MAGIC = b"BM"
 MAX_PIXELS = 1 << 26
 
 
@@ -33,7 +34,7 @@ def looks_like_bmp(payload: bytes) -> bool:
     """Cheap plausibility probe for the sniffer: 'BM' alone is a weak
     2-byte magic (plain text can start with it), so require the fixed
     file header plus a known DIB header size and a sane bit depth."""
-    if len(payload) < 54 or not payload.startswith(b"BM"):
+    if len(payload) < 54 or not payload.startswith(BMP_MAGIC):
         return False
     (dib,) = struct.unpack_from("<I", payload, 14)
     if dib not in _DIB_SIZES:
@@ -74,7 +75,7 @@ def _chan(v: int, shift: int, width: int) -> int:
 
 def decode_bmp(payload: bytes) -> tuple[int, int, bytearray]:
     """BMP decode -> (width, height, 8-bit luma raster, top-down)."""
-    if len(payload) < 54 or not payload.startswith(b"BM"):
+    if len(payload) < 54 or not payload.startswith(BMP_MAGIC):
         raise BmpError("not a BMP")
     (_fsize, _res, off_bits) = struct.unpack_from("<III", payload, 2)
     (dib,) = struct.unpack_from("<I", payload, 14)

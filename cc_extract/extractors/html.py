@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import re
 
+from ..sniff import sniff_payload
 from .charset import decode_bytes
 from .normalize import normalize_text
 
@@ -322,14 +323,17 @@ def _keep_block(text: str, anchor_chars: int, n_tags: int) -> bool:
     return True
 
 
+def _decode_html(payload: bytes) -> str:
+    """bytes -> document text, honoring a ``<meta charset>`` declared in
+    the first 4 KiB (charset.decode_bytes cascade otherwise)."""
+    m = _META_CHARSET.search(payload[:4096])
+    return decode_bytes(payload,
+                        m.group(1).decode("ascii", "ignore") if m else None)
+
+
 def extract_html(payload: bytes) -> str:
     """bytes -> main-content plain text per the normative spec above."""
-    declared = None
-    m = _META_CHARSET.search(payload[:4096])
-    if m:
-        declared = m.group(1).decode("ascii", "ignore")
-    doc = decode_bytes(payload, declared)
-    blocks, _ = _scan_blocks(doc)
+    blocks, _ = _scan_blocks(_decode_html(payload))
     kept = [t for (t, a, n) in blocks if _keep_block(t, a, n)]
     return normalize_text("\n".join(kept))
 
@@ -348,11 +352,7 @@ def extract_html_blocks(payload: bytes) -> list[dict]:
     - spans strictly increasing, non-overlapping, in-bounds;
     - re-scanning doc[start:end] alone reproduces the block's text.
     """
-    declared = None
-    m = _META_CHARSET.search(payload[:4096])
-    if m:
-        declared = m.group(1).decode("ascii", "ignore")
-    return blocks_of_doc(decode_bytes(payload, declared))
+    return blocks_of_doc(_decode_html(payload))
 
 
 def blocks_of_doc(doc: str) -> list[dict]:
@@ -374,33 +374,17 @@ def blocks_of_doc(doc: str) -> list[dict]:
 
 
 def _resolve_html_doc(payload: bytes, url: str | None = None) -> str | None:
-    """Sniff + depth-1 gzip transfer-encoding unwrap + charset decode —
-    the exact routing extract_document applies before the html extractor
-    runs.  Returns the decoded document, or None if the payload does not
-    route to html (or the decode fails — quarantine parity)."""
-    from ..sniff import sniff_format
-
+    """The decoded document if *payload* routes to the html extractor in
+    extract_document (same sniff and depth-1 gzip/bz2/xz unwrap,
+    sniff.sniff_payload), else None."""
     if not payload:
         return None
-    payload = bytes(payload)
-    fmt = sniff_format(payload, url)
-    if fmt == "gzip":
-        import gzip as _gzip
-        import zlib as _zlib
-        try:
-            payload = _gzip.decompress(payload)
-        except (OSError, EOFError, _zlib.error):
-            return None
-        fmt = sniff_format(payload, url)
+    fmt, payload, _ = sniff_payload(bytes(payload), url)
     if fmt != "html":
         return None
     try:
-        declared = None
-        m = _META_CHARSET.search(payload[:4096])
-        if m:
-            declared = m.group(1).decode("ascii", "ignore")
-        return decode_bytes(payload, declared)
-    except Exception:  # noqa: BLE001 — quarantine parity with extract_document
+        return _decode_html(payload)
+    except UnicodeError:  # extract_html raises too: an error row there
         return None
 
 
@@ -453,8 +437,9 @@ def html_meta(payload: bytes, url: str | None = None) -> dict | None:
     batch fn and the DuckDB oracle table builder, the html_span_stats
     pattern):
 
-    - routing parity with extract_document (sniff + depth-1 gzip unwrap
-      + charset decode via ``_resolve_html_doc``; non-html -> None);
+    - routing parity with extract_document (``_resolve_html_doc``: the
+      shared sniff + depth-1 gzip/bz2/xz unwrap, then the charset
+      decode; non-html -> None);
     - FIRST occurrence wins for each field, scanning the whole document
       in order (the WHATWG-shaped simplification: a meta in <body> still
       counts — real crawl HTML routinely leaks head tags past an
@@ -520,8 +505,9 @@ def html_links(payload: bytes, url: str | None = None) -> list[str] | None:
     ``cc_wat_roundtrip`` and the DuckDB oracle table builder, the
     html_meta pattern):
 
-    - routing parity with extract_document (``_resolve_html_doc``;
-      non-html -> None, html with zero anchors -> ``[]``);
+    - routing parity with extract_document (``_resolve_html_doc``,
+      gzip/bz2/xz-wrapped pages included; non-html -> None, html with
+      zero anchors -> ``[]``);
     - an anchor is any ``<a ...>`` start tag carrying an ``href``
       attribute (double-quoted, single-quoted or bare, first href wins
       within a tag — the html_meta attribute convention); charrefs
@@ -559,8 +545,8 @@ def html_robots(payload: bytes, url: str | None = None) -> dict | None:
     batch fn and the DuckDB oracle table builder, the html_meta
     pattern):
 
-    - routing parity with extract_document (``_resolve_html_doc``;
-      non-html -> None);
+    - routing parity with extract_document (``_resolve_html_doc``,
+      gzip/bz2/xz-wrapped pages included; non-html -> None);
     - a robots meta is any ``<meta>`` whose ``name`` equals ``robots``
       case-insensitively (generic only — per-crawler names like
       ``googlebot`` are a documented out-of-scope simplification);
@@ -636,8 +622,8 @@ def html_jsonld(payload: bytes, url: str | None = None) -> dict | None:
     batch fn and the DuckDB oracle table builder, the html_meta
     pattern):
 
-    - routing parity with extract_document (``_resolve_html_doc``;
-      non-html -> None);
+    - routing parity with extract_document (``_resolve_html_doc``,
+      gzip/bz2/xz-wrapped pages included; non-html -> None);
     - a JSON-LD block is any ``<script>`` element whose ``type``
       attribute equals ``application/ld+json`` case-insensitively
       (quote styles and attribute-name case per the html_meta
@@ -729,8 +715,9 @@ def html_tables(payload: bytes, url: str | None = None) -> list[dict] | None:
     batch fn and the DuckDB oracle table builder, the html_meta
     pattern):
 
-    - routing parity with extract_document (``_resolve_html_doc``;
-      non-html -> None, html with zero tables -> ``[]``);
+    - routing parity with extract_document (``_resolve_html_doc``,
+      gzip/bz2/xz-wrapped pages included; non-html -> None, html with
+      zero tables -> ``[]``);
     - one output row per CELL: (table_idx, caption, row_idx, col_idx,
       is_header, cell) — document-order indices, ``col_idx`` positional
       (rowspan/colspan geometry is out of scope, a documented
@@ -786,8 +773,9 @@ def html_headings(payload: bytes, url: str | None = None) -> list[dict] | None:
     batch fn and the DuckDB oracle table builder, the html_meta
     pattern):
 
-    - routing parity with extract_document (``_resolve_html_doc``;
-      non-html -> None, html with zero headings -> ``[]``);
+    - routing parity with extract_document (``_resolve_html_doc``,
+      gzip/bz2/xz-wrapped pages included; non-html -> None, html with
+      zero headings -> ``[]``);
     - one output row per CLOSED ``<hN>...</hN>`` pair in document order:
       (heading_idx, level, heading) — an unclosed heading emits nothing
       (the scanner cannot know where it ends; a documented convention);
@@ -820,8 +808,8 @@ def html_span_stats(payload: bytes, url: str | None = None) -> dict | None:
     contract query — the SINGLE row-semantics implementation both the
     Spark ``mapInPandas`` batch fn and the DuckDB oracle table builder
     call (the extraction_table pattern: shared row code, independently
-    expressed relational layer).  Routing mirrors extract_document
-    exactly (sniff + depth-1 gzip transfer-encoding unwrap); returns
+    expressed relational layer).  Routing is extract_document's own
+    (sniff + depth-1 gzip/bz2/xz unwrap, ``_resolve_html_doc``); returns
     None for documents that do not route to the html extractor, and —
     matching extract_document's never-raises quarantine — for the rare
     payload the extractor would reject."""

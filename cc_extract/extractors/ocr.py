@@ -4,9 +4,8 @@ Reference analogue: the ``ocr`` Lambda — ghostscript rasterizes pages,
 Tesseract recognizes each raster [R: functions/ocr/main.py ⚠].  Here the
 raster arrives two ways, exactly like real scanned inputs do:
 
-- a standalone image document: a real PNG (8-bit grayscale), parsed by the
-  minimal from-scratch PNG reader below (chunk walk, IDAT inflate, filter
-  reconstruction for types 0/1/2);
+- a standalone image document in any container of the image-container
+  table (extractors/image.py), decoded by the from-scratch codecs;
 - a scanned-style PDF: an empty text layer whose pages carry the page
   raster as a ``/Subtype /Image`` FlateDecode grayscale XObject — the
   shape a real scanner-produced PDF has; we pull the raster instead of
@@ -21,76 +20,31 @@ behavior for OCR failures).
 
 from __future__ import annotations
 
-import struct
-import zlib
-
 from ..glyphs import ocr_raster
 from .normalize import normalize_text
-
-PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
 class OcrError(ValueError):
     pass
 
 
-# ------------------------------------------------------------- PNG reader
-
-def decode_png_gray(payload: bytes) -> tuple[int, int, bytearray]:
-    """PNG -> 8-bit luma raster.  Round 4: delegates to the full decoder
-    in extractors/png.py (all five color types, depths 1-16, every
-    scanline filter, Adam7 interlace) — this wrapper only converts the
-    codec error into the OCR-quarantine error the dispatcher keys on.
-    The name is kept for the multimodal/image-stats callers."""
-    from .png import PngError, decode_png
-
-    try:
-        return decode_png(payload)
-    except PngError as e:
-        raise OcrError(str(e)) from e
-
-
-# ----------------------------------------------------------------- public
-
 def extract_image_ocr(payload: bytes) -> str:
     """Image document -> recognized text.  Raises OcrError for containers
-    OCR-lite cannot decode (CCITT/tiled TIFF, arithmetic JPEG, corrupt
-    payloads) — the dispatcher turns that into the needs_ocr quarantine
-    row.  Decoders: the PNG reader below; baseline AND progressive JFIF
-    (gray + YCbCr, restart markers) via the from-scratch T.81 decoder
-    (extractors/jpeg.py); multi-page TIFF (extractors/tiff.py); GIF
-    (extractors/gif.py)."""
-    if payload.startswith(PNG_MAGIC):
-        w, h, raster = decode_png_gray(payload)
-        return normalize_text(ocr_raster(w, h, raster))
-    if payload.startswith(b"\xff\xd8"):
-        from .jpeg import decode_jpeg_gray  # function-level: jpeg imports OcrError
+    OCR-lite cannot decode (arithmetic JPEG, corrupt payloads) — the
+    dispatcher turns that into the needs_ocr quarantine row.  Decoders
+    come from the image-container table (extractors/image.py): PNG,
+    baseline and progressive JPEG, TIFF (every page of a multi-page
+    scan), GIF and BMP."""
+    # function-level: image.py and the codecs import OcrError from here
+    from .image import decode_gray, image_container
+    from .tiff import decode_tiff_pages
 
-        w, h, raster = decode_jpeg_gray(payload)
-        return normalize_text(ocr_raster(w, h, raster))
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiff import decode_tiff_pages
-
-        texts = [ocr_raster(w, h, raster)
-                 for w, h, raster in decode_tiff_pages(payload)]
-        return normalize_text("\n\n".join(t for t in texts if t.strip()))
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gif_gray
-
-        w, h, raster = decode_gif_gray(payload)
-        return normalize_text(ocr_raster(w, h, raster))
-    if payload[:2] == b"BM":
-        from .bmp import BmpError, decode_bmp
-
-        try:
-            w, h, raster = decode_bmp(payload)
-        except BmpError as e:
-            raise OcrError(str(e)) from e
-        return normalize_text(ocr_raster(w, h, raster))
-    raise OcrError(
-        "no decoder for this image container "
-        "(OCR-lite reads PNG/JPEG/TIFF/GIF/BMP)"
-    )
+    if image_container(payload) == "tiff":
+        pages = decode_tiff_pages(payload)
+    else:
+        pages = [decode_gray(payload)]
+    texts = [ocr_raster(w, h, raster) for w, h, raster in pages]
+    return normalize_text("\n\n".join(t for t in texts if t.strip()))
 
 
 def ocr_pdf_rasters(payload: bytes, passwords=None) -> str:

@@ -79,15 +79,3 @@ def write_bucket_manifest(out_dir: str, row: dict) -> None:
     row.setdefault("completed_at", time.time())
     atomic_write_json(os.path.join(d, f"bucket_{int(row['bucket']):06d}.json"), row)
 
-
-def manifest_df(spark, out_dir: str):
-    """Manifests as a DataFrame (the SURVEY.md §1.2 ``manifest`` table)."""
-    rows = list(completed_buckets(out_dir).values())
-    schema = ("bucket int, n_docs long, n_ok long, n_fail long, "
-              "bytes_in long, extract_ms double, wall_ms long, "
-              "job_id string, snapshot_id string, completed_at double")
-    if not rows:
-        return spark.createDataFrame([], schema)
-    cols = ["bucket", "n_docs", "n_ok", "n_fail", "bytes_in", "extract_ms",
-            "wall_ms", "job_id", "snapshot_id", "completed_at"]
-    return spark.createDataFrame([[r.get(c) for c in cols] for r in rows], schema)

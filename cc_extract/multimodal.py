@@ -6,9 +6,10 @@ deterministic synthetic media generator, container-header metadata parsing
 (PNG IHDR, JPEG SOF, WAV fmt — pure byte arithmetic), batch shapes, a
 deterministic feature extractor (byte-histogram embedding) that stands in
 for a model forward pass, and — since round 4 — ACTUAL pixel decode:
-``decode_image`` dispatches to the repo's own from-scratch
-PNG/JPEG/TIFF/GIF decoders (the container ships no imaging libs, so the
-engine brings its own), and the media generator emits real decodable
+``decode_image`` (``extractors.image.decode_gray``) dispatches through
+the image-container table to the repo's own from-scratch
+PNG/JPEG/TIFF/GIF/BMP decoders (the container ships no imaging libs, so
+the engine brings its own), and the media generator emits real decodable
 images alongside header-only stubs so the decoded and quarantined paths
 are both exercised.
 
@@ -32,6 +33,9 @@ import zlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from .extractors.image import decode_gray as decode_image, image_container
+from .textops import banded_hamming_pairs
 
 MEDIA_SCHEMA = "media_id long, kind string, payload binary"
 META_SCHEMA = ("media_id long, kind string, container string, width int, "
@@ -1256,11 +1260,12 @@ def parse_media_meta(payload: bytes) -> dict:
     """Container-header metadata by byte arithmetic — no decode libs."""
     out = {"container": "unknown", "width": None, "height": None,
            "sample_rate": None, "parse_ok": False}
+    tag = image_container(payload)
     try:
-        if payload.startswith(b"\x89PNG\r\n\x1a\n") and payload[12:16] == b"IHDR":
+        if tag == "png" and payload[12:16] == b"IHDR":
             w, h = struct.unpack(">II", payload[16:24])
             out.update(container="png", width=w, height=h, parse_ok=True)
-        elif payload.startswith(b"\xff\xd8"):
+        elif tag == "jpeg":
             pos = 2
             while pos + 4 < len(payload):
                 if payload[pos] != 0xFF:
@@ -1274,7 +1279,7 @@ def parse_media_meta(payload: bytes) -> dict:
                 pos += 2 + seglen
             else:
                 out.update(container="jpeg")
-        elif payload[:4] in (b"II*\x00", b"MM\x00*"):
+        elif tag == "tiff":
             e = "<" if payload[:2] == b"II" else ">"
             (ifd,) = struct.unpack_from(e + "I", payload, 4)
             (n_tags,) = struct.unpack_from(e + "H", payload, ifd)
@@ -1290,7 +1295,7 @@ def parse_media_meta(payload: bytes) -> dict:
                     h = val
             out.update(container="tiff", width=w, height=h,
                        parse_ok=w is not None and h is not None)
-        elif payload[:6] in (b"GIF87a", b"GIF89a"):
+        elif tag == "gif":
             w, h = struct.unpack_from("<HH", payload, 6)
             out.update(container="gif", width=w, height=h, parse_ok=True)
         elif payload.startswith(b"RIFF") and payload[8:12] == b"AVI ":
@@ -1465,7 +1470,7 @@ def parse_exif(payload: bytes) -> dict:
     out = {"has_exif": False, "exif_ok": None, "exif_orientation": None,
            "exif_make": None, "exif_dt": None, "exif_w": None,
            "exif_h": None}
-    if not payload.startswith(b"\xff\xd8"):
+    if image_container(payload) != "jpeg":
         return out
     pos = 2
     while pos + 4 <= len(payload):
@@ -1560,53 +1565,11 @@ def exif_stats(df: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------------- features
 
-def image_container(payload: bytes) -> str:
-    """Container tag by magic — shared by the Spark path and the oracle."""
-    if payload.startswith(b"\x89PNG\r\n\x1a\n"):
-        return "png"
-    if payload.startswith(b"\xff\xd8"):
-        return "jpeg"
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        return "tiff"
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return "gif"
-    return "other"
-
-
-def decode_image(payload: bytes) -> tuple[int, int, bytearray]:
-    """REAL pixel decode (round 4, formerly the repo's one gated stub):
-    dispatches to the from-scratch PNG / JPEG (baseline + progressive +
-    restart) / TIFF (LZW, PackBits, fax, tiled, multi-page) / GIF
-    decoders under ``extractors/``.  Returns (width, height, grayscale
-    raster); raises ``OcrError`` for non-image or undecodable payloads —
-    callers count those, the same honest quarantine as the OCR route.
-    A production deployment could still swap in a JNI/PIL decoder here;
-    nothing downstream would notice."""
-    from .extractors.ocr import OcrError, decode_png_gray
-
-    tag = image_container(payload)
-    if tag == "png":
-        return decode_png_gray(payload)
-    if tag == "jpeg":
-        from .extractors.jpeg import decode_jpeg_gray
-
-        return decode_jpeg_gray(payload)
-    if tag == "tiff":
-        from .extractors.tiff import decode_tiff_gray
-
-        return decode_tiff_gray(payload)
-    if tag == "gif":
-        from .extractors.gif import decode_gif_gray
-
-        return decode_gif_gray(payload)
-    raise OcrError("no image decoder for this container")
-
-
 def image_row_stats(payload: bytes) -> dict:
     """Per-row decode outcome + raster statistics — the single normative
     implementation both the Spark mapInPandas path and the single-process
     oracle table call."""
-    out = {"container": image_container(payload), "dec_ok": False,
+    out = {"container": image_container(payload) or "other", "dec_ok": False,
            "dec_w": None, "dec_h": None, "dec_mean_luma": None,
            "dec_ink_frac": None}
     try:
@@ -2015,8 +1978,7 @@ def _decode_video(payload: bytes):
     both ride so their decode outcomes can never disagree."""
     is_avi = payload[:4] == b"RIFF" and payload[8:12] == b"AVI "
     is_mp4 = len(payload) >= 16 and payload[4:8] == b"ftyp"
-    if payload[:6] not in (b"GIF87a", b"GIF89a") and not is_avi \
-            and not is_mp4:
+    if image_container(payload) != "gif" and not is_avi and not is_mp4:
         return None
     try:
         if is_avi:
@@ -2091,7 +2053,7 @@ def video_decode_stats(df: DataFrame) -> DataFrame:
                 if kind != "video":
                     continue
                 b = bytes(p)
-                if b[:6] in (b"GIF87a", b"GIF89a"):
+                if image_container(b) == "gif":
                     cont = "gif"
                 elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
                     cont = "avi"
@@ -2213,7 +2175,7 @@ def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
                 if kind != "video":
                     continue
                 b = bytes(p)
-                if b[:6] in (b"GIF87a", b"GIF89a"):
+                if image_container(b) == "gif":
                     try:
                         n_frames = gif_frame_count(b)
                     except Exception:
@@ -2452,59 +2414,9 @@ def phash_near_dups(df: DataFrame) -> DataFrame:
     images the same plan widens the signature to 256 bits, exactly the
     simhash_near_dups discussion."""
     sig = image_phash(df).localCheckpoint()
-    return banded_hamming_pairs(sig, "phash")
-
-
-def banded_hamming_pairs(
-    sig: DataFrame,
-    hash_col: str,
-    n_bands: int = PHASH_BANDS,
-    max_hamming: int = PHASH_MAX_HAMMING,
-) -> DataFrame:
-    """Shared banded near-dup join over a (media_id, <hash>) signature
-    relation: 4x16-bit band equi-join, bit_count verify on candidates —
-    the one physical plan behind image pHash and audio fingerprint
-    dedup (and textops.simhash_near_dups, which predates this helper).
-    Signatures must keep bit 63 clear so the band shifts are sign-safe
-    in both engines."""
-    bw = 64 // n_bands
-    bands = sig.select(
-        "media_id",
-        hash_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(hash_col, b * bw)
-                    .bitwiseAND(F.lit((1 << bw) - 1))
-                    .alias("key"),
-                )
-                for b in range(n_bands)
-            ])
-        ).alias("bk"),
-    ).select("media_id", hash_col, "bk.band", "bk.key")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-            F.col(f"a.{hash_col}").alias("pa"),
-            F.col(f"b.{hash_col}").alias("pb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
-    return (
-        cand.filter(hamming <= max_hamming)
-        .select("media_a", "media_b", hamming.cast("int").alias("hamming"))
-        .orderBy("media_a", "media_b")
-    )
+    return banded_hamming_pairs(
+        sig, "media_id", "phash", ("media_a", "media_b"), PHASH_BANDS,
+        PHASH_MAX_HAMMING).orderBy("media_a", "media_b")
 
 
 # ------------------------------------------------------ audio fingerprint
@@ -2576,4 +2488,6 @@ def afp_near_dups(df: DataFrame) -> DataFrame:
     join (shared plan: banded_hamming_pairs) finds the pairs without an
     all-pairs scan.  Same scale shape as the image path."""
     sig = audio_afp(df).localCheckpoint()
-    return banded_hamming_pairs(sig, "afp")
+    return banded_hamming_pairs(
+        sig, "media_id", "afp", ("media_a", "media_b"), PHASH_BANDS,
+        PHASH_MAX_HAMMING).orderBy("media_a", "media_b")

@@ -42,8 +42,16 @@ def build_session(
     # scale with core count, which would understate scaling efficiency —
     # on a real cluster every executor brings its own shuffle disks.
     local_dir = "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp/spark-local"
+    # Workers fork from cc_extract.pydaemon, so they must import
+    # cc_extract before any task: hand them the directory that holds it,
+    # which a driver may know only through its own sys.path
+    extra_conf = dict(extra_conf or {})
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = extra_conf.get("spark.executorEnv.PYTHONPATH")
+    extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        [pkg_parent] + ([worker_path] if worker_path else []))
     builder = SparkSession.builder
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return (
         builder.master(master)
@@ -92,8 +100,8 @@ def build_session(
         # Safe because an archive whose (mtime, size) changed is still
         # re-read, so --py-files added mid-application import as before.
         # Needs cc_extract importable by the workers' interpreter before
-        # any task runs, as the extraction UDFs already do (README,
-        # "Running", for spark-submit --py-files).
+        # any task runs: spark.executorEnv.PYTHONPATH above in local
+        # mode (README, "Running", for spark-submit --py-files).
         .config("spark.python.daemon.module", "cc_extract.pydaemon")
         .getOrCreate()
     )

@@ -6,18 +6,20 @@ upgraded to content sniffing per the north rule ("dispatch on sniffed
 MIME/magic-bytes" [D: BASELINE.json north_star]) because Common-Crawl URLs
 lie about extensions.  Extension is kept only as a tiebreaker (csv vs txt).
 
-Two stages (§2.2 D2):
-(a) a cheap native prefix hint usable JVM-side for grouping/metrics —
-    ``fmt_hint_col()`` below builds the ``F.when`` ladder on
-    ``substring(html, 1, 8)``; whole-stage-codegen'd, zero Python;
-(b) the exact sniff ``sniff_format()`` inside the vectorized UDF — the zip
-    central-directory probe that distinguishes docx/pptx/xlsx/odt needs to
-    open the archive, which only the Python side does.
+One sniff stage (§2.2 D2), ``sniff_format()`` inside the vectorized UDF:
+the zip central-directory probe that distinguishes docx/pptx/xlsx/odt
+needs to open the archive, which only the Python side does.
+``sniff_payload()`` adds the depth-1 transfer-encoding unwrap; every
+consumer that routes a payload (``extract_document`` and the html row
+functions) goes through it, so they cannot disagree on what a payload is.
 """
 
 from __future__ import annotations
 
+import bz2
+import gzip
 import io
+import lzma
 import re
 import zipfile
 
@@ -26,10 +28,14 @@ FORMATS = (
     "doc xls ppt msg ole zip tar ps unknown".split()
 )
 
-# transport/compression wrappers the dispatcher unwraps (depth 1) before
-# re-sniffing the inner content; all three appear as stored
-# transfer-encodings in real CC-style corpora
-WRAPPER_FORMATS = ("gzip", "bz2", "xz")
+# transport/compression wrappers sniff_payload unwraps (depth 1) before
+# re-sniffing the inner content, each with its decompressor; all three
+# appear as stored transfer-encodings in real CC-style corpora
+WRAPPER_FORMATS = {
+    "gzip": gzip.decompress,
+    "bz2": bz2.decompress,
+    "xz": lambda b: lzma.decompress(b, format=lzma.FORMAT_XZ),
+}
 
 _EML_HEADER = re.compile(
     rb"^(Received|From|To|Subject|Date|Return-Path|MIME-Version|"
@@ -119,17 +125,11 @@ def sniff_format(payload: bytes, url: str | None = None) -> str:
         from .extractors.doc import ole_subtype
 
         return ole_subtype(payload)
-    if head.startswith((b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff", b"GIF87a", b"GIF89a")):
-        return "image"
-    if head.startswith((b"II*\x00", b"MM\x00*")):
-        return "image"  # TIFF
-    if head.startswith(b"BM"):
-        # 'BM' is a weak 2-byte magic (text can start with it): require
-        # a known DIB header size + sane bit depth before claiming image
-        from .extractors.bmp import looks_like_bmp
+    # function-level: the extractors package imports this module
+    from .extractors.image import image_container
 
-        if looks_like_bmp(payload):
-            return "image"
+    if image_container(payload) is not None:
+        return "image"
     if _looks_like_tar(payload):
         return "tar"
     stripped = head.lstrip(b" \t\r\n\xef\xbb\xbf")
@@ -148,27 +148,23 @@ def sniff_format(payload: bytes, url: str | None = None) -> str:
     return "txt"
 
 
-def fmt_hint_col(html_col="html"):
-    """Stage (a): native prefix hint column (JVM-side, codegen'd).
+def sniff_payload(payload: bytes, url: str | None = None) -> tuple[str, bytes, str]:
+    """Sniff, unwrap one gzip/bz2/xz transfer encoding, re-sniff.
 
-    Groups rows for metrics / skew accounting without any Python.  The
-    exact per-row format is still decided by ``sniff_format`` in the UDF —
-    this hint only needs to be cheap and mostly-right.
-    """
-    from pyspark.sql import functions as F
-
-    prefix = F.substring(F.col(html_col), 1, 8)
-    p4 = F.substring(F.col(html_col), 1, 4)
-    return (
-        F.when(p4 == F.lit(b"%PDF"), "pdf")
-        .when(p4 == F.lit(b"PK\x03\x04"), "zip")
-        .when(F.substring(F.col(html_col), 1, 5) == F.lit(b"{\\rtf"), "rtf")
-        .when(p4 == F.lit(b"\xd0\xcf\x11\xe0"), "doc")
-        .when(p4 == F.lit(b"\x89PNG"), "image")
-        .when(F.substring(F.col(html_col), 1, 3) == F.lit(b"\xff\xd8\xff"), "image")
-        .when((p4 == F.lit(b"II*\x00")) | (p4 == F.lit(b"MM\x00*")), "image")
-        .when(p4 == F.lit(b"GIF8"), "image")
-        .when(F.substring(F.col(html_col), 1, 2) == F.lit(b"BM"), "image")
-        .when(prefix.cast("string").startswith("<"), "markup")
-        .otherwise("text")
-    )
+    Returns ``(fmt, content, error)``.  CC stores often hold
+    transfer-encoded bodies (gzip the common case, bz2/xz the long tail),
+    so a wrapped payload is decompressed and ``fmt`` is its content's
+    format.  The unwrap is depth 1: a corrupt wrapper, or a wrapper inside
+    a wrapper, returns the outer wrapper as ``fmt`` with the reason in
+    ``error`` (never raises)."""
+    fmt = sniff_format(payload, url)
+    if fmt not in WRAPPER_FORMATS:
+        return fmt, payload, ""
+    try:
+        inner = WRAPPER_FORMATS[fmt](payload)
+    except Exception as e:  # noqa: BLE001 — corrupt stream -> error row
+        return fmt, payload, repr(e)[:200]
+    inner_fmt = sniff_format(inner, url)
+    if inner_fmt in WRAPPER_FORMATS:
+        return fmt, payload, f"nested {inner_fmt} in {fmt}"
+    return inner_fmt, inner, ""

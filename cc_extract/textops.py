@@ -641,7 +641,8 @@ def simhash_near_dups(
     column into a dedup operator (Manku et al., WWW'07 banding scheme):
     split the signature into ``SIMHASH_BANDS`` equal bit-bands, equi-join
     on (band, band_bits), then verify Hamming distance via
-    ``bit_count(sim_a ^ sim_b) <= max_hamming`` on the candidates only.
+    ``bit_count(sim_a ^ sim_b) <= max_hamming`` on the candidates only
+    (``banded_hamming_pairs``, the join the image and audio near-dups share).
     By pigeonhole the banding is COMPLETE for max_hamming <= BANDS - 1:
     k flipped bits can touch at most k bands, so every qualifying pair
     shares at least one intact band.
@@ -653,7 +654,6 @@ def simhash_near_dups(
     band, so random collisions stay ~n^2/2^17 instead of the 16-key
     quadratic blow-up the 16-bit demo hit at sf0.1 (10.9 s -> band
     buckets hold near-dups, not 1/16th of the corpus)."""
-    bw = SIMHASH_BITS // SIMHASH_BANDS
     # materialize the signature relation once: the band self-join's
     # broadcast branch would otherwise recompute the whole
     # tokenize->hash->64-sum pipeline a second time (broadcast exchanges
@@ -667,42 +667,58 @@ def simhash_near_dups(
     # the pinned partitions, and the eager variant only added a
     # blocking pre-job (1.30 -> 1.18 s avg over 3 interleaved pairs).
     sig = simhash(spark, sf_dir).localCheckpoint(eager=False)
+    return banded_hamming_pairs(sig, "doc_id", "simhash", ("doc_a", "doc_b"),
+                                SIMHASH_BANDS, max_hamming)
+
+
+def banded_hamming_pairs(sig: DataFrame, id_col: str, hash_col: str,
+                         pair_cols: tuple[str, str], n_bands: int,
+                         max_hamming: int) -> DataFrame:
+    """Banded Hamming near-dup join over an ``(id_col, hash_col)``
+    signature relation of 64-bit hashes — the one physical plan behind
+    SimHash text dedup, image pHash and audio fingerprint dedup: split
+    each hash into ``n_bands`` equal bit-bands, equi-join on (band,
+    band bits), keep ``a < b``, verify ``bit_count(a ^ b) <= max_hamming``
+    on the candidates only.  Returns ``(*pair_cols, hamming)``, unordered.
+
+    The band key is ``(hash >> band * width) & (2^width - 1)``, which the
+    mask makes sign-safe for any long."""
+    bw = 64 // n_bands
     bands = sig.select(
-        "doc_id",
-        "simhash",
+        id_col,
+        hash_col,
         F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("simhash", b * bw)
-                        .bitwiseAND(F.lit((1 << bw) - 1))
-                        .alias("key"),
-                    )
-                    for b in range(SIMHASH_BANDS)
-                ]
-            )
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.shiftright(hash_col, b * bw)
+                    .bitwiseAND(F.lit((1 << bw) - 1))
+                    .alias("key"),
+                )
+                for b in range(n_bands)
+            ])
         ).alias("bk"),
-    ).select("doc_id", "simhash", "bk.band", "bk.key")
+    ).select(id_col, hash_col, "bk.band", "bk.key")
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
+            F.col(f"a.{id_col}").alias(pair_cols[0]),
+            F.col(f"b.{id_col}").alias(pair_cols[1]),
+            F.col(f"a.{hash_col}").alias("ha"),
+            F.col(f"b.{hash_col}").alias("hb"),
         )
         .distinct()
     )
+    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
     return (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+        cand.filter(hamming <= max_hamming)
+        .select(*pair_cols, hamming.cast("int").alias("hamming"))
     )
 
 

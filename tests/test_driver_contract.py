@@ -5,12 +5,13 @@ execute and return a stable schema (SURVEY.md §5.4)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 from tests.driver_contract_check import TABLES, check_one  # noqa: E402
 

@@ -4,9 +4,10 @@ never invent them, and recall must rise monotonically with bands."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from cc_extract import embedops  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -490,7 +490,7 @@ def test_ocr_png_filter_reconstruction():
     filter-0 (robustness beyond our own writer)."""
     import struct
     import zlib as _z
-    from cc_extract.extractors.ocr import decode_png_gray
+    from cc_extract.extractors.image import decode_gray
     from cc_extract.glyphs import render_raster
 
     w, h, raster = render_raster("AB")
@@ -516,7 +516,7 @@ def test_ocr_png_filter_reconstruction():
            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
            + chunk(b"IDAT", _z.compress(bytes(scan)))
            + chunk(b"IEND", b""))
-    w2, h2, out = decode_png_gray(png)
+    w2, h2, out = decode_gray(png)
     assert (w2, h2) == (w, h)
     assert bytes(out) == bytes(raster)
 

@@ -10,16 +10,19 @@ Invariants pinned here:
 3. self-containment: re-scanning doc[start:end] alone reproduces the
    block's visible text (no block-tag event can occur inside a span —
    it would have flushed — so a span is a closed visible-text region);
-4. the stats row both engines share (html_span_stats) never raises and
-   is gzip-transfer-encoding transparent;
+4. the stats row both engines share (html_span_stats) never raises, and
+   every html row function is gzip/bz2/xz transfer-encoding transparent;
 5. the output schemas of the seven html operators (cc_extract.job) and of
    their oracle tables (cc_extract.oracle_data) are pinned literally.
 """
 
 from __future__ import annotations
 
+import bz2
 import gzip
+import lzma
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from cc_extract.corpusgen import gen_corpus
@@ -127,17 +130,29 @@ def test_span_stats_never_raises_on_arbitrary_bytes(payload):
             assert s["last_kept_end"] is None
 
 
-def test_span_stats_gzip_transparent():
-    hits = 0
+HTML_ROW_FNS = ("html_span_stats", "html_meta", "html_links", "html_robots",
+                "html_jsonld", "html_block_rows", "html_tables",
+                "html_headings")
+WRAPPERS = {
+    "gzip": lambda b: gzip.compress(b, compresslevel=6, mtime=0),
+    "bz2": lambda b: bz2.compress(b, compresslevel=6),
+    "xz": lambda b: lzma.compress(b, format=lzma.FORMAT_XZ, preset=6),
+}
+
+
+@pytest.mark.parametrize("wrapper", sorted(WRAPPERS))
+def test_html_rows_are_wrapper_transparent(wrapper):
+    """Every html row function routes like extract_document: a page stored
+    gzip/bz2/xz transfer-encoded yields the rows of the bare page."""
+    from cc_extract.extractors import html
+
     for p in CORPUS_HTML[:40]:
-        inner = html_span_stats(p)
-        wrapped = html_span_stats(
-            gzip.compress(p, compresslevel=6, mtime=0)
-        )
-        if inner is not None:
-            assert wrapped == inner
-            hits += 1
-    assert hits > 10
+        wrapped = WRAPPERS[wrapper](p)
+        for name in HTML_ROW_FNS:
+            fn = getattr(html, name)
+            bare = fn(p)
+            assert bare is not None, name
+            assert fn(wrapped) == bare, name
 
 
 def test_block_rows_pin_blocks_exactly():

@@ -48,27 +48,41 @@ def test_parse_garbage_never_raises():
 
 def test_decode_image_is_real():
     """Round 4: the decode seam is no longer a stub — the repo's own
-    codecs decode PNG/JPEG(baseline+progressive)/TIFF(LZW/G4)/GIF image
-    payloads to rasters; undecodable payloads raise OcrError (counted as
-    quarantine, never hidden)."""
-    from cc_extract.corpusgen import (_gif_gray, _jpeg_gray,
+    codecs decode every corpusgen image writer's payload (PNG, baseline
+    and progressive JPEG, LZW and G4 TIFF, GIF, BMP) to the raster the
+    OCR route reads: extract_document recognizes exactly the text of
+    decode_image's raster.  Undecodable payloads raise OcrError (counted
+    as quarantine, never hidden)."""
+    import random
+
+    from cc_extract.corpusgen import (_bmp_gray, _gif_gray, _jpeg_gray,
                                       _jpeg_progressive, _png_gray,
                                       _tiff_gray)
+    from cc_extract.extractors import extract_document
+    from cc_extract.extractors.normalize import normalize_text
     from cc_extract.extractors.ocr import OcrError
-    from cc_extract.glyphs import render_raster
+    from cc_extract.glyphs import ocr_raster, render_raster
 
     w, h, raster = render_raster("DECODE SEAM 42")
-    encoders = [
-        lambda: _png_gray(w, h, bytes(raster)),
-        lambda: _jpeg_gray(w, h, bytes(raster)),
-        lambda: _jpeg_progressive(w, h, bytes(raster)),
-        lambda: _tiff_gray(w, h, bytes(raster), lzw=True, predictor=2),
-        lambda: _tiff_gray(w, h, bytes(raster), g4=True),
-        lambda: _gif_gray(w, h, bytes(raster), color=True),
-    ]
-    for enc in encoders:
-        dw, dh, _r = mm.decode_image(enc())
-        assert (dw, dh) == (w, h)
+    encoders = {
+        "png": lambda: _png_gray(w, h, bytes(raster)),
+        "jpeg": lambda: _jpeg_gray(w, h, bytes(raster)),
+        "jpeg-progressive": lambda: _jpeg_progressive(w, h, bytes(raster)),
+        "tiff-lzw": lambda: _tiff_gray(w, h, bytes(raster), lzw=True,
+                                       predictor=2),
+        "tiff-g4": lambda: _tiff_gray(w, h, bytes(raster), g4=True),
+        "gif": lambda: _gif_gray(w, h, bytes(raster), color=True),
+        "bmp": lambda: _bmp_gray(w, h, bytes(raster), random.Random(7)),
+    }
+    for name, enc in encoders.items():
+        payload = enc()
+        dw, dh, dec = mm.decode_image(payload)
+        assert (dw, dh) == (w, h), name
+        assert mm.image_row_stats(payload)["container"] == name.split("-")[0]
+        res = extract_document(payload)
+        assert res["status"] == "ok_ocr", (name, res)
+        assert res["text"] == normalize_text(ocr_raster(dw, dh, dec)), name
+        assert res["text"] == "DECODE SEAM 42", name
     with pytest.raises(OcrError):
         mm.decode_image(b"\x89PNG\r\n\x1a\n" + b"junk")
     with pytest.raises(OcrError):

@@ -22,11 +22,12 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -95,3 +95,29 @@ def test_session_workers_keep_pyspark_zip_directory(spark):
     assert any(n > 1 for n in
                (sum(p == pid for p, _ in rows) for pid in by_pid)), rows
     assert all(len(ids) == 1 for ids in by_pid.values()), by_pid
+
+
+def test_driver_outside_checkout_runs_python_tasks(tmp_path):
+    """A driver that finds cc_extract only through its own sys.path (a
+    script run from another directory) still runs Python tasks:
+    build_session hands the checkout to the workers, which fork from
+    cc_extract.pydaemon and must import it before any task."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "driver.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from cc_extract.session import build_session\n"
+        "spark = build_session(cpus=2)\n"
+        "print('COUNT', spark.range(100).rdd.map(lambda x: x).count())\n"
+        "spark.stop()\n")
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    out = subprocess.run([sys.executable, str(script)], cwd=str(tmp_path),
+                         env=env, capture_output=True, text=True,
+                         timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "COUNT 100" in out.stdout, out.stdout[-2000:]

@@ -36,7 +36,7 @@ spark.stop()
 
 
 def test_spark_submit_with_py_files(tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from scripts.package import build
 
     zip_path = build(str(tmp_path / "cc_extract.zip"))

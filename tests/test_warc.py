@@ -139,6 +139,7 @@ def test_corpus_zip_bytes_deterministic_across_processes():
     corpus BYTES (not text) differed between processes — caught by the
     WARC round-trip oracle, invisible to every text-level check."""
     import hashlib
+    import os
     import subprocess
     import sys
 
@@ -151,8 +152,9 @@ def test_corpus_zip_bytes_deterministic_across_processes():
         "import hashlib\nfrom cc_extract.corpusgen import gen_corpus\n"
         "print(hashlib.sha256(b''.join(r['html'] for r in gen_corpus(60))).hexdigest())"
     )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sub = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                         text=True, cwd="/root/repo", check=True)
+                         text=True, cwd=repo, check=True)
     assert sub.stdout.strip() == local
 
 
