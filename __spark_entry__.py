@@ -106,8 +106,8 @@ def _cc_zratio_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     random-ish output) around 'normal' — the cheap corpus-hygiene dial
     the C4/CCNet lineage applies before any model-based scoring.
 
-    The compressed size comes from one Arrow-batched mapInPandas pass
-    calling textops.zlib_len (zlib is C-speed; the batch never moves
+    The compressed size comes from one row pass (job.rows_df) calling
+    textops.zlib_len (zlib is C-speed; the pass never moves
     payload bytes — only extracted text already materialized by the
     shared pipeline relation), then a partial-aggregable groupBy on
     O(fmt x 3) keys.  The oracle table stores z_len computed by the
@@ -116,22 +116,17 @@ def _cc_zratio_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     each one IEEE op on exact BIGINTs.  Scale: at 100 TB this is a
     map-only pass over extracted text + a tiny rollup — no shuffle of
     anything but the O(groups) partials."""
+    from cc_extract.job import rows_df
     from cc_extract.textops import (ZRATIO_INCOMPRESSIBLE,
                                     ZRATIO_REPETITIVE, zlib_len)
 
     _, res = _cc_corpus_and_extracted(spark)
     ok = res.filter(F.col("status").startswith("ok")
                     & (F.octet_length("text_out") > 0))
-
-    def z_batches(batches):
-        for pdf in batches:
-            out = pdf[["fmt"]].copy()
-            out["raw_len"] = [len(t.encode("utf-8")) for t in pdf["text_out"]]
-            out["z_len"] = [zlib_len(t) for t in pdf["text_out"]]
-            yield out
-
-    per = ok.select("fmt", "text_out").mapInPandas(
-        z_batches, "fmt string, raw_len long, z_len long")
+    per = rows_df(
+        ok, ("fmt",), ("text_out",),
+        lambda t: {"raw_len": len(t.encode("utf-8")), "z_len": zlib_len(t)},
+        "raw_len long, z_len long")
     ratio = F.col("z_len") / F.col("raw_len")
     zclass = (
         F.when(ratio < ZRATIO_REPETITIVE, "repetitive")
@@ -404,6 +399,28 @@ def _cc_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _write_segments(seg: DataFrame, value: str, write) -> DataFrame:
+    """(seg_id, warc) — one segment blob per seg_id group of *seg*
+    (seg_id, url, warc_ts, *value*): the group's records sorted by
+    (url, warc_ts), written by ``write(records, segment=...)`` (a
+    warc.write_*_gz writer) from (url, crawl datetime, *value*) triples.
+    Per-segment grain: parallelism = segment count, O(segment) memory."""
+    import pandas as pd
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["url", "warc_ts"])
+        seg_id = int(pdf["seg_id"].iloc[0])
+        blob = write(
+            ((u, t.to_pydatetime(), v) for u, t, v in
+             zip(pdf["url"], pdf["warc_ts"], pdf[value])),
+            segment=f"seg{seg_id}",
+        )
+        return pd.DataFrame({"seg_id": [seg_id], "warc": [blob]})
+
+    return seg.groupBy("seg_id").applyInPandas(
+        build, schema="seg_id long, warc binary")
+
+
 def _cc_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real WARC/1.0 container round-trip (cc_extract/warc.py): the
     corpus is grouped into 16 url-hashed segments, each serialized as a
@@ -416,8 +433,6 @@ def _cc_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, so any loss or corruption anywhere in writer OR reader breaks
     the hash.  Reader-independence from the writer is pinned separately
     by spec-transcribed fixture bytes in tests/test_warc.py."""
-    import pandas as pd
-
     from cc_extract import warc as W
 
     docs, _ = _cc_corpus_and_extracted(spark)
@@ -425,20 +440,7 @@ def _cc_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.xxhash64("url"), F.lit(16)).alias("seg_id"),
         "url", "warc_ts", "html",
     )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["url", "warc_ts"])
-        seg_id = int(pdf["seg_id"].iloc[0])
-        blob = W.write_warc_gz(
-            ((u, t.to_pydatetime(), bytes(h)) for u, t, h in
-             zip(pdf["url"], pdf["warc_ts"], pdf["html"])),
-            segment=f"seg{seg_id}",
-        )
-        return pd.DataFrame({"seg_id": [seg_id], "warc": [blob]})
-
-    seg_df = seg.groupBy("seg_id").applyInPandas(
-        build, schema="seg_id long, warc binary"
-    )
+    seg_df = _write_segments(seg, "html", W.write_warc_gz)
     rec = W.records_df(seg_df).filter(F.col("rec_type") == "response")
     return rec.select(
         "url",
@@ -461,8 +463,6 @@ def _cc_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mojibake in the WET writer OR reader breaks the hash.  Scale shape
     identical to cc_warc_roundtrip: per-segment grain, parallelism =
     segment count."""
-    import pandas as pd
-
     from cc_extract import warc as W
 
     _, res = _cc_corpus_and_extracted(spark)
@@ -470,20 +470,7 @@ def _cc_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.xxhash64("url"), F.lit(16)).alias("seg_id"),
         "url", "warc_ts", "text_out",
     )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["url", "warc_ts"])
-        seg_id = int(pdf["seg_id"].iloc[0])
-        blob = W.write_wet_gz(
-            ((u, t.to_pydatetime(), x) for u, t, x in
-             zip(pdf["url"], pdf["warc_ts"], pdf["text_out"])),
-            segment=f"seg{seg_id}",
-        )
-        return pd.DataFrame({"seg_id": [seg_id], "warc": [blob]})
-
-    seg_df = seg.groupBy("seg_id").applyInPandas(
-        build, schema="seg_id long, warc binary"
-    )
+    seg_df = _write_segments(seg, "text_out", W.write_wet_gz)
     rec = W.records_df(seg_df).filter(F.col("rec_type") == "conversion")
     return rec.select(
         "url",
@@ -512,8 +499,6 @@ def _cc_revisit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-segment grain for the imperative part; the resolution join keys
     on (seg_id, url, digest) — co-partitioned by construction, never
     wider than a segment's own records."""
-    import pandas as pd
-
     from cc_extract import warc as W
 
     docs, _ = _cc_corpus_and_extracted(spark)
@@ -521,21 +506,7 @@ def _cc_revisit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.xxhash64("url"), F.lit(16)).alias("seg_id"),
         "url", "warc_ts", "html",
     )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["url", "warc_ts"])
-        seg_id = int(pdf["seg_id"].iloc[0])
-        blob = W.write_warc_gz_dedup(
-            ((u, t.to_pydatetime(), bytes(h)) for u, t, h in
-             zip(pdf["url"], pdf["warc_ts"], pdf["html"])),
-            segment=f"seg{seg_id}",
-        )
-        return pd.DataFrame({"seg_id": [seg_id], "warc": [blob]})
-
-    seg_df = seg.groupBy("seg_id").applyInPandas(
-        build, schema="seg_id long, warc binary"
-    )
-    rec = W.records_df(seg_df)
+    rec = W.records_df(_write_segments(seg, "html", W.write_warc_gz_dedup))
     ts_s = F.date_format("warc_ts", "yyyy-MM-dd HH:mm:ss").alias("warc_ts_s")
     resp = rec.filter(F.col("rec_type") == "response").select(
         "seg_id", "url", "warc_ts",
@@ -576,30 +547,19 @@ def _cc_wat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a structural drift breaks the derived columns independently.
     Scale shape identical to the other two sidecars: per-segment grain,
     parallelism = segment count."""
-    import pandas as pd
-
     from cc_extract import warc as W
+
+    def write_wat(records, segment):
+        return W.write_wat_gz(
+            ((u, t, W.build_wat_json(u, t, h)) for u, t, h in records),
+            segment=segment)
 
     docs, _ = _cc_corpus_and_extracted(spark)
     seg = docs.select(
         F.pmod(F.xxhash64("url"), F.lit(16)).alias("seg_id"),
         "url", "warc_ts", "html",
     )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["url", "warc_ts"])
-        seg_id = int(pdf["seg_id"].iloc[0])
-        blob = W.write_wat_gz(
-            ((u, t.to_pydatetime(),
-              W.build_wat_json(u, t.to_pydatetime(), bytes(h)))
-             for u, t, h in zip(pdf["url"], pdf["warc_ts"], pdf["html"])),
-            segment=f"seg{seg_id}",
-        )
-        return pd.DataFrame({"seg_id": [seg_id], "warc": [blob]})
-
-    seg_df = seg.groupBy("seg_id").applyInPandas(
-        build, schema="seg_id long, warc binary"
-    )
+    seg_df = _write_segments(seg, "html", write_wat)
     rec = W.records_df(seg_df).filter(F.col("rec_type") == "metadata")
     js = F.col("payload").cast("string")
     html_md = ("$['Envelope']['Payload-Metadata']"
@@ -1831,9 +1791,8 @@ def _cc_warc_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-process oracle twin shards identically.  Scale shape:
     applyInPandas at the segment grain — the same O(segment) memory
     contract as the WARC/WET/WAT round-trips; output is 16 skinny rows."""
-    import pandas as pd
-
     from cc_extract import warc as W
+    from cc_extract.job import rows_df
 
     docs, _ = _cc_corpus_and_extracted(spark)
     sid = (
@@ -1841,22 +1800,11 @@ def _cc_warc_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long") % 16
     )
     seg = docs.select(sid.alias("seg_id"), "url", "warc_ts", "html")
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["url", "warc_ts"])
-        seg_id = int(pdf["seg_id"].iloc[0])
-        blob = W.write_warc_gz_dedup(
-            ((u, t.to_pydatetime(), bytes(h)) for u, t, h in
-             zip(pdf["url"], pdf["warc_ts"], pdf["html"])),
-            segment=f"seg{seg_id}",
-        )
-        return pd.DataFrame([{"seg_id": seg_id, **W.segment_stats(blob)}])
-
-    return seg.groupBy("seg_id").applyInPandas(
-        build,
-        schema="seg_id long, n_response long, n_revisit long, "
-               "n_other long, seg_bytes long, payload_bytes long, "
-               "compression_ratio double",
+    return rows_df(
+        _write_segments(seg, "html", W.write_warc_gz_dedup),
+        ("seg_id",), ("warc",), W.segment_stats,
+        "n_response long, n_revisit long, n_other long, seg_bytes long, "
+        "payload_bytes long, compression_ratio double",
     ).orderBy("seg_id")
 
 

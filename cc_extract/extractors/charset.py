@@ -34,12 +34,14 @@ def decode_bytes(b: bytes, declared: str | None = None) -> str:
         if b.startswith(bom):
             try:
                 return b.decode(enc)
-            except (UnicodeDecodeError, LookupError):
+            except UnicodeError:
                 break
     if declared:
+        # UnicodeError, not just UnicodeDecodeError: some codecs raise
+        # the base class (``undefined`` always, ``punycode`` on bad input)
         try:
             return b.decode(declared)
-        except (UnicodeDecodeError, LookupError):
+        except (UnicodeError, LookupError):
             pass
     try:
         return b.decode("utf-8")

@@ -380,12 +380,7 @@ def _resolve_html_doc(payload: bytes, url: str | None = None) -> str | None:
     if not payload:
         return None
     fmt, payload, _ = sniff_payload(bytes(payload), url)
-    if fmt != "html":
-        return None
-    try:
-        return _decode_html(payload)
-    except UnicodeError:  # extract_html raises too: an error row there
-        return None
+    return _decode_html(payload) if fmt == "html" else None
 
 
 def html_block_rows(payload: bytes, url: str | None = None) -> list[dict] | None:

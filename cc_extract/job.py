@@ -149,53 +149,71 @@ def pack_scan(df: DataFrame) -> DataFrame:
         return df
 
 
+def rows_df(df: DataFrame, keys: tuple[str, ...], args: tuple[str, ...],
+            row_fn, ddl: str) -> DataFrame:
+    """The one Python row pass of the row operators (the seven
+    ``html_*_df``, the multimodal operators, and the contract queries
+    that reduce a column row by row): per input row, ``row_fn(*args)``
+    returns None (no rows), one dict or a list of dicts keyed by the
+    *ddl* columns; every output row carries its input row's *keys*
+    columns (types from ``df``) ahead of them.  Extra dict keys are
+    ignored, so a row function can return its whole normative record.
+
+    Scale shape: ONE Arrow-batched mapInPandas pass over just the
+    *keys* and *args* columns; payloads stay in their scan partitions
+    and leave the pass as skinny rows.  Filters belong on ``df``, where
+    the JVM drops rows before they cross to Python.
+    """
+    fields = [c.split()[0] for c in ddl.split(",")]
+    cols = [*keys, *fields]
+    schema = ", ".join(
+        [f"{k} {df.schema[k].dataType.simpleString()}" for k in keys] + [ddl])
+
+    def batches(it):
+        for pdf in it:
+            rows: dict[str, list] = {c: [] for c in cols}
+            for key, vals in zip(zip(*(pdf[k] for k in keys)),
+                                 zip(*(pdf[a] for a in args))):
+                r = row_fn(*vals)
+                if r is None:
+                    continue
+                for d in ([r] if isinstance(r, dict) else r):
+                    for k, v in zip(keys, key):
+                        rows[k].append(v)
+                    for f in fields:
+                        rows[f].append(d[f])
+            # no rows: skip, a frame of empty lists has float64 columns
+            # that Arrow refuses to convert to string
+            if rows[cols[0]]:
+                yield pd.DataFrame(rows, columns=cols)
+
+    return df.select(*dict.fromkeys((*keys, *args))).mapInPandas(
+        batches, schema=schema)
+
+
 def _html_rows_df(docs: DataFrame, row_fn, ddl: str, rank,
                   order_by: tuple[str, ...]) -> DataFrame:
     """The one body of the ``html_*_df`` operators over a corpus frame
     (url, warc_ts, html): per html-routed document, the rows of
-    ``row_fn(payload, url)`` for the newest crawl of each url.
+    ``row_fn(payload, url)`` (rows_df; the oracle side,
+    cc_extract.oracle_data, builds its table from the same function)
+    for the newest crawl of each url.  The row pass REDUCES every page
+    to ints, offsets and short strings before the only shuffle, the
+    url-hash keep-newest window.
 
-    Scale shape: ONE payload-bearing mapInPandas pass (after pack_scan)
-    REDUCES every page to its output rows — ints, offsets, short
-    strings — before the only shuffle, the url-hash keep-newest window;
-    payloads never travel.
-
-    - *row_fn* returns None (no rows: not html), one dict, or a list of
-      dicts keyed by the *ddl* columns; the oracle side
-      (cc_extract.oracle_data) builds its table from the same function.
-    - *ddl* declares the row columns, after the implicit
-      ``url string, warc_ts timestamp``.
+    - *ddl* declares the row columns, after the implicit ``url``.
     - *rank* keeps the newest crawl: ``F.row_number`` for one row per
       document, ``F.dense_rank`` for many (all rows of the newest crawl
       share its ts).
     - *order_by* is the global sort; ``()`` skips it.
     """
-    schema = "url string, warc_ts timestamp, " + ddl
-    cols = [c.split()[0] for c in schema.split(",")]
-    fields = cols[2:]
-
-    def batches(it):
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for url, ts, payload in zip(pdf["url"], pdf["warc_ts"],
-                                        pdf["html"]):
-                r = row_fn(payload, url)
-                if r is None:
-                    continue
-                for d in ([r] if isinstance(r, dict) else r):
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    for k in fields:
-                        rows[k].append(d[k])
-            yield pd.DataFrame(rows, columns=cols)
-
     w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
     out = (
-        pack_scan(docs).select("url", "warc_ts", "html")
-        .mapInPandas(batches, schema=schema)
+        rows_df(pack_scan(docs), ("url", "warc_ts"), ("html", "url"),
+                row_fn, ddl)
         .withColumn("_rk", rank().over(w))
         .filter(F.col("_rk") == 1)
-        .select("url", *fields)
+        .drop("warc_ts", "_rk")
     )
     return out.orderBy(*order_by) if order_by else out
 

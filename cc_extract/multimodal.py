@@ -1,9 +1,16 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed via Arrow-batched ``mapInPandas``.
+columns with typed metadata.
+
+Every media operator has one shape: a JVM ``kind`` filter when it reads
+one kind (so other kinds' payloads never cross to Python), one
+``job.rows_df`` row pass over a normative per-row function that the
+oracle table (``oracle_data.media_table``) calls too, and a JVM rollup.
+Which container a payload is gets decided once, by ``media_container``:
+the image-container table's tag, else avi/wav/mp4.
 
 What's REAL here (and tested): the Spark-side plumbing — schemas, the
 deterministic synthetic media generator, container-header metadata parsing
-(PNG IHDR, JPEG SOF, WAV fmt — pure byte arithmetic), batch shapes, a
+(PNG IHDR, JPEG SOF, BMP DIB, WAV fmt — pure byte arithmetic), batch shapes, a
 deterministic feature extractor (byte-histogram embedding) that stands in
 for a model forward pass, and — since round 4 — ACTUAL pixel decode:
 ``decode_image`` (``extractors.image.decode_gray``) dispatches through
@@ -35,13 +42,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .extractors.image import decode_gray as decode_image, image_container
+from .job import rows_df
 from .textops import banded_hamming_pairs
 
 MEDIA_SCHEMA = "media_id long, kind string, payload binary"
-META_SCHEMA = ("media_id long, kind string, container string, width int, "
-               "height int, sample_rate int, n_bytes long, parse_ok boolean")
 FEATURE_DIM = 16
-FEATURE_SCHEMA = f"media_id long, kind string, feature array<float>"
 
 
 # ----------------------------------------------------------- generation
@@ -1249,18 +1254,32 @@ def parse_mp4_meta(payload: bytes) -> dict:
     return out
 
 
-def mp4_row_stats(payload: bytes) -> dict:
-    """Per-row MP4 structural outcome — the normative implementation
-    shared by the Spark path and the oracle (same contract as
-    image/audio/video_row_stats)."""
-    return parse_mp4_meta(payload)
+_RIFF_FORMS = {b"AVI ": "avi", b"WAVE": "wav"}
+
+
+def media_container(payload: bytes) -> str | None:
+    """The one container decision for a media payload: the image table's
+    tag (extractors.image.image_container: png/jpeg/tiff/gif/bmp), else
+    ``avi``/``wav`` by the RIFF form type, else ``mp4`` when the first
+    box's type (bytes 4-8) is ``ftyp``, else None.  The mp4 test needs
+    only that 8-byte box header: a shorter-than-16-byte ftyp box is an
+    mp4 whose parse fails (parse_mp4_meta and decode_mp4_frames check
+    the 16-byte ftyp body themselves) — counted, not hidden."""
+    tag = image_container(payload)
+    if tag is not None:
+        return tag
+    if payload[:4] == b"RIFF" and payload[8:12] in _RIFF_FORMS:
+        return _RIFF_FORMS[payload[8:12]]
+    if payload[4:8] == b"ftyp":
+        return "mp4"
+    return None
 
 
 def parse_media_meta(payload: bytes) -> dict:
     """Container-header metadata by byte arithmetic — no decode libs."""
     out = {"container": "unknown", "width": None, "height": None,
            "sample_rate": None, "parse_ok": False}
-    tag = image_container(payload)
+    tag = media_container(payload)
     try:
         if tag == "png" and payload[12:16] == b"IHDR":
             w, h = struct.unpack(">II", payload[16:24])
@@ -1298,14 +1317,21 @@ def parse_media_meta(payload: bytes) -> dict:
         elif tag == "gif":
             w, h = struct.unpack_from("<HH", payload, 6)
             out.update(container="gif", width=w, height=h, parse_ok=True)
-        elif payload.startswith(b"RIFF") and payload[8:12] == b"AVI ":
+        elif tag == "bmp":
+            # every DIB header image_container admits (>= 40 bytes) starts
+            # int32 width, int32 height (negative: top-down rows)
+            w, h = struct.unpack_from("<ii", payload, 18)
+            out.update(container="bmp")
+            if w > 0 and 0 < abs(h) < 1 << 31:
+                out.update(width=w, height=abs(h), parse_ok=True)
+        elif tag == "avi":
             m = parse_avi_meta(payload)
             out.update(container="avi", width=m["avi_w"],
                        height=m["avi_h"], parse_ok=m["avi_ok"])
-        elif payload.startswith(b"RIFF") and payload[8:12] == b"WAVE":
+        elif tag == "wav":
             rate = struct.unpack("<I", payload[24:28])[0]
             out.update(container="wav", sample_rate=rate, parse_ok=True)
-        elif payload[4:8] == b"ftyp":
+        elif tag == "mp4":
             m = parse_mp4_meta(payload)
             out.update(container="mp4", width=m["mp4_w"],
                        height=m["mp4_h"], parse_ok=m["mp4_ok"])
@@ -1315,21 +1341,12 @@ def parse_media_meta(payload: bytes) -> dict:
 
 
 def media_metadata(df: DataFrame) -> DataFrame:
-    """binary -> typed metadata struct, Arrow-batched."""
-    def meta_batches(batches):
-        for pdf in batches:
-            metas = [parse_media_meta(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"], "kind": pdf["kind"],
-                "container": [m["container"] for m in metas],
-                "width": pd.array([m["width"] for m in metas], dtype="Int32"),
-                "height": pd.array([m["height"] for m in metas], dtype="Int32"),
-                "sample_rate": pd.array([m["sample_rate"] for m in metas], dtype="Int32"),
-                "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                "parse_ok": [m["parse_ok"] for m in metas],
-            })
-
-    return df.mapInPandas(meta_batches, META_SCHEMA)
+    """binary -> typed metadata (parse_media_meta), one row per media row."""
+    return rows_df(
+        df, ("media_id", "kind"), ("payload",),
+        lambda p: dict(parse_media_meta(p), n_bytes=len(p)),
+        "container string, width int, height int, sample_rate int, "
+        "n_bytes long, parse_ok boolean")
 
 
 # ------------------------------------------------------------- EXIF
@@ -1503,44 +1520,19 @@ def exif_stats(df: DataFrame) -> DataFrame:
     are the classic trap), how many need a display-axis swap
     (orientation >= 5), and the capture-date range.
 
-    Scale shape: ONE Arrow-batched mapInPandas pass over image payloads
-    (parse_exif + decode_image share the scan partition — payload bytes
-    never shuffle), then a partial-aggregable groupBy on O(makes x 8)
-    keys.  Conditional counts are sum(CAST(cond AS BIGINT)) on both
-    engines (trap-81 null semantics)."""
-    def exif_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"],
-                                    pdf["payload"]):
-                if kind != "image":
-                    continue
-                b = bytes(p)
-                e = parse_exif(b)
-                if not e["has_exif"]:
-                    continue
-                d = image_row_stats(b)
-                rows.append({
-                    "media_id": mid,
-                    "exif_ok": e["exif_ok"],
-                    "exif_orientation": e["exif_orientation"],
-                    "exif_make": e["exif_make"],
-                    "exif_dt": e["exif_dt"],
-                    "exif_w": e["exif_w"], "exif_h": e["exif_h"],
-                    "dec_w": d["dec_w"], "dec_h": d["dec_h"],
-                })
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "exif_ok", "exif_orientation",
-                         "exif_make", "exif_dt", "exif_w", "exif_h",
-                         "dec_w", "dec_h"])
+    Scale shape: ONE row pass over the image payloads (parse_exif +
+    decode_image per payload), then a partial-aggregable groupBy on
+    O(makes x 8) keys.  Conditional counts are sum(CAST(cond AS BIGINT))
+    on both engines (trap-81 null semantics)."""
+    def exif_row(payload):
+        e = parse_exif(payload)
+        return dict(e, **image_row_stats(payload)) if e["has_exif"] else None
 
-    per = df.mapInPandas(
-        exif_batches,
-        "media_id long, exif_ok boolean, exif_orientation int, "
-        "exif_make string, exif_dt string, exif_w int, exif_h int, "
-        "dec_w int, dec_h int",
-    )
+    per = rows_df(
+        df.filter(F.col("kind") == "image"), ("media_id",), ("payload",),
+        exif_row,
+        "exif_ok boolean, exif_orientation int, exif_make string, "
+        "exif_dt string, exif_w int, exif_h int, dec_w int, dec_h int")
     dims_match = (F.col("exif_w") == F.col("dec_w")) \
         & (F.col("exif_h") == F.col("dec_h"))
     # NULL-condition rows (failed parse -> missing dims/orientation)
@@ -1855,52 +1847,26 @@ def audio_activity_stats(payload: bytes) -> dict:
 
 def audio_activity(df: DataFrame) -> DataFrame:
     """Per-clip activity relation over every decodable audio row — one
-    Arrow-batched mapInPandas pass (payloads stay in their scan
-    partitions), O(clips) skinny rows out."""
-    def act_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"],
-                                    pdf["payload"]):
-                if kind != "audio":
-                    continue
-                s = audio_activity_stats(bytes(p))
-                if s["act_n_windows"] is None:
-                    continue
-                rows.append({"media_id": mid, **s})
-            yield pd.DataFrame(
-                rows, columns=["media_id", "act_n_windows",
-                               "act_n_active", "act_frac"])
+    row pass, O(clips) skinny rows out."""
+    def act_row(payload):
+        s = audio_activity_stats(payload)
+        return None if s["act_n_windows"] is None else s
 
-    return df.mapInPandas(
-        act_batches,
-        "media_id long, act_n_windows int, act_n_active int, "
-        "act_frac double",
+    return rows_df(
+        df.filter(F.col("kind") == "audio"), ("media_id",), ("payload",),
+        act_row, "act_n_windows int, act_n_active int, act_frac double",
     ).orderBy("media_id")
 
 
 def audio_decode_stats(df: DataFrame) -> DataFrame:
-    """Decode every audio payload (Arrow-batched mapInPandas): per
-    sample-rate decode rate, mean clip duration and mean RMS level —
-    the loudness/duration screens an audio-pretraining pipeline runs."""
-    def dec_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "audio":
-                    continue
-                rows.append({"media_id": mid, **audio_row_stats(bytes(p))})
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "aud_ok", "aud_rate", "aud_n_samples",
-                         "aud_duration_s", "aud_rms"],
-            )
-
-    per = df.mapInPandas(
-        dec_batches,
-        "media_id long, aud_ok boolean, aud_rate int, aud_n_samples int, "
-        "aud_duration_s double, aud_rms double",
-    )
+    """Decode every audio payload (audio_row_stats): per sample-rate
+    decode rate, mean clip duration and mean RMS level — the
+    loudness/duration screens an audio-pretraining pipeline runs."""
+    per = rows_df(
+        df.filter(F.col("kind") == "audio"), ("media_id",), ("payload",),
+        audio_row_stats,
+        "aud_ok boolean, aud_rate int, aud_n_samples int, "
+        "aud_duration_s double, aud_rms double")
     return (
         per.groupBy("aud_rate")
         .agg(
@@ -1914,29 +1880,15 @@ def audio_decode_stats(df: DataFrame) -> DataFrame:
 
 
 def image_decode_stats(df: DataFrame) -> DataFrame:
-    """Decode every image payload (Arrow-batched mapInPandas) and roll up
-    per container: decode rate + raster statistics over the decoded
-    subset.  The undecodable rows (header-only stubs, corrupt) are
-    counted, not hidden."""
-    def dec_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "image":
-                    continue
-                s = image_row_stats(bytes(p))
-                rows.append({"media_id": mid, **s})
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "container", "dec_ok", "dec_w",
-                         "dec_h", "dec_mean_luma", "dec_ink_frac"],
-            )
-
-    per = df.mapInPandas(
-        dec_batches,
-        "media_id long, container string, dec_ok boolean, dec_w int, "
-        "dec_h int, dec_mean_luma double, dec_ink_frac double",
-    )
+    """Decode every image payload (image_row_stats) and roll up per
+    container: decode rate + raster statistics over the decoded subset.
+    The undecodable rows (header-only stubs, corrupt) are counted, not
+    hidden."""
+    per = rows_df(
+        df.filter(F.col("kind") == "image"), ("media_id",), ("payload",),
+        image_row_stats,
+        "container string, dec_ok boolean, dec_w int, dec_h int, "
+        "dec_mean_luma double, dec_ink_frac double")
     return (
         per.groupBy("container")
         .agg(
@@ -1953,21 +1905,15 @@ def image_decode_stats(df: DataFrame) -> DataFrame:
 
 def media_features(df: DataFrame) -> DataFrame:
     """Deterministic stand-in feature extractor: 16-bin normalized byte
-    histogram as float32 vector.  Vectorized numpy per Arrow batch —
-    exactly the batch shape a Pandas-UDF model forward pass would use."""
-    def feat_batches(batches):
-        for pdf in batches:
-            feats = []
-            for p in pdf["payload"]:
-                arr = np.frombuffer(bytes(p), dtype=np.uint8)
-                hist = np.bincount(arr >> 4, minlength=FEATURE_DIM).astype(np.float64)
-                total = hist.sum() or 1.0
-                feats.append((hist / total).astype(np.float32))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"], "kind": pdf["kind"], "feature": feats,
-            })
+    histogram as float32 vector, one row per media row — the row shape a
+    Pandas-UDF model forward pass would use."""
+    def feature_row(payload):
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        hist = np.bincount(arr >> 4, minlength=FEATURE_DIM).astype(np.float64)
+        return {"feature": (hist / (hist.sum() or 1.0)).astype(np.float32)}
 
-    return df.mapInPandas(feat_batches, FEATURE_SCHEMA)
+    return rows_df(df, ("media_id", "kind"), ("payload",), feature_row,
+                   "feature array<float>")
 
 
 def _decode_video(payload: bytes):
@@ -1976,18 +1922,14 @@ def _decode_video(payload: bytes):
     undecodable (unknown container, compressed H.264 stand-ins,
     corruption) — the single route video_row_stats and scene_keyframes
     both ride so their decode outcomes can never disagree."""
-    is_avi = payload[:4] == b"RIFF" and payload[8:12] == b"AVI "
-    is_mp4 = len(payload) >= 16 and payload[4:8] == b"ftyp"
-    if image_container(payload) != "gif" and not is_avi and not is_mp4:
+    from .extractors.gif import decode_gif_frames
+
+    decode = {"gif": decode_gif_frames, "avi": decode_avi_frames,
+              "mp4": decode_mp4_frames}.get(media_container(payload))
+    if decode is None:
         return None
     try:
-        if is_avi:
-            return decode_avi_frames(payload)
-        if is_mp4:
-            return decode_mp4_frames(payload)
-        from .extractors.gif import decode_gif_frames
-
-        return decode_gif_frames(payload)
+        return decode(payload)
     except Exception:
         return None
 
@@ -2042,38 +1984,16 @@ def video_row_stats(payload: bytes) -> dict:
 
 
 def video_decode_stats(df: DataFrame) -> DataFrame:
-    """Decode every video payload's frames (Arrow-batched mapInPandas):
-    decode rate, frame counts, per-clip luma statistics and the mean
+    """Decode every video payload's frames (video_row_stats): decode
+    rate, frame counts, per-clip luma statistics and the mean
     inter-frame luma delta — the static-clip screen a video-pretraining
     pipeline runs.  MP4 stubs are counted undecodable, not hidden."""
-    def dec_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "video":
-                    continue
-                b = bytes(p)
-                if image_container(b) == "gif":
-                    cont = "gif"
-                elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    cont = "avi"
-                elif b[4:8] == b"ftyp":
-                    cont = "mp4"
-                else:
-                    cont = "unknown"
-                rows.append({"media_id": mid, "container": cont,
-                             **video_row_stats(b)})
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "container", "vid_ok", "vid_n_frames",
-                         "vid_avg_frame_luma", "vid_mean_frame_delta"],
-            )
-
-    per = df.mapInPandas(
-        dec_batches,
-        "media_id long, container string, vid_ok boolean, vid_n_frames int, "
-        "vid_avg_frame_luma double, vid_mean_frame_delta double",
-    )
+    per = rows_df(
+        df.filter(F.col("kind") == "video"), ("media_id",), ("payload",),
+        lambda p: dict(video_row_stats(p),
+                       container=media_container(p) or "unknown"),
+        "container string, vid_ok boolean, vid_n_frames int, "
+        "vid_avg_frame_luma double, vid_mean_frame_delta double")
     return (
         per.groupBy("container", "vid_ok")
         .agg(
@@ -2095,35 +2015,17 @@ def scene_cut_stats(df: DataFrame) -> DataFrame:
     video_row_stats' raster-md5 boundary (normative, shared with the
     oracle); this surface is the per-clip relation, vid_ok rows only.
 
-    Scale shape: ONE Arrow-batched mapInPandas pass over video payloads
-    (same grain as video_decode_stats — payload bytes never shuffle; the
-    output is O(clips) skinny rows), then a pure projection.  The
-    scenes/frames ratio is one division of two exact ints."""
-    def dec_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"],
-                                    pdf["payload"]):
-                if kind != "video":
-                    continue
-                s = video_row_stats(bytes(p))
-                if not s["vid_ok"]:
-                    continue
-                rows.append({
-                    "media_id": mid,
-                    "vid_n_frames": s["vid_n_frames"],
-                    "vid_n_cuts": s["vid_n_cuts"],
-                    "vid_n_scenes": s["vid_n_scenes"],
-                })
-            yield pd.DataFrame(
-                rows, columns=["media_id", "vid_n_frames", "vid_n_cuts",
-                               "vid_n_scenes"])
+    Scale shape: ONE row pass over the video payloads (same grain as
+    video_decode_stats; the output is O(clips) skinny rows), then a pure
+    projection.  The scenes/frames ratio is one division of two exact
+    ints."""
+    def cut_row(payload):
+        v = video_row_stats(payload)
+        return v if v["vid_ok"] else None
 
-    per = df.mapInPandas(
-        dec_batches,
-        "media_id long, vid_n_frames int, vid_n_cuts int, "
-        "vid_n_scenes int",
-    )
+    per = rows_df(
+        df.filter(F.col("kind") == "video"), ("media_id",), ("payload",),
+        cut_row, "vid_n_frames int, vid_n_cuts int, vid_n_scenes int")
     return per.select(
         "media_id", "vid_n_frames", "vid_n_cuts", "vid_n_scenes",
         F.round(F.col("vid_n_scenes") / F.col("vid_n_frames"), 6)
@@ -2135,100 +2037,64 @@ def keyframe_rows(df: DataFrame) -> DataFrame:
     """One keyframe per scene for every decodable video — the
     scene-aware sampling consumer of scene_cut_stats (a static clip
     yields ONE training frame instead of every-Nth copies of the same
-    image; a fast-cut clip yields every distinct scene).  Same
-    mapInPandas grain as the other media passes: payload bytes stay in
-    their scan partition, output is O(scenes) skinny rows."""
-    def kf_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"],
-                                    pdf["payload"]):
-                if kind != "video":
-                    continue
-                for scene, k, w, h, sig in scene_keyframes(bytes(p)):
-                    rows.append({"media_id": mid, "scene_idx": scene,
-                                 "frame_idx": k, "w": w, "h": h,
-                                 "frame_md5": sig})
-            yield pd.DataFrame(
-                rows, columns=["media_id", "scene_idx", "frame_idx",
-                               "w", "h", "frame_md5"])
-
-    return df.mapInPandas(
-        kf_batches,
-        "media_id long, scene_idx int, frame_idx int, w int, h int, "
-        "frame_md5 string",
+    image; a fast-cut clip yields every distinct scene).  Same row-pass
+    grain as the other media operators; output is O(scenes) skinny
+    rows."""
+    cols = ("scene_idx", "frame_idx", "w", "h", "frame_md5")
+    return rows_df(
+        df.filter(F.col("kind") == "video"), ("media_id",), ("payload",),
+        lambda p: [dict(zip(cols, kf)) for kf in scene_keyframes(p)],
+        "scene_idx int, frame_idx int, w int, h int, frame_md5 string",
     ).orderBy("media_id", "scene_idx")
 
 
+def video_frame_count(payload: bytes) -> int | None:
+    """Frame count from container structure alone (gif_frame_count walks
+    image blocks without LZW-decoding them; AVI reads its header, MP4
+    the stsz sample table) — the cheap header pass a sampler runs before
+    deciding what to decode.  None for a non-video or corrupt container."""
+    from .extractors.gif import gif_frame_count
+
+    tag = media_container(payload)
+    if tag == "gif":
+        try:
+            return gif_frame_count(payload)
+        except Exception:
+            return None
+    if tag == "avi":
+        m = parse_avi_meta(payload)
+        return m["avi_n_frames"] if m["avi_ok"] else None
+    if tag == "mp4":
+        m = parse_mp4_meta(payload)
+        return m["mp4_n_frames"] if m["mp4_ok"] else None
+    return None
+
+
 def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling — REAL since round 4: the frame count comes
-    from the container's own structure (gif_frame_count walks image
-    blocks without LZW-decoding them; MP4 reads the stsz sample table —
-    the cheap header pass a sampler runs before deciding what to
-    decode).  Truncated/corrupt containers emit no rows."""
-    def frames(batches):
-        from .extractors.gif import gif_frame_count
-
-        for pdf in batches:
-            out_ids, out_idx = [], []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "video":
-                    continue
-                b = bytes(p)
-                if image_container(b) == "gif":
-                    try:
-                        n_frames = gif_frame_count(b)
-                    except Exception:
-                        continue
-                elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    m = parse_avi_meta(b)
-                    if not m["avi_ok"] or not m["avi_n_frames"]:
-                        continue
-                    n_frames = m["avi_n_frames"]
-                elif b[4:8] == b"ftyp":
-                    m = parse_mp4_meta(b)
-                    if not m["mp4_ok"] or m["mp4_n_frames"] is None:
-                        continue
-                    n_frames = m["mp4_n_frames"]
-                else:
-                    continue
-                for fi in range(0, n_frames, every_n):
-                    out_ids.append(mid)
-                    out_idx.append(fi)
-            yield pd.DataFrame({"media_id": out_ids, "frame_idx": out_idx})
-
-    return df.mapInPandas(frames, "media_id long, frame_idx int")
+    """Video frame sampling — REAL since round 4: every *every_n*-th
+    frame index of each video, counted from container structure
+    (video_frame_count).  Truncated/corrupt containers emit no rows."""
+    return rows_df(
+        df.filter(F.col("kind") == "video"), ("media_id",), ("payload",),
+        lambda p: [{"frame_idx": fi}
+                   for fi in range(0, video_frame_count(p) or 0, every_n)],
+        "frame_idx int")
 
 
 def mp4_structure_stats(df: DataFrame) -> DataFrame:
-    """MP4 container structure over the binary video column (Arrow-batched
-    mapInPandas): per (brand, codec) clip counts, parse rate, mean
+    """MP4 container structure over the binary video column
+    (parse_mp4_meta): per (brand, codec) clip counts, parse rate, mean
     duration / frame count / dimensions — the container-level triage a
     video-pretraining pipeline runs before shipping clips to a GPU
     decoder.  Truncated ftyp-only stubs land in the NULL-codec bucket,
     counted not hidden."""
-    def mp4_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"],
-                                    pdf["payload"]):
-                b = bytes(p)
-                if kind != "video" or b[4:8] != b"ftyp":
-                    continue
-                rows.append({"media_id": mid, **mp4_row_stats(b)})
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "mp4_ok", "mp4_brand", "mp4_duration_s",
-                         "mp4_n_tracks", "mp4_codec", "mp4_w", "mp4_h",
-                         "mp4_n_frames", "mp4_profile", "mp4_level",
-                         "mp4_sps_w", "mp4_sps_h"])
-
-    per = df.mapInPandas(
-        mp4_batches,
-        "media_id long, mp4_ok boolean, mp4_brand string, "
-        "mp4_duration_s double, mp4_n_tracks int, mp4_codec string, "
-        "mp4_w int, mp4_h int, mp4_n_frames int, mp4_profile int, "
-        "mp4_level int, mp4_sps_w int, mp4_sps_h int")
+    per = rows_df(
+        df.filter(F.col("kind") == "video"), ("media_id",), ("payload",),
+        lambda p: parse_mp4_meta(p) if media_container(p) == "mp4" else None,
+        "mp4_ok boolean, mp4_brand string, mp4_duration_s double, "
+        "mp4_n_tracks int, mp4_codec string, mp4_w int, mp4_h int, "
+        "mp4_n_frames int, mp4_profile int, mp4_level int, mp4_sps_w int, "
+        "mp4_sps_h int")
     sps_match = ((F.col("mp4_sps_w") == F.col("mp4_w"))
                  & (F.col("mp4_sps_h") == F.col("mp4_h")))
     return (
@@ -2256,33 +2122,19 @@ def avc1_decode_stats(df: DataFrame) -> DataFrame:
     quarantine) — the codec-capability triage a video pipeline runs to
     size its GPU-decoder fleet.  Shares the normative parse_mp4_meta +
     video_row_stats row implementations with the oracle."""
-    def avc1_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"],
-                                    pdf["payload"]):
-                b = bytes(p)
-                if kind != "video" or len(b) < 16 or b[4:8] != b"ftyp":
-                    continue
-                meta = parse_mp4_meta(b)
-                if meta["mp4_codec"] != "avc1":
-                    continue
-                v = video_row_stats(b)
-                rows.append({
-                    "media_id": mid, "mp4_profile": meta["mp4_profile"],
-                    "mp4_sps_w": meta["mp4_sps_w"],
-                    "mp4_sps_h": meta["mp4_sps_h"],
-                    "vid_ok": v["vid_ok"], "vid_n_frames": v["vid_n_frames"],
-                    "vid_avg_frame_luma": v["vid_avg_frame_luma"]})
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "mp4_profile", "mp4_sps_w", "mp4_sps_h",
-                         "vid_ok", "vid_n_frames", "vid_avg_frame_luma"])
+    def avc1_row(payload):
+        if media_container(payload) != "mp4":
+            return None
+        meta = parse_mp4_meta(payload)
+        if meta["mp4_codec"] != "avc1":
+            return None
+        return dict(meta, **video_row_stats(payload))
 
-    per = df.mapInPandas(
-        avc1_batches,
-        "media_id long, mp4_profile int, mp4_sps_w int, mp4_sps_h int, "
-        "vid_ok boolean, vid_n_frames int, vid_avg_frame_luma double")
+    per = rows_df(
+        df.filter(F.col("kind") == "video"), ("media_id",), ("payload",),
+        avc1_row,
+        "mp4_profile int, mp4_sps_w int, mp4_sps_h int, vid_ok boolean, "
+        "vid_n_frames int, vid_avg_frame_luma double")
     return (
         per.groupBy("mp4_profile")
         .agg(
@@ -2379,21 +2231,12 @@ def phash64(payload: bytes) -> int | None:
 
 def image_phash(df: DataFrame) -> DataFrame:
     """(media_id, phash) for every decodable image payload — the
-    signature relation perceptual dedup joins on (Arrow-batched
-    mapInPandas, same shape as image_decode_stats)."""
-    def hash_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"],
-                                    pdf["payload"]):
-                if kind != "image":
-                    continue
-                ph = phash64(bytes(p))
-                if ph is not None:
-                    rows.append({"media_id": mid, "phash": ph})
-            yield pd.DataFrame(rows, columns=["media_id", "phash"])
-
-    return df.mapInPandas(hash_batches, "media_id long, phash long")
+    signature relation perceptual dedup joins on (one row pass, same
+    shape as image_decode_stats)."""
+    return rows_df(
+        df.filter(F.col("kind") == "image"), ("media_id",), ("payload",),
+        lambda p: None if (h := phash64(p)) is None else {"phash": h},
+        "phash long")
 
 
 def phash_near_dups(df: DataFrame) -> DataFrame:
@@ -2466,19 +2309,10 @@ def afp64(payload: bytes) -> int | None:
 
 def audio_afp(df: DataFrame) -> DataFrame:
     """(media_id, afp) for every decodable audio payload."""
-    def hash_batches(batches):
-        for pdf in batches:
-            rows = []
-            for mid, kind, p in zip(pdf["media_id"], pdf["kind"],
-                                    pdf["payload"]):
-                if kind != "audio":
-                    continue
-                fp = afp64(bytes(p))
-                if fp is not None:
-                    rows.append({"media_id": mid, "afp": fp})
-            yield pd.DataFrame(rows, columns=["media_id", "afp"])
-
-    return df.mapInPandas(hash_batches, "media_id long, afp long")
+    return rows_df(
+        df.filter(F.col("kind") == "audio"), ("media_id",), ("payload",),
+        lambda p: None if (h := afp64(p)) is None else {"afp": h},
+        "afp long")
 
 
 def afp_near_dups(df: DataFrame) -> DataFrame:

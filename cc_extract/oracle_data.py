@@ -142,7 +142,7 @@ def media_table(n: int = 400) -> str:
 
     from .multimodal import (FEATURE_DIM, audio_activity_stats,
                              audio_row_stats, gen_media,
-                             image_row_stats, mp4_row_stats,
+                             image_row_stats, parse_mp4_meta,
                              afp64, parse_exif, parse_media_meta,
                              phash64, video_row_stats)
 
@@ -158,7 +158,7 @@ def media_table(n: int = 400) -> str:
             else None for r in rows]
     vids = [video_row_stats(r["payload"]) if r["kind"] == "video" else None
             for r in rows]
-    mp4s = [mp4_row_stats(r["payload"])
+    mp4s = [parse_mp4_meta(r["payload"])
             if r["kind"] == "video" and r["payload"][4:8] == b"ftyp" else None
             for r in rows]
     phashes = [phash64(r["payload"]) if r["kind"] == "image" else None

@@ -155,6 +155,31 @@ def test_html_rows_are_wrapper_transparent(wrapper):
             assert fn(wrapped) == bare, name
 
 
+@pytest.mark.parametrize("codec", ["undefined", "punycode"])
+def test_raising_declared_charset_decodes_like_unknown_one(codec):
+    """A ``<meta charset>`` naming a codec that raises plain UnicodeError
+    on the page (``undefined`` always, ``punycode`` on this ASCII page)
+    decodes through the utf-8/cp1252/latin-1 cascade exactly like an
+    unknown codec name of the same length: extract_document says ok and
+    every html row function returns the same rows."""
+    from cc_extract.extractors import extract_document, html
+
+    def page(charset):
+        return (f'<html><head><meta charset="{charset}"><title>Notes, '
+                f'part one</title></head><body><p>'
+                + "Plain prose, long enough to keep as a content block. " * 3
+                + "</p></body></html>").encode("ascii")
+
+    raising, unknown = page(codec), page("x" * len(codec))
+    r = extract_document(raising, "http://example.com/a.html")
+    assert (r["status"], r["text"]) == (
+        "ok", extract_document(unknown, "http://example.com/a.html")["text"])
+    for name in HTML_ROW_FNS:
+        fn = getattr(html, name)
+        assert fn(raising) is not None, name
+        assert fn(raising) == fn(unknown), name
+
+
 def test_block_rows_pin_blocks_exactly():
     import hashlib
 
@@ -551,6 +576,22 @@ def test_html_operator_schemas_are_pinned(spark):
         assert got == want, name
     assert job.html_blocks_df(docs, ordered=False).schema.simpleString() \
         == OPERATOR_SCHEMAS["html_blocks_df"]
+
+
+def test_html_operators_on_batches_without_html(spark):
+    """A row pass whose batch holds no html page yields no rows; it
+    must not fail the task (a frame built from empty lists has float64
+    columns, which Arrow cannot convert to string)."""
+    import datetime
+
+    from cc_extract import job
+
+    docs = spark.createDataFrame(
+        [("http://example.com/a.pdf", datetime.datetime(2025, 1, 1),
+          b"%PDF-1.4 not html")],
+        "url string, warc_ts timestamp, html binary")
+    for name in OPERATOR_SCHEMAS:
+        assert getattr(job, name)(docs).collect() == [], name
 
 
 def test_html_oracle_table_schemas_are_pinned(tmp_path, monkeypatch):

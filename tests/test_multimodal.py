@@ -116,6 +116,132 @@ def test_media_pipeline_on_spark(spark):
     assert len({r["media_id"] for r in frames}) <= vids
 
 
+MEDIA_OPERATOR_SCHEMAS = {
+    "media_metadata": "struct<media_id:bigint,kind:string,container:string,"
+                      "width:int,height:int,sample_rate:int,n_bytes:bigint,"
+                      "parse_ok:boolean>",
+    "media_features": "struct<media_id:bigint,kind:string,"
+                      "feature:array<float>>",
+    "exif_stats": "struct<exif_make:string,exif_orientation:int,"
+                  "n_images:bigint,n_parse_ok:bigint,n_dims_match:bigint,"
+                  "n_display_swap:bigint,min_dt:string,max_dt:string>",
+    "image_decode_stats": "struct<container:string,n_images:bigint,"
+                          "n_decoded:bigint,avg_width:double,"
+                          "avg_height:double,avg_mean_luma:double,"
+                          "avg_ink_frac:double>",
+    "audio_decode_stats": "struct<aud_rate:int,n_clips:bigint,"
+                          "n_decoded:bigint,avg_duration_s:double,"
+                          "avg_rms:double>",
+    "audio_activity": "struct<media_id:bigint,act_n_windows:int,"
+                      "act_n_active:int,act_frac:double>",
+    "video_decode_stats": "struct<container:string,vid_ok:boolean,"
+                          "n_videos:bigint,avg_n_frames:double,"
+                          "avg_frame_luma:double,avg_frame_delta:double>",
+    "scene_cut_stats": "struct<media_id:bigint,vid_n_frames:int,"
+                       "vid_n_cuts:int,vid_n_scenes:int,"
+                       "scene_density:double>",
+    "keyframe_rows": "struct<media_id:bigint,scene_idx:int,frame_idx:int,"
+                     "w:int,h:int,frame_md5:string>",
+    "frame_sample": "struct<media_id:bigint,frame_idx:int>",
+    "mp4_structure_stats": "struct<mp4_brand:string,mp4_codec:string,"
+                           "n_clips:bigint,n_parsed:bigint,"
+                           "avg_duration_s:double,avg_n_frames:double,"
+                           "avg_width:double,avg_n_tracks:double,"
+                           "avg_profile:double,max_level:int,"
+                           "n_sps_dim_match:bigint>",
+    "avc1_decode_stats": "struct<mp4_profile:int,n_clips:bigint,"
+                         "n_decoded:bigint,avg_n_frames:double,"
+                         "avg_frame_luma:double,avg_sps_w:double,"
+                         "avg_sps_h:double>",
+    "image_phash": "struct<media_id:bigint,phash:bigint>",
+    "audio_afp": "struct<media_id:bigint,afp:bigint>",
+}
+
+# the payload kind each operator reads; None: every media row
+MEDIA_OPERATOR_KINDS = {
+    "media_metadata": None, "media_features": None,
+    "exif_stats": "image", "image_decode_stats": "image",
+    "image_phash": "image", "audio_decode_stats": "audio",
+    "audio_activity": "audio", "audio_afp": "audio",
+    "video_decode_stats": "video", "scene_cut_stats": "video",
+    "keyframe_rows": "video", "frame_sample": "video",
+    "mp4_structure_stats": "video", "avc1_decode_stats": "video",
+}
+
+
+def test_media_operator_schemas_are_pinned(spark):
+    empty = spark.createDataFrame([], mm.MEDIA_SCHEMA)
+    assert MEDIA_OPERATOR_SCHEMAS.keys() == MEDIA_OPERATOR_KINDS.keys()
+    for name, want in MEDIA_OPERATOR_SCHEMAS.items():
+        got = getattr(mm, name)(empty).schema.simpleString()
+        assert got == want, name
+
+
+def test_media_operators_on_undecodable_payloads(spark):
+    """Batches whose payloads yield no rows (nothing decodes, no EXIF, no
+    frames) come back as empty results, never as failed tasks."""
+    df = spark.createDataFrame(
+        [(i, kind, b"junk") for i, kind in enumerate(("image", "audio",
+                                                      "video"))],
+        mm.MEDIA_SCHEMA)
+    for name in ("exif_stats", "audio_activity", "scene_cut_stats",
+                 "keyframe_rows", "frame_sample", "mp4_structure_stats",
+                 "avc1_decode_stats", "image_phash", "audio_afp"):
+        assert getattr(mm, name)(df).collect() == [], name
+
+
+def test_media_operators_filter_kind_in_jvm_below_one_row_pass(spark):
+    """Each media operator makes ONE Python row pass (MapInPandas), and a
+    kind-filtered one drops the other kinds in a JVM Filter below it, so
+    their payloads never cross to Python."""
+    import re
+
+    from tests.plan_check import formatted_plan
+
+    df = spark.createDataFrame([mm.gen_media(i) for i in range(6)],
+                               mm.MEDIA_SCHEMA)
+    for name, kind in MEDIA_OPERATOR_KINDS.items():
+        plan = formatted_plan(getattr(mm, name)(df))
+        tree = plan.split("\n\n")[0]
+        nodes = re.findall(r"(\w[\w ]*?) \((\d+)\)$", tree, re.M)
+        names = [n for n, _ in nodes]
+        assert names.count("MapInPandas") == 1, (name, names)
+        below = nodes[names.index("MapInPandas") + 1:]
+        conds = [re.search(rf"^\({i}\) Filter\b.*?^Condition : ([^\n]*)",
+                           plan, re.M | re.S).group(1)
+                 for n, i in below if n == "Filter"]
+        if kind is None:
+            assert conds == [], (name, conds)
+        else:
+            assert any(re.search(rf"\bkind#\d+ = {kind}\)", c)
+                       for c in conds), (name, names, conds)
+
+
+def test_bmp_metadata_agrees_with_decode(spark):
+    """media_metadata reads a BMP's dimensions from its DIB header, and
+    they agree with image_row_stats' decode (bottom-up and top-down)."""
+    import random
+
+    from cc_extract.corpusgen import _bmp_gray
+    from cc_extract.glyphs import render_raster
+
+    w, h, raster = render_raster("BMP META")
+    payloads = [_bmp_gray(w, h, bytes(raster), random.Random(seed))
+                for seed in (1, 2)]  # seed 2 writes a top-down raster
+    df = spark.createDataFrame(
+        [(i, "image", p) for i, p in enumerate(payloads)], mm.MEDIA_SCHEMA)
+    rows = sorted(mm.media_metadata(df).collect())
+    assert len(rows) == 2
+    for r, p in zip(rows, payloads):
+        d = mm.image_row_stats(p)
+        assert d["dec_ok"]
+        assert (r["container"], r["width"], r["height"], r["parse_ok"]) == (
+            d["container"], d["dec_w"], d["dec_h"], True)
+        assert mm.parse_media_meta(p) == {
+            "container": "bmp", "width": w, "height": h,
+            "sample_rate": None, "parse_ok": True}
+
+
 def test_mp4_container_roundtrip():
     """Writer/parser pair over the ISO BMFF structure: frame counts,
     duration, codec fourcc, dims, track count — plus the largesize and
@@ -175,7 +301,7 @@ def test_mp4_in_media_sweep():
         r = mm.gen_media(i)
         if r["kind"] != "video" or r["payload"][4:8] != b"ftyp":
             continue
-        m = mm.mp4_row_stats(r["payload"])
+        m = mm.parse_mp4_meta(r["payload"])
         meta = mm.parse_media_meta(r["payload"])
         assert meta["container"] == "mp4"
         assert meta["parse_ok"] == m["mp4_ok"]
