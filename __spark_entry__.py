@@ -1131,6 +1131,22 @@ def _cc_anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cc_domain_graph(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+    """The domain link graph cc_pagerank and cc_hits rank: ``edges``
+    (src_domain, dst_domain, w = link count as double) and ``nodes``
+    (every distinct corpus host as ``domain``), both checkpointed."""
+    edges = (
+        _cc_links(spark)
+        .groupBy("src_domain", "dst_domain")
+        .agg(F.count("*").cast("double").alias("w"))
+        .localCheckpoint()
+    )
+    docs, _ = _cc_corpus_and_extracted(spark)
+    nodes = docs.select(_cc_host(F.col("url")).alias("domain")).distinct() \
+        .localCheckpoint()
+    return edges, nodes
+
+
 def _cc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the domain link graph — the canonical
     iterative web-scale computation, run as PAGERANK_ITERS rounds of
@@ -1146,15 +1162,7 @@ def _cc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges against ranks plus a groupBy(dst), exactly the shuffle
     pattern a 10^8-node production PageRank runs, with ranks
     localCheckpointed per round (lineage truncation, as dup_clusters)."""
-    edges = (
-        _cc_links(spark)
-        .groupBy("src_domain", "dst_domain")
-        .agg(F.count("*").cast("double").alias("w"))
-        .localCheckpoint()
-    )
-    docs, _ = _cc_corpus_and_extracted(spark)
-    nodes = docs.select(_cc_host(F.col("url")).alias("domain")).distinct() \
-        .localCheckpoint()
+    edges, nodes = _cc_domain_graph(spark)
     n = nodes.count()
     out_w = edges.groupBy("src_domain").agg(F.sum("w").alias("out_w"))
     d = PAGERANK_DAMPING
@@ -1222,15 +1230,7 @@ def _cc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc_pagerank, with scores localCheckpointed per round (lineage
     truncation).  The per-round max is a whitelisted 1-row scalar
     cross."""
-    edges = (
-        _cc_links(spark)
-        .groupBy("src_domain", "dst_domain")
-        .agg(F.count("*").cast("double").alias("w"))
-        .localCheckpoint()
-    )
-    docs, _ = _cc_corpus_and_extracted(spark)
-    nodes = docs.select(_cc_host(F.col("url")).alias("domain")).distinct() \
-        .localCheckpoint()
+    edges, nodes = _cc_domain_graph(spark)
     hubs = nodes.select("domain", F.lit(1.0).alias("h")).localCheckpoint()
     auth = None
     for _ in range(HITS_ITERS):

@@ -29,6 +29,8 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from .textops import band_pairs, band_rows
+
 DIM = 64
 N_PLANES = 8
 PLANE_SEED = 7
@@ -89,6 +91,12 @@ def _dot(a, b):
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
+
+
+def _pair_cos(a, b):
+    """Cosine of two ``array<double>`` columns rounded to 5 dp — the one
+    pairwise-cosine expression of every embedding pair operator."""
+    return F.round(_dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))), 5)
 
 
 def _lit_vec(v: list[float]):
@@ -384,17 +392,11 @@ def cosine_near_dup_pairs(spark, sf_dir: str, threshold: float = 0.4) -> DataFra
     a = emb.alias("a")
     b = emb.alias("b")
     pair = a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-    cos = F.round(
-        _dot(F.col("a.e"), F.col("b.e"))
-        / (F.sqrt(_dot(F.col("a.e"), F.col("a.e")))
-           * F.sqrt(_dot(F.col("b.e"), F.col("b.e")))),
-        5,
-    )
     return (
         pair.select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            cos.alias("cos_sim"),
+            _pair_cos(F.col("a.e"), F.col("b.e")).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -413,8 +415,9 @@ def lsh_near_dup_pairs(
 ) -> DataFrame:
     """Embedding near-duplicate pairs, the SCALE path: banded sign-LSH
     candidate generation (default 4 bands x 4 planes over a 16-bit
-    signature — candidates share any band's key, the minhash-banding
-    trick applied to hyperplane bits) followed by exact cosine
+    signature — candidates share any band's key: ``band_rows`` +
+    ``band_pairs``, the banded join of the MinHash and SimHash paths,
+    over hyperplane bits) followed by exact cosine
     verification on the candidate pairs only — the same
     candidate->verify recipe as ``lsh_verified_near_dups`` on text.
     ``cosine_near_dup_pairs`` is this query's exact-all-pairs ground
@@ -441,33 +444,11 @@ def lsh_near_dup_pairs(
     sig = emb.select(
         "vec_id", _bucket_expr(F.col("embedding"), planes).alias("bits")
     )
-    bands_df = sig.select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.substring(
-                        "bits", 1 + b * band_bits, band_bits
-                    ).alias("key"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("vec_id", "bk.band", "bk.key")
-    a, b = bands_df.alias("a"), bands_df.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b")
-        )
-        .distinct()
-    )
+    bands_df = band_rows(sig, "vec_id", [
+        F.substring("bits", 1 + b * band_bits, band_bits)
+        for b in range(bands)
+    ])
+    cand = band_pairs(bands_df, bands_df, "vec_id", ("vec_a", "vec_b"))
     ea = emb.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").cast("array<double>").alias("ea"),
@@ -477,14 +458,9 @@ def lsh_near_dup_pairs(
         F.col("embedding").cast("array<double>").alias("eb"),
     )
     j = cand.join(ea, "vec_a").join(eb, "vec_b")
-    cos = F.round(
-        _dot(F.col("ea"), F.col("eb"))
-        / (F.sqrt(_dot(F.col("ea"), F.col("ea")))
-           * F.sqrt(_dot(F.col("eb"), F.col("eb")))),
-        5,
-    )
     return (
-        j.select("vec_a", "vec_b", cos.alias("cos_sim"))
+        j.select("vec_a", "vec_b",
+                 _pair_cos(F.col("ea"), F.col("eb")).alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
     )
 
@@ -816,16 +792,10 @@ def semdedup(spark, sf_dir: str, eps: float = SEMDEDUP_EPS) -> DataFrame:
         )
     )
     a, b = emb.alias("a"), emb.alias("b")
-    pair_cos = F.round(
-        _dot(F.col("a.e"), F.col("b.e"))
-        / (F.sqrt(_dot(F.col("a.e"), F.col("a.e")))
-           * F.sqrt(_dot(F.col("b.e"), F.col("b.e")))),
-        5,
-    )
     dropped = (
         a.join(b, (F.col("a.cell") == F.col("b.cell"))
                & (F.col("a.rnk") < F.col("b.rnk")))
-        .filter(pair_cos >= F.lit(float(eps)))
+        .filter(_pair_cos(F.col("a.e"), F.col("b.e")) >= F.lit(float(eps)))
         .select(F.col("b.vec_id").alias("vec_id"))
         .distinct()
     )

@@ -1337,6 +1337,11 @@ def parse_media_meta(payload: bytes) -> dict:
                        height=m["mp4_h"], parse_ok=m["mp4_ok"])
     except (struct.error, IndexError):
         pass
+    # the int columns of media_metadata hold [0, 2^31); a header's uint32
+    # claim beyond that is a parse failure, not a failed task
+    for k in ("width", "height", "sample_rate"):
+        if out[k] is not None and not 0 <= out[k] < 1 << 31:
+            out.update({k: None, "parse_ok": False})
     return out
 
 

@@ -32,16 +32,20 @@ def build_session(
       size-aware salting handles the UDF-stage skew AQE can't see.
     - ``parquet.compression=zstd``: text output compresses ~3-4x, and at
       100 TB the write/read volume matters more than the cpu.
+    - The session fits its host: the driver heap (``-Xmx``) is the
+      smaller of 24 GiB and half the host's physical RAM, and
+      shuffle/spill files go to ``spark-local`` under
+      ``tempfile.gettempdir()`` (disk, not RAM-backed ``/dev/shm``);
+      ``SPARK_LOCAL_DIRS``, when set, takes precedence over that dir.
     """
     import os
+    import tempfile
 
     master = f"local[{cpus}]" if cpus else "local[*]"
     n_shuffle = shuffle_partitions or (cpus * 4 if cpus else 32)
-    # Shuffle/spill dirs on tmpfs when available: in this single-disk
-    # sandbox the lone block device is a shared resource that does NOT
-    # scale with core count, which would understate scaling efficiency —
-    # on a real cluster every executor brings its own shuffle disks.
-    local_dir = "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp/spark-local"
+    ram_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    heap = f"{min(24 << 10, ram_mib // 2)}m"
+    local_dir = os.path.join(tempfile.gettempdir(), "spark-local")
     # Workers fork from cc_extract.pydaemon, so they must import
     # cc_extract before any task: hand them the directory that holds it,
     # which a driver may know only through its own sys.path
@@ -88,7 +92,7 @@ def build_session(
         # parallelism rides the scan in the batch plan, and packed
         # 3 MB fixture files would starve 32 cores
         .config("spark.sql.files.openCostInBytes", "33554432")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         # Python workers fork from cc_extract.pydaemon, pyspark.daemon
         # with zipimport's cache invalidation made lazy.  Each Python

@@ -417,13 +417,16 @@ def shingles_df(df: DataFrame, toks: DataFrame | None = None) -> DataFrame:
     ``toks`` short-circuits tokenization with a pre-computed
     (doc_id, tokens, ...) relation — composed pipelines (the curation
     funnel) tokenize the corpus ONCE and thread it here."""
-    toks = (
-        (with_tokens(df) if toks is None else toks)
-        .select("doc_id", "tokens")
-        .filter(F.size("tokens") >= SHINGLE_N)
-    )
-    return shingle_array_df(toks, SHINGLE_N).select(
+    return shingle_arrays(with_tokens(df) if toks is None else toks).select(
         "doc_id", F.explode("sh").alias("shingle"))
+
+
+def shingle_arrays(toks: DataFrame) -> DataFrame:
+    """(doc_id, tokens, ...) -> (doc_id, sh): the per-doc DISTINCT
+    3-token shingle array of every document with at least 3 tokens
+    (``shingles_df`` before its explode)."""
+    toks = toks.select("doc_id", "tokens").filter(F.size("tokens") >= SHINGLE_N)
+    return shingle_array_df(toks, SHINGLE_N)
 
 
 # ---------------------------------------------------------- minhash + lsh
@@ -464,10 +467,9 @@ def lsh_candidate_pairs(spark, sf_dir: str,
                         toks: DataFrame | None = None,
                         sh: DataFrame | None = None) -> DataFrame:
     """MinHash-LSH near-dup candidates: banding (4 bands x 2 rows) over the
-    signatures; docs sharing any band key become a candidate pair.
-
-    The join is an equi-join on (band_idx, band_key) over constant-size
-    signature rows — at 10^12 docs this shuffles ~50 B/doc, never text.
+    signatures; docs sharing any band key become a candidate pair
+    (``band_rows`` + ``band_pairs``, the join every near-dup operator
+    shares — at 10^12 docs it shuffles ~50 B/doc, never text).
     Signatures are materialized once (localCheckpoint): the self-join's
     broadcast branch would otherwise recompute the shingle->minhash
     pipeline a second time (broadcast exchanges are never reused against
@@ -479,28 +481,96 @@ def lsh_candidate_pairs(spark, sf_dir: str,
     rows)."""
     sig = minhash_signatures(spark, sf_dir, toks=toks,
                              sh=sh).localCheckpoint(eager=False)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat(F.col(f"h{2*b}"), F.col(f"h{2*b+1}")).alias("key"),
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    bands = _minhash_bands(sig)
+    return band_pairs(bands, bands, "doc_id", ("doc_a", "doc_b"))
+
+
+def _minhash_bands(sig: DataFrame) -> DataFrame:
+    """``band_rows`` of a ``minhash_signatures`` relation: band b's key
+    is ``h{2b} || h{2b+1}`` (4 bands x 2 rows)."""
+    return band_rows(sig, "doc_id", [
+        F.concat(F.col(f"h{2*b}"), F.col(f"h{2*b+1}"))
+        for b in range(MINHASH_BANDS)
+    ])
+
+
+def band_rows(sig: DataFrame, id_col: str, keys: list,
+              carry: tuple = ()) -> DataFrame:
+    """The LSH banding explode shared by every near-dup operator
+    (MinHash, SimHash, pHash, audio fingerprint, embedding sign-LSH):
+    one ``(id_col, *carry, band, key)`` row per band per signature row,
+    where band b's key is the Column ``keys[b]`` over ``sig``."""
+    return sig.select(
+        id_col, *carry,
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"), key.alias("key"))
+            for b, key in enumerate(keys)
+        ])).alias("bk"),
+    ).select(id_col, *carry, "bk.band", "bk.key")
+
+
+def band_pairs(a: DataFrame, b: DataFrame, id_col: str,
+               pair_cols: tuple[str, str], carry: tuple = ()) -> DataFrame:
+    """The LSH candidate join shared by every near-dup operator: the
+    distinct ``a.id < b.id`` pairs whose ``band_rows`` share a (band,
+    key), as ``(*pair_cols, *{c}_a, *{c}_b)`` for each carried column
+    ``c``.  Pass one band relation twice for a self-join.
+
+    An equi-join on (band, key) over constant-size signature rows: it
+    shuffles a few bytes per doc, never text, and AQE can plan it as a
+    broadcast when the band rows are few."""
+    a, b = a.alias("a"), b.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias(pair_cols[0]),
+            F.col(f"b.{id_col}").alias(pair_cols[1]),
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry],
+        )
         .distinct()
     )
-    return pairs
+
+
+def jaccard_verify(cand: DataFrame, arrs: DataFrame,
+                   pair_cols: tuple[str, str] = ("doc_a", "doc_b")
+                   ) -> DataFrame:
+    """Exact shingle Jaccard of candidate pairs: ``cand`` holds
+    ``pair_cols`` doc ids, ``arrs`` is ``shingle_arrays``' (doc_id, sh).
+    Returns ``(*pair_cols, jaccard)`` for the pairs sharing at least one
+    shingle, jaccard rounded to 6 dp (callers threshold the rounded
+    value, as the oracles do).
+
+    |A∩B| is ``array_intersect`` over the in-row DISTINCT sets, so only
+    the candidate pairs touch shingles: no shingle explode, no three-way
+    (sa ⨝ cand ⨝ sb on shingle) join (measured ~4 s -> ~1.5 s at sf1.0
+    inside the funnel chain, round 6).  ``inter >= 1`` drops pairs that
+    share no shingle; banded MinHash candidates always share the
+    band-min shingle, so it matters only at threshold 0."""
+    pa, pb = pair_cols
+    inter = F.col("inter")
+    return (
+        cand
+        .join(arrs.select(F.col("doc_id").alias(pa),
+                          F.col("sh").alias("sh_a")), pa)
+        .join(arrs.select(F.col("doc_id").alias(pb),
+                          F.col("sh").alias("sh_b")), pb)
+        .select(
+            pa, pb,
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
+            F.size("sh_a").alias("n_a"),
+            F.size("sh_b").alias("n_b"),
+        )
+        .filter(inter >= 1)
+        .select(pa, pb, F.round(
+            inter / (F.col("n_a") + F.col("n_b") - inter), 6
+        ).alias("jaccard"))
+    )
 
 
 # ------------------------------------------------- distinct (doc, token) tf
@@ -648,12 +718,13 @@ def simhash_near_dups(
     shares at least one intact band.
 
     Scale shape: the band join moves one (band, key, simhash) row per
-    band per doc — constant bytes/doc, same shape as the MinHash LSH
-    join; Hamming verification is a projection on candidates.  The
-    64-bit signature / 4x16-bit bands (round 4) give 65,536 buckets per
-    band, so random collisions stay ~n^2/2^17 instead of the 16-key
-    quadratic blow-up the 16-bit demo hit at sf0.1 (10.9 s -> band
-    buckets hold near-dups, not 1/16th of the corpus)."""
+    band per doc — constant bytes/doc, the ``band_pairs`` join the
+    MinHash LSH shares; Hamming verification is a projection on
+    candidates.  The 64-bit signature / 4x16-bit bands (round 4) give
+    65,536 buckets per band, so random collisions stay ~n^2/2^17
+    instead of the 16-key quadratic blow-up the 16-bit demo hit at
+    sf0.1 (10.9 s -> band buckets hold near-dups, not 1/16th of the
+    corpus)."""
     # materialize the signature relation once: the band self-join's
     # broadcast branch would otherwise recompute the whole
     # tokenize->hash->64-sum pipeline a second time (broadcast exchanges
@@ -675,47 +746,23 @@ def banded_hamming_pairs(sig: DataFrame, id_col: str, hash_col: str,
                          pair_cols: tuple[str, str], n_bands: int,
                          max_hamming: int) -> DataFrame:
     """Banded Hamming near-dup join over an ``(id_col, hash_col)``
-    signature relation of 64-bit hashes — the one physical plan behind
-    SimHash text dedup, image pHash and audio fingerprint dedup: split
-    each hash into ``n_bands`` equal bit-bands, equi-join on (band,
-    band bits), keep ``a < b``, verify ``bit_count(a ^ b) <= max_hamming``
-    on the candidates only.  Returns ``(*pair_cols, hamming)``, unordered.
+    signature relation of 64-bit hashes — the one plan behind SimHash
+    text dedup, image pHash and audio fingerprint dedup: split each hash
+    into ``n_bands`` equal bit-bands (``band_rows``), join the bands
+    carrying the hash (``band_pairs``), verify ``bit_count(a ^ b) <=
+    max_hamming`` on the candidates only.  Returns ``(*pair_cols,
+    hamming)``, unordered.
 
     The band key is ``(hash >> band * width) & (2^width - 1)``, which the
     mask makes sign-safe for any long."""
     bw = 64 // n_bands
-    bands = sig.select(
-        id_col,
-        hash_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(hash_col, b * bw)
-                    .bitwiseAND(F.lit((1 << bw) - 1))
-                    .alias("key"),
-                )
-                for b in range(n_bands)
-            ])
-        ).alias("bk"),
-    ).select(id_col, hash_col, "bk.band", "bk.key")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias(pair_cols[0]),
-            F.col(f"b.{id_col}").alias(pair_cols[1]),
-            F.col(f"a.{hash_col}").alias("ha"),
-            F.col(f"b.{hash_col}").alias("hb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    bands = band_rows(sig, id_col, [
+        F.shiftright(hash_col, b * bw).bitwiseAND(F.lit((1 << bw) - 1))
+        for b in range(n_bands)
+    ], carry=(hash_col,))
+    cand = band_pairs(bands, bands, id_col, pair_cols, carry=(hash_col,))
+    hamming = F.bit_count(
+        F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b")))
     return (
         cand.filter(hamming <= max_hamming)
         .select(*pair_cols, hamming.cast("int").alias("hamming"))
@@ -1208,62 +1255,27 @@ def lsh_verified_near_dups(spark, sf_dir: str, threshold: float = 0.5,
     candidate relation is actually small (the common case), and falls
     back to a shuffled hash join keyed on doc_a — which partitions the
     verify work instead of replicating it — when it isn't."""
-    # Round 6 verify shape: keep the per-doc DISTINCT shingle sets as
-    # in-row ARRAYS and compute |A∩B| with array_intersect on the
-    # candidate pairs only, instead of exploding the shingle relation
-    # twice and running the (sa.doc=a)⨝cand⨝(sb.doc=b AND shingle=
-    # shingle) three-way join + groupBy (measured ~4 s -> ~1.5 s at
-    # sf1.0 inside the funnel chain).  Counts are over the identical
-    # distinct sets, so inter / n_a / n_b — and therefore jaccard — are
-    # unchanged.  The explicit inter >= 1 filter reproduces the old
-    # inner-join semantics exactly (banded candidates always share the
-    # band-min shingle, so it never drops a real row; it guards the
-    # threshold-0.0 sweep).  AQE decides the join build side exactly as
-    # before — the candidate relation can be O(docs) on a dup-heavy
-    # corpus, so no unconditional broadcast hint.
-    #
     # The shingle ARRAYS are built ONCE and localCheckpointed: both the
     # candidate generation (minhash over their explode, threaded via the
-    # ``sh`` parameter) and the exact verify read the same materialized
-    # relation — previously the tokenize+shingle subtree ran twice, once
-    # under the signature build and once under the verify join (measured
-    # 2.46 -> 2.06 s at the 10x bed, identical rows).  At production
-    # scale the arrays are the stored shingle index next to the stored
-    # signature index.
-    base = (
-        (with_tokens(load_documents(spark, sf_dir)) if toks is None else toks)
-        .select("doc_id", "tokens")
-        .filter(F.size("tokens") >= SHINGLE_N)
-    )
+    # ``sh`` parameter) and the exact verify (``jaccard_verify``) read
+    # the same materialized relation — previously the tokenize+shingle
+    # subtree ran twice, once under the signature build and once under
+    # the verify join (measured 2.46 -> 2.06 s at the 10x bed, identical
+    # rows).  At production scale the arrays are the stored shingle
+    # index next to the stored signature index.  AQE decides the verify
+    # joins' build side — the candidate relation can be O(docs) on a
+    # dup-heavy corpus, so no unconditional broadcast hint.
     # lazy: the first downstream action (the signature checkpoint /
     # edges materialization) computes and pins the arrays inside its own
     # job instead of running a separate blocking checkpoint job first
-    arrs = shingle_array_df(base, SHINGLE_N).localCheckpoint(eager=False)
+    arrs = shingle_arrays(
+        with_tokens(load_documents(spark, sf_dir)) if toks is None else toks
+    ).localCheckpoint(eager=False)
     cand = lsh_candidate_pairs(
         spark, sf_dir, toks=toks,
         sh=arrs.select("doc_id", F.explode("sh").alias("shingle")),
     )
-    j = (
-        cand
-        .join(arrs.select(F.col("doc_id").alias("doc_a"),
-                          F.col("sh").alias("sh_a")), "doc_a")
-        .join(arrs.select(F.col("doc_id").alias("doc_b"),
-                          F.col("sh").alias("sh_b")), "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
-            F.size("sh_a").alias("n_a"),
-            F.size("sh_b").alias("n_b"),
-        )
-        .filter(F.col("inter") >= 1)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6),
-        )
-    )
-    return j.select("doc_a", "doc_b", "jaccard").filter(
-        F.col("jaccard") >= threshold
-    )
+    return jaccard_verify(cand, arrs).filter(F.col("jaccard") >= threshold)
 
 
 SWEEP_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
@@ -1335,60 +1347,18 @@ def incremental_dedup(spark, sf_dir: str, threshold: float = 0.5,
         < F.lit(corpus_hex)
     )
     sig = minhash_signatures(spark, sf_dir).localCheckpoint()  # stored index
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat(F.col(f"h{2*b}"), F.col(f"h{2*b+1}")).alias("key"),
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key", is_corpus.alias("is_corpus"))
-    cand = (
-        bands.filter(~F.col("is_corpus")).alias("n")
-        .join(
-            bands.filter(F.col("is_corpus")).alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.key") == F.col("c.key")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_new"),
-            F.col("c.doc_id").alias("doc_old"),
-        )
-        .distinct()
-    )
-    sh = shingles_df(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        sh.alias("sa")
-        .join(cand, F.col("sa.doc_id") == F.col("doc_new"))
-        .join(
-            sh.alias("sb"),
-            (F.col("sb.doc_id") == F.col("doc_old"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_new", "doc_old")
-        .agg(F.count("*").alias("inter"))
-    )
-    j = (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_new")
-                   .withColumnRenamed("n_sh", "n_a"), "doc_new")
-        .join(sizes.withColumnRenamed("doc_id", "doc_old")
-              .withColumnRenamed("n_sh", "n_b"), "doc_old")
-        .withColumn(
-            "jac",
-            F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6),
-        )
-        .filter(F.col("jac") >= threshold)
-    )
+    bands = _minhash_bands(sig)
+    new, old = bands.filter(~is_corpus), bands.filter(is_corpus)
+    # each new/corpus pair has exactly one id order, so the two
+    # oriented band joins split the candidates between them
+    cand = band_pairs(new, old, "doc_id", ("doc_new", "doc_old")).unionByName(
+        band_pairs(old, new, "doc_id", ("doc_old", "doc_new")))
+    j = jaccard_verify(cand, shingle_arrays(with_tokens(docs)),
+                       ("doc_new", "doc_old"))
+    j = j.filter(F.col("jaccard") >= threshold)
     matches = j.groupBy("doc_new").agg(
         F.min("doc_old").alias("dup_of"),
-        F.max("jac").alias("best_jaccard"),
+        F.max("jaccard").alias("best_jaccard"),
     )
     batch = docs.filter(~is_corpus).select("doc_id")
     return (
@@ -2988,30 +2958,6 @@ def minhash_error(spark, sf_dir: str,
     Jaccard runs on candidate pairs (the whole point of LSH), never
     all-pairs."""
     sig = minhash_signatures(spark, sf_dir, toks=toks).localCheckpoint()
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat(F.col(f"h{2*b}"),
-                                 F.col(f"h{2*b+1}")).alias("key"),
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
     sa = sig.select(F.col("doc_id").alias("doc_a"),
                     *[F.col(f"h{i}").alias(f"a{i}")
                       for i in range(MINHASH_K)])
@@ -3022,16 +2968,13 @@ def minhash_error(spark, sf_dir: str,
     for i in range(MINHASH_K):
         t = (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
         m = t if m is None else m + t
-    exact = lsh_verified_near_dups(spark, sf_dir, threshold=0.0, toks=toks)
+    # the threshold-0 verified pairs are exactly the LSH candidates that
+    # share a shingle, the candidates this table calibrates
     per = (
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select("doc_a", "doc_b", m.alias("n_match"))
-        .join(exact, ["doc_a", "doc_b"])
-        .select(
-            "n_match",
-            (F.col("n_match") / F.lit(8.0)).alias("est"),
-            "jaccard",
-        )
+        lsh_verified_near_dups(spark, sf_dir, threshold=0.0, toks=toks)
+        .join(sa, "doc_a").join(sb, "doc_b")
+        .select(m.alias("n_match"), "jaccard")
+        .withColumn("est", F.col("n_match") / F.lit(8.0))
     )
     dec = lambda c: F.round(c, 9).cast("decimal(38,12)")  # noqa: E731
     return (

@@ -3,7 +3,10 @@
 sf0.01, compare row count + column names + order-insensitive values.
 
 Usage:
-    python -m tests.driver_contract_check [--name QUERY] [--sf DIR]
+    python -m tests.driver_contract_check [--name QUERY ...] [--sf DIR]
+
+``--name`` repeats (``--name a --name b``): only those queries run, and
+the ``entry()`` smoke is skipped.
 """
 
 from __future__ import annotations
@@ -61,7 +64,7 @@ def check_one(spark, con, name: str, fn, sql: str | None, sf_dir: str) -> dict:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--name")
+    ap.add_argument("--name", action="append")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
@@ -71,6 +74,10 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from cc_extract.session import build_session
 
+    qs = entry_mod.queries()
+    unknown = sorted(set(args.name or ()) - qs.keys())
+    if unknown:
+        ap.error(f"unknown query names: {unknown}")
     spark = build_session(cpus=4, app_name="contract-check", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
@@ -79,11 +86,10 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
         )
 
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failed = 0
     for name, fn in qs.items():
-        if args.name and name != args.name:
+        if args.name and name not in args.name:
             continue
         try:
             r = check_one(spark, con, name, fn, oracles.get(name), args.sf)

@@ -990,3 +990,21 @@ def test_exif_hostile_bytes_never_raise():
         out = mm.parse_exif(c)
         if out["has_exif"]:
             assert out["exif_ok"] is False, c
+
+
+def test_media_metadata_nulls_header_dims_beyond_int32(spark):
+    """A header whose uint32 width claim does not fit media_metadata's
+    int columns is a parse failure of that row, not a failed task."""
+    import struct
+
+    tiff = (b"II*\x00" + struct.pack("<IH", 8, 2)
+            + struct.pack("<HHII", 256, 4, 1, 3_000_000_000)
+            + struct.pack("<HHII", 257, 4, 1, 5))
+    png = (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
+           + struct.pack(">II", 0xFFFFFFFF, 7) + b"\x08\x00\x00\x00\x00")
+    df = spark.createDataFrame([(0, "image", tiff), (1, "image", png)],
+                               mm.MEDIA_SCHEMA)
+    rows = sorted(mm.media_metadata(df).collect())
+    assert [(r["container"], r["width"], r["height"], r["parse_ok"])
+            for r in rows] == [("tiff", None, 5, False),
+                               ("png", None, 7, False)]
