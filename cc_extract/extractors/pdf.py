@@ -33,6 +33,9 @@ from __future__ import annotations
 import re
 import zlib
 
+from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
+from cryptography.hazmat.primitives.ciphers import Cipher
+
 from .normalize import normalize_text
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
@@ -249,22 +252,17 @@ _PW_PAD = bytes([
 DEFAULT_PASSWORDS = ("crawl-sidecar-2026", "publica")
 
 
-try:  # OpenSSL-backed RC4 (round 6, same policy as aes.py's fast path);
-    # ARC4 only accepts the discrete OpenSSL key widths, so the pure
-    # loop below stays the fallback for odd /Length values.
-    from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4 as _ARC4
-    from cryptography.hazmat.primitives.ciphers import Cipher as _RC4Cipher
-
-    _ARC4_BITS = frozenset({40, 56, 64, 80, 128, 160, 192, 256})
-except ImportError:  # pragma: no cover
-    _ARC4 = None
+# the key widths OpenSSL's ARC4 accepts
+_ARC4_BITS = frozenset({40, 56, 64, 80, 128, 160, 192, 256})
 
 
 def _rc4(key: bytes, data: bytes) -> bytes:
-    """Plain RC4 (KSA + PRGA) — ~30 lines of public algorithm, used only
-    for the PDF standard security handler."""
-    if _ARC4 is not None and len(key) * 8 in _ARC4_BITS:
-        return _RC4Cipher(_ARC4(key), mode=None).encryptor().update(data)
+    """RC4 for the PDF standard security handler: OpenSSL where ARC4
+    accepts the key width, else the plain KSA + PRGA loop — a valid
+    /Length 48-120 file derives object keys of other widths (11 bytes
+    at /Length 48), and this loop is their only route."""
+    if len(key) * 8 in _ARC4_BITS:
+        return Cipher(ARC4(key), mode=None).encryptor().update(data)
     s = list(range(256))
     j = 0
     klen = len(key)

@@ -152,12 +152,13 @@ def pack_scan(df: DataFrame) -> DataFrame:
 def rows_df(df: DataFrame, keys: tuple[str, ...], args: tuple[str, ...],
             row_fn, ddl: str) -> DataFrame:
     """The one Python row pass of the row operators (the seven
-    ``html_*_df``, the multimodal operators, and the contract queries
-    that reduce a column row by row): per input row, ``row_fn(*args)``
-    returns None (no rows), one dict or a list of dicts keyed by the
-    *ddl* columns; every output row carries its input row's *keys*
-    columns (types from ``df``) ahead of them.  Extra dict keys are
-    ignored, so a row function can return its whole normative record.
+    ``html_*_df``, the multimodal operators, the WARC segment reader
+    ``warc.records_df``, and the contract queries that reduce a column
+    row by row): per input row, ``row_fn(*args)`` returns None (no
+    rows), one dict or an iterable of dicts keyed by the *ddl* columns;
+    every output row carries its input row's *keys* columns (types from
+    ``df``) ahead of them.  Extra dict keys are ignored, so a row
+    function can return its whole normative record.
 
     Scale shape: ONE Arrow-batched mapInPandas pass over just the
     *keys* and *args* columns; payloads stay in their scan partitions

@@ -479,10 +479,16 @@ def lsh_candidate_pairs(spark, sf_dir: str,
     self-join's first materialization computes it once inside its own
     job (eager=True paid one extra blocking job per call for the same
     rows)."""
-    sig = minhash_signatures(spark, sf_dir, toks=toks,
-                             sh=sh).localCheckpoint(eager=False)
+    return _lsh_candidates(minhash_signatures(spark, sf_dir, toks=toks,
+                                              sh=sh))[1]
+
+
+def _lsh_candidates(sig: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(sig, cand)``: *sig* lazily checkpointed, and its banded
+    ``(doc_a, doc_b)`` candidate pairs."""
+    sig = sig.localCheckpoint(eager=False)
     bands = _minhash_bands(sig)
-    return band_pairs(bands, bands, "doc_id", ("doc_a", "doc_b"))
+    return sig, band_pairs(bands, bands, "doc_id", ("doc_a", "doc_b"))
 
 
 def _minhash_bands(sig: DataFrame) -> DataFrame:
@@ -1255,27 +1261,28 @@ def lsh_verified_near_dups(spark, sf_dir: str, threshold: float = 0.5,
     candidate relation is actually small (the common case), and falls
     back to a shuffled hash join keyed on doc_a — which partitions the
     verify work instead of replicating it — when it isn't."""
-    # The shingle ARRAYS are built ONCE and localCheckpointed: both the
-    # candidate generation (minhash over their explode, threaded via the
-    # ``sh`` parameter) and the exact verify (``jaccard_verify``) read
-    # the same materialized relation — previously the tokenize+shingle
-    # subtree ran twice, once under the signature build and once under
-    # the verify join (measured 2.46 -> 2.06 s at the 10x bed, identical
-    # rows).  At production scale the arrays are the stored shingle
-    # index next to the stored signature index.  AQE decides the verify
-    # joins' build side — the candidate relation can be O(docs) on a
-    # dup-heavy corpus, so no unconditional broadcast hint.
-    # lazy: the first downstream action (the signature checkpoint /
-    # edges materialization) computes and pins the arrays inside its own
-    # job instead of running a separate blocking checkpoint job first
+    return _lsh_verified(spark, sf_dir, toks)[1].filter(
+        F.col("jaccard") >= threshold)
+
+
+def _lsh_verified(spark, sf_dir: str, toks: DataFrame | None
+                  ) -> tuple[DataFrame, DataFrame]:
+    """The verified-near-dup chain shared by ``lsh_verified_near_dups``
+    and ``minhash_error``: ``(sig, pairs)`` — the checkpointed K=8
+    signatures and every banded candidate pair sharing a shingle, with
+    its exact Jaccard (no threshold)."""
+    # The shingle ARRAYS are built ONCE and lazily checkpointed: the
+    # signatures (over their explode) and the exact verify read the same
+    # relation (was tokenize+shingle twice: 2.46 -> 2.06 s at the 10x
+    # bed, identical rows); the first downstream action pins them.  AQE
+    # picks the verify joins' build side: the candidates can be O(docs).
     arrs = shingle_arrays(
         with_tokens(load_documents(spark, sf_dir)) if toks is None else toks
     ).localCheckpoint(eager=False)
-    cand = lsh_candidate_pairs(
-        spark, sf_dir, toks=toks,
-        sh=arrs.select("doc_id", F.explode("sh").alias("shingle")),
-    )
-    return jaccard_verify(cand, arrs).filter(F.col("jaccard") >= threshold)
+    sig, cand = _lsh_candidates(minhash_signatures(
+        spark, sf_dir,
+        sh=arrs.select("doc_id", F.explode("sh").alias("shingle"))))
+    return sig, jaccard_verify(cand, arrs)
 
 
 SWEEP_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
@@ -2957,7 +2964,8 @@ def minhash_error(spark, sf_dir: str,
     discipline).  Scale shape: signature-sized joins only — the exact
     Jaccard runs on candidate pairs (the whole point of LSH), never
     all-pairs."""
-    sig = minhash_signatures(spark, sf_dir, toks=toks).localCheckpoint()
+    # the verified chain's own signatures: one shingle->minhash build
+    sig, pairs = _lsh_verified(spark, sf_dir, toks)
     sa = sig.select(F.col("doc_id").alias("doc_a"),
                     *[F.col(f"h{i}").alias(f"a{i}")
                       for i in range(MINHASH_K)])
@@ -2968,11 +2976,10 @@ def minhash_error(spark, sf_dir: str,
     for i in range(MINHASH_K):
         t = (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
         m = t if m is None else m + t
-    # the threshold-0 verified pairs are exactly the LSH candidates that
-    # share a shingle, the candidates this table calibrates
+    # the unthresholded verified pairs are exactly the LSH candidates
+    # that share a shingle, the candidates this table calibrates
     per = (
-        lsh_verified_near_dups(spark, sf_dir, threshold=0.0, toks=toks)
-        .join(sa, "doc_a").join(sb, "doc_b")
+        pairs.join(sa, "doc_a").join(sb, "doc_b")
         .select(m.alias("n_match"), "jaccard")
         .withColumn("est", F.col("n_match") / F.lit(8.0))
     )

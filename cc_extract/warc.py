@@ -20,9 +20,10 @@ convention, NOT from any reference code):
   structural and skipped by extraction (but counted).
 
 Scale shape: one WARC segment ≈ 1 GB in a real crawl, so the Spark
-operator maps ONE segment per input row through ``mapInPandas`` —
-per-segment imperative parsing is the honest grain (gzip members are a
-sequential chain within a segment), and parallelism comes from the
+operator maps ONE segment per input row through ``job.rows_df`` (the
+one Python row pass, a single ``mapInPandas``) — per-segment
+imperative parsing is the honest grain (gzip members are a sequential
+chain within a segment), and parallelism comes from the
 number of segments (tens of thousands per crawl), not from splitting a
 member chain.  All outputs are plain columns; nothing leaves the
 executor except the parsed rows.
@@ -48,12 +49,35 @@ def _warc_date(dt: datetime) -> str:
     return dt.strftime(_DATE_FMT)
 
 
+def _record_id(seed: str) -> str:
+    """Deterministic record id (sha1 of *seed*), so corpus generation
+    stays a pure function and cross-references are real."""
+    return "<urn:uuid:" + hashlib.sha1(seed.encode("utf-8")).hexdigest() + ">"
+
+
+def _frame(fields: list[tuple[str, str]], block: bytes) -> bytes:
+    """The one WARC/1.0 record framer (spec §4): version line, the
+    ordered named fields, ``Content-Length``, then CRLF CRLF block
+    CRLF CRLF."""
+    lines = [b"WARC/1.0"]
+    lines += [f"{k}: {v}".encode("utf-8") for k, v in fields]
+    lines.append(b"Content-Length: " + str(len(block)).encode("ascii"))
+    return CRLF.join(lines) + CRLF + CRLF + block + CRLF + CRLF
+
+
+def _segment(segment: str, records) -> bytes:
+    """The one segment writer: the warcinfo record, then the uncompressed
+    *records*, each as its own gzip member (the Common Crawl layout;
+    mtime=0 keeps the bytes deterministic)."""
+    out = [gzip.compress(build_warcinfo_record(segment), mtime=0)]
+    out += [gzip.compress(rec, mtime=0) for rec in records]
+    return b"".join(out)
+
+
 def build_response_record(url: str, dt: datetime, payload: bytes,
                           content_type: str = "application/octet-stream") -> bytes:
     """One uncompressed WARC/1.0 response record (spec §4): the block is
-    a full HTTP/1.1 response message whose body is *payload*.  The
-    record id is deterministic (sha1 of url+date) so corpus generation
-    stays a pure function."""
+    a full HTTP/1.1 response message whose body is *payload*."""
     http = (
         b"HTTP/1.1 200 OK" + CRLF
         + b"Content-Type: " + content_type.encode("ascii") + CRLF
@@ -61,38 +85,27 @@ def build_response_record(url: str, dt: datetime, payload: bytes,
         + CRLF
         + payload
     )
-    rid = hashlib.sha1((url + _warc_date(dt)).encode("utf-8")).hexdigest()
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: response",
-        b"WARC-Record-ID: <urn:uuid:" + rid.encode("ascii") + b">",
-        b"WARC-Date: " + _warc_date(dt).encode("ascii"),
-        b"WARC-Target-URI: " + url.encode("utf-8"),
-        b"Content-Type: application/http; msgtype=response",
-        b"Content-Length: " + str(len(http)).encode("ascii"),
-    ]
-    return CRLF.join(headers) + CRLF + CRLF + http + CRLF + CRLF
+    return _frame([
+        ("WARC-Type", "response"),
+        ("WARC-Record-ID", _record_id(url + _warc_date(dt))),
+        ("WARC-Date", _warc_date(dt)),
+        ("WARC-Target-URI", url),
+        ("Content-Type", "application/http; msgtype=response"),
+    ], http)
 
 
 def build_conversion_record(url: str, dt: datetime, text: str) -> bytes:
     """One uncompressed WARC/1.0 *conversion* record — the record type
     WET files carry (spec §6.8: content converted from another record,
     here extracted plain text).  Block is the utf-8 text, Content-Type
-    text/plain; record id deterministic like the response writer."""
-    body = text.encode("utf-8")
-    rid = hashlib.sha1(
-        ("conversion:" + url + _warc_date(dt)).encode("utf-8")
-    ).hexdigest()
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: conversion",
-        b"WARC-Record-ID: <urn:uuid:" + rid.encode("ascii") + b">",
-        b"WARC-Date: " + _warc_date(dt).encode("ascii"),
-        b"WARC-Target-URI: " + url.encode("utf-8"),
-        b"Content-Type: text/plain; charset=utf-8",
-        b"Content-Length: " + str(len(body)).encode("ascii"),
-    ]
-    return CRLF.join(headers) + CRLF + CRLF + body + CRLF + CRLF
+    text/plain."""
+    return _frame([
+        ("WARC-Type", "conversion"),
+        ("WARC-Record-ID", _record_id("conversion:" + url + _warc_date(dt))),
+        ("WARC-Date", _warc_date(dt)),
+        ("WARC-Target-URI", url),
+        ("Content-Type", "text/plain; charset=utf-8"),
+    ], text.encode("utf-8"))
 
 
 def build_wat_json(url: str, dt: datetime, payload: bytes) -> str:
@@ -140,47 +153,16 @@ def build_wat_json(url: str, dt: datetime, payload: bytes) -> str:
 
 def build_metadata_record(url: str, dt: datetime, wat_json: str) -> bytes:
     """One uncompressed WARC/1.0 *metadata* record (spec §6.9) carrying a
-    WAT JSON block.  ``WARC-Refers-To`` is the deterministic id of the
-    response record the metadata describes (same sha1 convention as
-    build_response_record, so the cross-reference is real)."""
-    body = wat_json.encode("utf-8")
-    rid = hashlib.sha1(
-        ("metadata:" + url + _warc_date(dt)).encode("utf-8")
-    ).hexdigest()
-    refers = hashlib.sha1((url + _warc_date(dt)).encode("utf-8")).hexdigest()
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: metadata",
-        b"WARC-Record-ID: <urn:uuid:" + rid.encode("ascii") + b">",
-        b"WARC-Refers-To: <urn:uuid:" + refers.encode("ascii") + b">",
-        b"WARC-Date: " + _warc_date(dt).encode("ascii"),
-        b"WARC-Target-URI: " + url.encode("utf-8"),
-        b"Content-Type: application/json",
-        b"Content-Length: " + str(len(body)).encode("ascii"),
-    ]
-    return CRLF.join(headers) + CRLF + CRLF + body + CRLF + CRLF
-
-
-def write_wat_gz(records, segment: str = "seg0") -> bytes:
-    """Serialize (url, datetime, wat_json) triples as a ``.wat.gz``
-    segment — warcinfo member + one gzip member per metadata record, the
-    layout Common Crawl publishes its metadata sidecar files in."""
-    out = [gzip.compress(build_warcinfo_record(segment), mtime=0)]
-    for url, dt, wat_json in records:
-        out.append(gzip.compress(build_metadata_record(url, dt, wat_json),
-                                 mtime=0))
-    return b"".join(out)
-
-
-def write_wet_gz(records, segment: str = "seg0") -> bytes:
-    """Serialize (url, datetime, text) triples as a ``.wet.gz`` segment —
-    warcinfo member + one gzip member per conversion record, the layout
-    Common Crawl publishes its extracted-text sidecar files in."""
-    out = [gzip.compress(build_warcinfo_record(segment), mtime=0)]
-    for url, dt, text in records:
-        out.append(gzip.compress(build_conversion_record(url, dt, text),
-                                 mtime=0))
-    return b"".join(out)
+    WAT JSON block.  ``WARC-Refers-To`` is the id of the response record
+    the metadata describes."""
+    return _frame([
+        ("WARC-Type", "metadata"),
+        ("WARC-Record-ID", _record_id("metadata:" + url + _warc_date(dt))),
+        ("WARC-Refers-To", _record_id(url + _warc_date(dt))),
+        ("WARC-Date", _warc_date(dt)),
+        ("WARC-Target-URI", url),
+        ("Content-Type", "application/json"),
+    ], wat_json.encode("utf-8"))
 
 
 def build_warcinfo_record(segment: str) -> bytes:
@@ -190,26 +172,12 @@ def build_warcinfo_record(segment: str) -> bytes:
         + b"format: WARC File Format 1.0" + CRLF
         + b"description: deterministic synthetic segment " + segment.encode("ascii") + CRLF
     )
-    rid = hashlib.sha1(("warcinfo:" + segment).encode("ascii")).hexdigest()
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: warcinfo",
-        b"WARC-Record-ID: <urn:uuid:" + rid.encode("ascii") + b">",
-        b"WARC-Date: 2025-01-01T00:00:00Z",
-        b"Content-Type: application/warc-fields",
-        b"Content-Length: " + str(len(body)).encode("ascii"),
-    ]
-    return CRLF.join(headers) + CRLF + CRLF + body + CRLF + CRLF
-
-
-def write_warc_gz(records, segment: str = "seg0") -> bytes:
-    """Serialize (url, datetime, payload) triples as a ``.warc.gz``
-    segment: a warcinfo member followed by one gzip member PER record
-    (the Common Crawl layout; mtime=0 keeps the bytes deterministic)."""
-    out = [gzip.compress(build_warcinfo_record(segment), mtime=0)]
-    for url, dt, payload in records:
-        out.append(gzip.compress(build_response_record(url, dt, payload), mtime=0))
-    return b"".join(out)
+    return _frame([
+        ("WARC-Type", "warcinfo"),
+        ("WARC-Record-ID", _record_id("warcinfo:" + segment)),
+        ("WARC-Date", "2025-01-01T00:00:00Z"),
+        ("Content-Type", "application/warc-fields"),
+    ], body)
 
 
 def build_revisit_record(url: str, dt: datetime, digest_hex: str) -> bytes:
@@ -218,22 +186,40 @@ def build_revisit_record(url: str, dt: datetime, digest_hex: str) -> bytes:
     of re-storing an unchanged page: no payload, just the digest of the
     content it re-observed plus the uri it refers back to.  Block is
     empty; the digest rides ``WARC-Payload-Digest`` (sha256, labeled)."""
-    rid = hashlib.sha1(
-        ("revisit:" + url + _warc_date(dt)).encode("utf-8")
-    ).hexdigest()
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: revisit",
-        b"WARC-Record-ID: <urn:uuid:" + rid.encode("ascii") + b">",
-        b"WARC-Profile: http://netpreserve.org/warc/1.0/revisit/"
-        b"identical-payload-digest",
-        b"WARC-Refers-To-Target-URI: " + url.encode("utf-8"),
-        b"WARC-Payload-Digest: sha256:" + digest_hex.encode("ascii"),
-        b"WARC-Date: " + _warc_date(dt).encode("ascii"),
-        b"WARC-Target-URI: " + url.encode("utf-8"),
-        b"Content-Length: 0",
-    ]
-    return CRLF.join(headers) + CRLF + CRLF + CRLF + CRLF
+    return _frame([
+        ("WARC-Type", "revisit"),
+        ("WARC-Record-ID", _record_id("revisit:" + url + _warc_date(dt))),
+        ("WARC-Profile", "http://netpreserve.org/warc/1.0/revisit/"
+                         "identical-payload-digest"),
+        ("WARC-Refers-To-Target-URI", url),
+        ("WARC-Payload-Digest", "sha256:" + digest_hex),
+        ("WARC-Date", _warc_date(dt)),
+        ("WARC-Target-URI", url),
+    ], b"")
+
+
+def write_warc_gz(records, segment: str = "seg0") -> bytes:
+    """Serialize (url, datetime, payload) triples as a ``.warc.gz``
+    segment: a warcinfo member followed by one gzip member PER response
+    record."""
+    return _segment(segment, (build_response_record(url, dt, payload)
+                              for url, dt, payload in records))
+
+
+def write_wet_gz(records, segment: str = "seg0") -> bytes:
+    """Serialize (url, datetime, text) triples as a ``.wet.gz`` segment —
+    one conversion record per triple, the layout Common Crawl publishes
+    its extracted-text sidecar files in."""
+    return _segment(segment, (build_conversion_record(url, dt, text)
+                              for url, dt, text in records))
+
+
+def write_wat_gz(records, segment: str = "seg0") -> bytes:
+    """Serialize (url, datetime, wat_json) triples as a ``.wat.gz``
+    segment — one metadata record per triple, the layout Common Crawl
+    publishes its metadata sidecar files in."""
+    return _segment(segment, (build_metadata_record(url, dt, wat_json)
+                              for url, dt, wat_json in records))
 
 
 def write_warc_gz_dedup(records, segment: str = "seg0") -> bytes:
@@ -247,17 +233,17 @@ def write_warc_gz_dedup(records, segment: str = "seg0") -> bytes:
     caller's url-hash segmenting puts all crawls of a url in one
     segment.  Caller supplies records in (url, ts) order so "first"
     means earliest crawl."""
-    out = [gzip.compress(build_warcinfo_record(segment), mtime=0)]
-    seen: set[tuple[str, str]] = set()
-    for url, dt, payload in records:
-        digest = hashlib.sha256(payload).hexdigest()
-        if (url, digest) in seen:
-            rec = build_revisit_record(url, dt, digest)
-        else:
-            seen.add((url, digest))
-            rec = build_response_record(url, dt, payload)
-        out.append(gzip.compress(rec, mtime=0))
-    return b"".join(out)
+    def recs():
+        seen: set[tuple[str, str]] = set()
+        for url, dt, payload in records:
+            digest = hashlib.sha256(payload).hexdigest()
+            if (url, digest) in seen:
+                yield build_revisit_record(url, dt, digest)
+            else:
+                seen.add((url, digest))
+                yield build_response_record(url, dt, payload)
+
+    return _segment(segment, recs())
 
 
 # ------------------------------------------------------------------ reader
@@ -440,43 +426,23 @@ def _segment_documents(files):
     )
 
 
-RECORDS_SCHEMA = (
-    "seg_id long, rec_type string, url string, warc_ts timestamp, "
-    "payload binary, http_status int, error string, payload_digest string"
+_RECORD_DDL = (
+    "rec_type string, url string, warc_ts timestamp, payload binary, "
+    "http_status int, error string, payload_digest string"
 )
+RECORDS_SCHEMA = "seg_id long, " + _RECORD_DDL
 
 
 def records_df(seg_df):
     """Explode a DataFrame of ``(seg_id long, warc binary)`` segments into
-    per-record rows via ``mapInPandas`` — one Arrow batch in, the parsed
-    records out.  The per-SEGMENT grain is the scale contract: a real
-    crawl has O(10^4-10^5) segments of ~1 GB, so partition count tracks
-    segment count and no executor ever holds more than a segment."""
-    import pandas as pd
+    per-record rows (RECORDS_SCHEMA): ``iter_warc_gz`` over each segment
+    in ``job.rows_df``, the one Python row pass.  The per-SEGMENT grain
+    is the scale contract: a real crawl has O(10^4-10^5) segments of
+    ~1 GB, so partition count tracks segment count and no executor ever
+    holds more than a segment."""
+    from .job import rows_df
 
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for seg_id, blob in zip(pdf["seg_id"], pdf["warc"]):
-                for r in iter_warc_gz(bytes(blob)):
-                    rows.append({
-                        "seg_id": int(seg_id),
-                        "rec_type": r["rec_type"],
-                        "url": r["url"],
-                        "warc_ts": r["warc_ts"],
-                        "payload": r["payload"],
-                        "http_status": r["http_status"],
-                        "error": r["error"],
-                        "payload_digest": r["payload_digest"],
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=["seg_id", "rec_type", "url", "warc_ts",
-                         "payload", "http_status", "error",
-                         "payload_digest"],
-            )
-
-    return seg_df.mapInPandas(parse, schema=RECORDS_SCHEMA)
+    return rows_df(seg_df, ("seg_id",), ("warc",), iter_warc_gz, _RECORD_DDL)
 
 
 def segment_stats(blob: bytes) -> dict:

@@ -1,12 +1,15 @@
-"""AES primitive pinned to published vectors — FIPS-197 Appendix C block
-vectors and NIST SP 800-38A CBC vectors — so the PDF /AESV2 and /AESV3
-writer/reader pair shares only a provably-correct primitive and cannot
-hide a quirk inside it (the GIF-LZW lesson applied to crypto)."""
+"""AES pinned to published vectors — FIPS-197 Appendix C block vectors
+and NIST SP 800-38A CBC vectors — on both the product mode functions
+(OpenSSL) and the from-scratch reference in tests/aes_reference.py, so
+the PDF /AESV2 and /AESV3 writer/reader pair shares only a
+provably-correct primitive and cannot hide a quirk inside it (the
+GIF-LZW lesson applied to crypto)."""
 import os
 
 import pytest
 
 from cc_extract.extractors import aes
+from tests import aes_reference as ref
 
 
 FIPS_BLOCKS = [
@@ -25,9 +28,10 @@ FIPS_BLOCKS = [
 
 @pytest.mark.parametrize("key,pt,ct", FIPS_BLOCKS)
 def test_fips197_block_vectors(key, pt, ct):
-    a = aes.AES(bytes.fromhex(key))
-    assert a.encrypt_block(bytes.fromhex(pt)).hex() == ct
-    assert a.decrypt_block(bytes.fromhex(ct)).hex() == pt
+    k, p, c = bytes.fromhex(key), bytes.fromhex(pt), bytes.fromhex(ct)
+    rk = ref.expand_key(k)
+    assert ref.encrypt_block(rk, p) == c and ref.decrypt_block(rk, c) == p
+    assert aes.ecb_encrypt(k, p) == c and aes.ecb_decrypt(k, c) == p
 
 
 SP800_38A_PT = (
@@ -48,29 +52,21 @@ SP800_38A_CBC = [
 def test_sp800_38a_cbc_vectors(key, ct):
     k, iv = bytes.fromhex(key), bytes.fromhex(SP800_38A_IV)
     pt = bytes.fromhex(SP800_38A_PT)
-    assert aes.cbc_encrypt(k, iv, pt).hex() == ct
-    assert aes.cbc_decrypt(k, iv, bytes.fromhex(ct)) == pt
+    for impl in (aes, ref):
+        assert impl.cbc_encrypt(k, iv, pt).hex() == ct
+        assert impl.cbc_decrypt(k, iv, bytes.fromhex(ct)) == pt
 
 
-def test_cbc_numpy_path_matches_scalar():
-    """The vectorized all-blocks-at-once decrypt (used for streams >= 4
-    blocks) must agree bit-for-bit with the scalar chain on every size
-    and key width."""
-    rng = __import__("random").Random(9)
-    for klen in (16, 24, 32):
-        for nblk in (1, 2, 3, 4, 5, 17, 64):
-            key = bytes(rng.randrange(256) for _ in range(klen))
-            iv = bytes(rng.randrange(256) for _ in range(16))
-            data = bytes(rng.randrange(256) for _ in range(16 * nblk))
-            ct = aes.cbc_encrypt(key, iv, data)
-            # scalar reference chain, independent of cbc_decrypt's dispatch
-            a = aes.AES(key)
-            out, prev = bytearray(), iv
-            for i in range(0, len(ct), 16):
-                blk = ct[i:i + 16]
-                out += bytes(x ^ y for x, y in zip(a.decrypt_block(blk), prev))
-                prev = blk
-            assert aes.cbc_decrypt(key, iv, ct) == bytes(out) == data
+def test_misaligned_input_raises():
+    key, iv = bytes(16), bytes(16)
+    for n in (1, 15, 17, 33):
+        data = bytes(n)
+        for call in (lambda: aes.cbc_encrypt(key, iv, data),
+                     lambda: aes.cbc_decrypt(key, iv, data),
+                     lambda: aes.ecb_encrypt(key, data),
+                     lambda: aes.ecb_decrypt(key, data)):
+            with pytest.raises(ValueError, match="not block-aligned"):
+                call()
 
 
 def test_pkcs7_roundtrip_and_rejects():

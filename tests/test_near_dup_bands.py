@@ -4,9 +4,12 @@ hand-built relations small enough to enumerate."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from cc_extract import textops
+from tests.plan_check import formatted_plan
 
 # id -> one key per band; 4's band-0 key equals 1-3's band-1 key, which
 # must not match across bands
@@ -70,3 +73,14 @@ def test_jaccard_verify_on_candidates_only(spark):
     # (1, 3) shares nothing; (1, 4) is no candidate
     assert sorted(tuple(r) for r in got.collect()) == [(1, 2, 0.5),
                                                        (2, 4, 0.5)]
+
+
+def test_minhash_error_reads_one_signature_relation(spark):
+    """minhash_error's match counts and its verified pairs come from one
+    MinHash build: every signature-shaped scan in its plan reads the
+    same checkpointed relation."""
+    from __spark_entry__ import SF0001
+
+    plan = formatted_plan(textops.minhash_error(spark, SF0001))
+    rdds = re.findall(r"Arguments: \[doc_id#\d+L, h0#[^\]]*\], (\S+) at ", plan)
+    assert len(rdds) == 4 and len(set(rdds)) == 1

@@ -121,3 +121,27 @@ def test_driver_outside_checkout_runs_python_tasks(tmp_path):
                          timeout=300)
     assert out.returncode == 0, out.stderr[-3000:]
     assert "COUNT 100" in out.stdout, out.stdout[-2000:]
+
+
+def test_checkout_imports_only_itself(spark):
+    """cc_extract and __spark_entry__ import from the checkout that holds
+    this test's tests/ directory, on the driver and in a Python worker:
+    tier-1 run in a second clone tests that clone, not another tree."""
+    import __spark_entry__
+    import cc_extract
+    from cc_extract.job import rows_df
+
+    def where(_):
+        import __spark_entry__
+        import cc_extract
+
+        return {"pkg": cc_extract.__file__, "entry": __spark_entry__.__file__}
+
+    worker = rows_df(spark.range(1), ("id",), ("id",), where,
+                     "pkg string, entry string").first()
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    for pkg, entry in ((cc_extract.__file__, __spark_entry__.__file__),
+                       (worker["pkg"], worker["entry"])):
+        assert os.path.realpath(pkg) == os.path.join(
+            root, "cc_extract", "__init__.py")
+        assert os.path.realpath(entry) == os.path.join(root, "__spark_entry__.py")
