@@ -9,9 +9,10 @@ Shuffle accounting — designed for 100 TB of payload, graded at sf-small
       ├─ payloads <= 1 MiB (~99.8% of rows): extract IN scan partitions — no movement
       └─ giants  >  1 MiB: salted repartition      ← the ONLY payload shuffle
       → Arrow pandas-UDF extraction (payload dies here; text is ~5-10x smaller)
-      → dedup keep-newest per url (window on text rows)   ← text shuffle
-      → repartition(n_buckets, bucket) for file layout    ← text shuffle
-      → dynamic-overwrite write partitioned by bucket
+      → hash by bucket over min(n_buckets, shuffle partitions)  ← the ONLY text shuffle
+      → one stage: keep-newest dedup, a (bucket, url) window, then the
+        dynamic-overwrite write partitioned by bucket (one file per bucket)
+      → one read-back of the new buckets' (bucket, fmt, status) cells
       → per-bucket manifests + metrics
 
 Three deliberate scale decisions, worth stating because they differ from
@@ -66,6 +67,11 @@ OK_STATUSES = ("ok", "ok_ocr")  # ok_ocr = executed OCR-lite route (X14)
 
 METRICS_SCHEMA = (
     "bucket int, fmt string, status string, n long, bytes_in long"
+)
+
+# the extracted-table columns job.run reads back, as pipeline_df writes them
+STATS_SCHEMA = (
+    "bucket int, fmt string, status string, n_bytes_in int, extract_ms double"
 )
 
 
@@ -131,7 +137,9 @@ def pack_scan(df: DataFrame) -> DataFrame:
     healthy lake: target = max(defaultParallelism, total_bytes /
     PACK_SCAN_BYTES) — when files average >= 32 MiB (production layout)
     target >= n_files and the scan is returned untouched; only a
-    fragmented-small-files input coalesces (no shuffle, same rows)."""
+    fragmented-small-files input coalesces (no shuffle, same rows).
+    job.run's stats read-back is one such input: one small file per
+    bucket, 64 one-file splits folded into defaultParallelism tasks."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     try:
@@ -443,6 +451,16 @@ def extract_df(
     )
 
 
+def by_bucket(res: DataFrame, n_buckets: int) -> DataFrame:
+    """The one text shuffle: extracted rows hash-partitioned by bucket
+    over ``min(n_buckets, spark.sql.shuffle.partitions)`` tasks.  Every
+    bucket lands in exactly one task, so a write partitioned by bucket
+    makes one file per bucket.  A task per bucket cost more than it
+    wrote: 64 bucket ids hashed into 64 tasks left 26 of them empty."""
+    n_exec = int(res.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return res.repartition(min(n_buckets, n_exec), "bucket")
+
+
 def pipeline_df(
     docs: DataFrame,
     n_buckets: int = DEFAULT_BUCKETS,
@@ -452,17 +470,24 @@ def pipeline_df(
 ) -> DataFrame:
     """documents -> extracted (url, warc_ts, bucket, n_bytes_in, fmt,
     text_out, text_sha256, status, error, attempt).  Pure transformation —
-    no writes; reused by job, tests, bench and `__spark_entry__`."""
+    no writes; reused by job, tests, bench and `__spark_entry__`.
+
+    With *dedup* the keep-newest window (partitioned by bucket and url;
+    bucket is a function of url, so the groups are the url groups) runs
+    on ``by_bucket``'s exchange, in the same stage as job.run's write,
+    with no exchange of its own.  Without it the rows stay on their
+    extraction partitions."""
     res = extract_df(docs, n_buckets, skip_buckets, pdf_passwords)
     if dedup:
         # R3 keep-newest-crawl per url; deterministic tie-break on the
         # extracted-text hash (§4.3 determinism) — already computed, so no
         # extra pass over payload bytes (xxhash64(html) would re-read 100 TB)
-        w = Window.partitionBy("url").orderBy(
+        w = Window.partitionBy("bucket", "url").orderBy(
             F.desc("warc_ts"), F.desc("text_sha256")
         )
         res = (
-            res.withColumn("_rn", F.row_number().over(w))
+            by_bucket(res, n_buckets)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
@@ -542,22 +567,25 @@ def run(
         docs, n_buckets=n_buckets, dedup=dedup, skip_buckets=skip,
         pdf_passwords=pdf_passwords,
     )
-    # final layout shuffle: cheap text rows, clusters files 1:1 with buckets
-    final = res.repartition(n_buckets, "bucket")
+    # the dedup already hashed the rows by bucket
+    final = res if dedup else by_bucket(res, n_buckets)
     write_partitioned(final, os.path.join(out_dir, "extracted"), "bucket")
 
     # M1/M3: ONE read-back of the table just written, over ONLY the
     # buckets this run wrote — the static ~isin predicate prunes
     # completed bucket= directories at the scan, and the projection
-    # never touches text.  The per-(bucket, fmt, status) cells are
+    # never touches text.  The schema is the one just written, so no
+    # job infers it, and pack_scan folds the one-file-per-bucket splits
+    # into a few tasks.  The per-(bucket, fmt, status) cells are
     # O(buckets x formats) rows; manifests and metrics both derive from
     # them on the driver.
-    out = spark.read.parquet(os.path.join(out_dir, "extracted"))
+    out = spark.read.schema(STATS_SCHEMA).parquet(
+        os.path.join(out_dir, "extracted"))
     fresh = out.filter(~F.col("bucket").isin(skip)) if skip else out
     cells = sorted(
         ((int(r["bucket"]), r["fmt"], r["status"], int(r["n"]),
           int(r["bytes_in"] or 0), float(r["extract_ms"] or 0.0))
-         for r in fresh.groupBy("bucket", "fmt", "status").agg(
+         for r in pack_scan(fresh).groupBy("bucket", "fmt", "status").agg(
              F.count("*").alias("n"),
              F.sum("n_bytes_in").alias("bytes_in"),
              F.sum("extract_ms").alias("extract_ms"),

@@ -54,6 +54,10 @@ def build_session(
     worker_path = extra_conf.get("spark.executorEnv.PYTHONPATH")
     extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         [pkg_parent] + ([worker_path] if worker_path else []))
+    # ... and keep the driver's working directory off the workers'
+    # sys.path: ``python -m cc_extract.pydaemon`` would put it first, so
+    # a cc_extract there would win over the one above (Python >= 3.11)
+    extra_conf["spark.executorEnv.PYTHONSAFEPATH"] = "1"
     builder = SparkSession.builder
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
@@ -92,6 +96,13 @@ def build_session(
         # parallelism rides the scan in the batch plan, and packed
         # 3 MB fixture files would starve 32 cores
         .config("spark.sql.files.openCostInBytes", "33554432")
+        # list partition directories on the driver: the sessions are
+        # always local, so listing tasks run in this same JVM and only
+        # add scheduling — reading back job.run's 64 bucket= dirs ran a
+        # 64-task listing job, 0.97 s of its 1.30 s task time executor
+        # deserialization (default threshold 32 dirs)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "4096")
         .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         # Python workers fork from cc_extract.pydaemon, pyspark.daemon

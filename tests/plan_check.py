@@ -29,3 +29,29 @@ def payload_exchanges(plan: str) -> int:
         "html" in m.group(1) for m in re.finditer(
             r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
     )
+
+
+def exchange_arguments(plan: str) -> dict[int, str]:
+    """The Arguments line of every Exchange, by operator id."""
+    return {int(m.group(1)): m.group(2) for m in re.finditer(
+        r"\((\d+)\) Exchange\nInput \[\d+\]: \[[^\]]*\]\nArguments: ([^\n]*)",
+        plan)}
+
+
+def exchange_below(plan: str, node: str) -> int | None:
+    """Id of the first Exchange under the first *node* operator of the
+    plan tree (the formatted plan's top section), or None."""
+    tree = plan.split("\n\n", 1)[0].splitlines()
+    for i, line in enumerate(tree):
+        m = re.search(rf"\b{node} \(\d+\)$", line)
+        if not m:
+            continue
+        depth = m.start()
+        for below in tree[i + 1:]:
+            e = re.search(r"(\w+) \((\d+)\)$", below)
+            if e.start() <= depth:
+                return None
+            if e.group(1) == "Exchange":
+                return int(e.group(2))
+        return None
+    return None

@@ -16,7 +16,8 @@ from pyspark.sql import functions as F
 from cc_extract import job as J
 from cc_extract import manifest as mf
 from cc_extract.corpusgen import corpus_df
-from tests.plan_check import formatted_plan, payload_exchanges
+from tests.plan_check import (
+    exchange_arguments, exchange_below, formatted_plan, payload_exchanges)
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "golden_20000.csv.gz")
 
@@ -328,6 +329,66 @@ def test_only_one_payload_shuffle(spark, tmp_path):
     plan = formatted_plan(J.pipeline_df(warc_docs, n_buckets=8))
     assert payload_exchanges(plan) == 1, (
         f"expected exactly 1 payload shuffle, plan:\n{plan}")
+
+
+def test_dedup_rides_the_bucket_exchange(spark, tmp_path):
+    """One text shuffle: the keep-newest window sits on the one Exchange
+    that hashes by ``bucket`` (the exchange the partitioned write needs
+    for one file per bucket), and no Exchange hashes on ``url``, for a
+    table input and for a WARC segment input."""
+    from cc_extract import warc as W
+    from cc_extract.corpusgen import gen_corpus
+
+    recs = [(r["url"], r["warc_ts"], r["html"]) for r in gen_corpus(40)]
+    with open(tmp_path / "seg0.warc.gz", "wb") as f:
+        f.write(W.write_warc_gz(recs, segment="seg0"))
+    for docs in (corpus_df(spark, 100, partitions=2),
+                 W.read_warc_dir(spark, str(tmp_path))):
+        plan = formatted_plan(J.pipeline_df(docs, n_buckets=8))
+        args = exchange_arguments(plan)
+        by_bucket = [i for i, a in args.items()
+                     if a.startswith("hashpartitioning(bucket#")]
+        assert len(by_bucket) == 1, plan
+        assert not any(a.startswith("hashpartitioning(url#")
+                       for a in args.values()), plan
+        assert exchange_below(plan, "Window") == by_bucket[0], plan
+
+
+def test_run_is_six_jobs_with_one_file_per_bucket(spark, tmp_path):
+    """job.run over a WARC input is 6 Spark jobs: the giants and UDF map
+    stages, the dedup-and-write stage, the stats read-back's map and
+    result stages, and the metrics write.  No job lists the bucket=
+    directories or infers the written schema, and each bucket= directory
+    holds one file."""
+    from cc_extract import warc as W
+    from cc_extract.corpusgen import gen_corpus
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
+    rows = gen_corpus(200)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for k in range(2):
+        recs = [(r["url"], r["warc_ts"], r["html"]) for r in rows[k::2]]
+        with open(in_dir / f"seg{k}.warc.gz", "wb") as f:
+            f.write(W.write_warc_gz(recs, segment=f"seg{k}"))
+    docs = W.read_warc_dir(spark, str(in_dir))
+    out_dir = str(tmp_path / "out")
+    sc = spark.sparkContext
+    group = f"job-run-{tmp_path.name}"
+    sc.setJobGroup(group, "job.run")
+    try:
+        J.run(spark, docs, out_dir, n_buckets=64, resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker learns of jobs through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 6, sorted(jobs)
+
+    dirs = glob.glob(os.path.join(out_dir, "extracted", "bucket=*"))
+    assert len(dirs) > 32
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
 
 
 def test_pruned_scan_on_parquet_input(spark, tmp_path):

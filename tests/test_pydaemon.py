@@ -123,6 +123,49 @@ def test_driver_outside_checkout_runs_python_tasks(tmp_path):
     assert "COUNT 100" in out.stdout, out.stdout[-2000:]
 
 
+def test_worker_ignores_cc_extract_in_driver_cwd(tmp_path):
+    """A driver whose working directory holds another cc_extract, and
+    which puts the checkout first on its own sys.path, runs the checkout
+    in its Python workers too: the daemon is started with ``python -m``
+    in that directory, which would otherwise import the one there."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    decoy = tmp_path / "cc_extract"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text("")
+    (decoy / "pydaemon.py").write_text(
+        "if __name__ == '__main__':\n"
+        "    from pyspark.daemon import manager\n"
+        "    manager()\n")
+    script = tmp_path / "driver.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "import cc_extract\n"
+        "from cc_extract.session import build_session\n"
+        "spark = build_session(cpus=1)\n"
+        "def where(_):\n"
+        "    import cc_extract\n"
+        "    return cc_extract.__file__\n"
+        "print('DRIVER', cc_extract.__file__)\n"
+        "print('WORKER', spark.sparkContext.parallelize([0], 1)"
+        ".map(where).first())\n"
+        "spark.stop()\n")
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    out = subprocess.run([sys.executable, str(script)], cwd=str(tmp_path),
+                         env=env, capture_output=True, text=True,
+                         timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    where = dict(line.split(" ", 1) for line in out.stdout.splitlines()
+                 if line.startswith(("DRIVER ", "WORKER ")))
+    want = os.path.join(os.path.realpath(repo), "cc_extract", "__init__.py")
+    assert {k: os.path.realpath(v) for k, v in where.items()} == {
+        "DRIVER": want, "WORKER": want}, out.stdout[-2000:]
+
+
 def test_checkout_imports_only_itself(spark):
     """cc_extract and __spark_entry__ import from the checkout that holds
     this test's tests/ directory, on the driver and in a Python worker:
