@@ -604,6 +604,18 @@ def run(
         s["n_fail"] += n if status == "error" else 0
         s["bytes_in"] += bytes_in
         s["extract_ms"] += ms
+
+    # M3 failure metrics: the per-(bucket, fmt, status) counters of the
+    # new buckets; dynamic partition overwrite leaves completed buckets'
+    # metric files byte-untouched.  Sorted cells split into contiguous
+    # bucket ranges, one per local scan task.  Written BEFORE the
+    # manifests, so a bucket's manifest stays the last word on it: a kill
+    # before or during this write leaves no manifest, and the resume
+    # redoes the bucket and its metrics.
+    metrics = spark.createDataFrame(
+        [c[:5] for c in cells], METRICS_SCHEMA)
+    write_partitioned(metrics, os.path.join(out_dir, "metrics"), "bucket")
+
     wall_ms = int((time.time() - t0) * 1000)
     for b, s in stats.items():
         mf.write_bucket_manifest(out_dir, {
@@ -614,14 +626,6 @@ def run(
             "wall_ms": wall_ms, "job_id": jid, "snapshot_id": snap,
         })
     new_buckets = n_buckets - len(skip)
-
-    # M3 failure metrics: the per-(bucket, fmt, status) counters of the
-    # new buckets; dynamic partition overwrite leaves completed buckets'
-    # metric files byte-untouched.  Sorted cells split into contiguous
-    # bucket ranges, one per local scan task.
-    metrics = spark.createDataFrame(
-        [c[:5] for c in cells], METRICS_SCHEMA)
-    write_partitioned(metrics, os.path.join(out_dir, "metrics"), "bucket")
 
     total = sum(s["n_docs"] for s in stats.values())
     return {

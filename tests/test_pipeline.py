@@ -107,6 +107,35 @@ def test_resume_is_idempotent_and_minimal(spark, tmp_path):
     assert stats["skipped"] is True
 
 
+def test_resume_repairs_a_kill_before_the_metrics(spark, tmp_path, monkeypatch):
+    """A run killed at its metrics write has written no manifest, so a
+    resume redoes every bucket and writes their metrics: the manifest is
+    the last word on a bucket."""
+    docs = corpus_df(spark, 200, partitions=2)
+    out_dir = str(tmp_path / "run")
+    write = J.write_partitioned
+
+    def killed_at_metrics(df, path, partition_col="bucket"):
+        if os.path.basename(path) == "metrics":
+            raise RuntimeError("killed at the metrics write")
+        write(df, path, partition_col)
+
+    with monkeypatch.context() as m:
+        m.setattr(J, "write_partitioned", killed_at_metrics)
+        with pytest.raises(RuntimeError, match="killed at the metrics"):
+            J.run(spark, docs, out_dir, n_buckets=8, resume=False)
+    stats = J.run(spark, docs, out_dir, n_buckets=8, resume=True)
+    assert stats["skipped"] is False and stats["buckets_new"] == 8
+
+    ext = spark.read.parquet(os.path.join(out_dir, "extracted"))
+    want = ext.groupBy("bucket", "fmt", "status").agg(
+        F.count("*").alias("n"), F.sum("n_bytes_in").alias("bytes_in"))
+    got = spark.read.parquet(os.path.join(out_dir, "metrics")).select(
+        *want.columns)
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert sorted(mf.completed_buckets(out_dir)) == list(range(8))
+
+
 def test_resume_refuses_mismatched_config(spark, tmp_path):
     """A rerun into the same out_dir with a different n_buckets would skip
     bucket ids computed under a different modulus — the job must refuse,
